@@ -1324,6 +1324,13 @@ WITH {_reflow_cte('documents')},
 """
 
 
+def _jvm_mod(a: int, m: int) -> int:
+    """The JVM's (and DuckDB's) integer ``%``: the remainder takes the
+    dividend's sign, where Python's takes the divisor's."""
+    r = abs(a) % m
+    return -r if a < 0 else r
+
+
 def _c4_fused_kernel_udf(words_per_line: int):
     """Arrow kernel for the fused reflow -> seed_c4 -> c4_filters gate
     chain. The three stages are replicated at their STRING boundaries
@@ -1331,12 +1338,13 @@ def _c4_fused_kernel_udf(words_per_line: int):
     embedded newlines cannot diverge), and every rule uses the JVM
     expression's exact semantics: ``trim`` strips spaces only
     (str.strip(' ')), ``split`` keeps trailing empties (Python's
-    str.split does), ``right(t, 1)`` of '' is '' (t[-1:]), ``%`` on the
-    non-negative doc_id matches Python's. The chain is otherwise five
-    interpreted higher-order-function passes over the line array per
-    document (transform + filter x4 — Spark does not codegen HOFs, the
-    measured pq/label_noise defect class); the whole corpus fits one
-    53 ms numpy-free pass at sf0.1."""
+    str.split does), ``right(t, 1)`` of '' is '' (t[-1:]), ``%`` takes
+    the dividend's sign (_jvm_mod), and a NULL doc_id makes every seed
+    CASE fall through (lines unseeded, no poison line). The chain is
+    otherwise five interpreted higher-order-function passes over the
+    line array per document (transform + filter x4 — Spark does not
+    codegen HOFs, the measured pq/label_noise defect class); the whole
+    corpus fits one 53 ms numpy-free pass at sf0.1."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -1353,7 +1361,9 @@ def _c4_fused_kernel_udf(words_per_line: int):
         out_cleaned, out_nl, out_nk = [], [], []
         out_np, out_ns, out_nj, out_keep = [], [], [], []
         for doc_id, text in zip(doc_ids, texts):
-            doc_id = int(doc_id)
+            # ids arrive as strings: exact for every long, None for NULL
+            # (a bigint Series holding a NULL would arrive as float64)
+            doc_id = None if doc_id is None else int(doc_id)
             # reflow_lines(w): wrap space-separated words into w-word
             # lines (split('') is [''] -> one empty line, as in the JVM)
             ws = text.split(" ")
@@ -1362,21 +1372,25 @@ def _c4_fused_kernel_udf(words_per_line: int):
                 " ".join(ws[i * w : i * w + w]) for i in range(n_wrapped)
             )
             # seed_c4: per-line CASE on h = (doc_id*31 + i*7) % 10
-            # (0-based transform index), then the doc-level poison line
-            seeded = []
-            for i, l in enumerate(rtext.split("\n")):
-                h = (doc_id * 31 + i * 7) % 10
-                if h < 6:
-                    seeded.append(l + ".")
-                elif h == 6:
-                    seeded.append(l + " requires javascript.")
-                else:
-                    seeded.append(l)
-            stext = "\n".join(seeded)
-            if doc_id % 37 == 0:
-                stext += "\nlorem ipsum dolor sit amet."
-            elif doc_id % 41 == 3:
-                stext += "\nvar f = function() { return 0; }"
+            # (0-based transform index), then the doc-level poison line;
+            # on a NULL id every CASE branch is NULL and falls through
+            if doc_id is None:
+                stext = rtext
+            else:
+                seeded = []
+                for i, l in enumerate(rtext.split("\n")):
+                    h = _jvm_mod(doc_id * 31 + i * 7, 10)
+                    if h < 6:
+                        seeded.append(l + ".")
+                    elif h == 6:
+                        seeded.append(l + " requires javascript.")
+                    else:
+                        seeded.append(l)
+                stext = "\n".join(seeded)
+                if _jvm_mod(doc_id, 37) == 0:
+                    stext += "\nlorem ipsum dolor sit amet."
+                elif _jvm_mod(doc_id, 41) == 3:
+                    stext += "\nvar f = function() { return 0; }"
             # c4_filters: line rules + document rules + counters
             ls = stext.split("\n")
             kept = []
@@ -1450,7 +1464,7 @@ def c4_filters_fused(
         .filter(F.col("text").isNotNull())
     )
     o = _c4_fused_kernel_udf(words_per_line)(
-        F.col("doc_id"), F.col("text")
+        F.col("doc_id").cast("string"), F.col("text")
     ).alias("o")
     return base.select("doc_id", o).select(
         "doc_id",

@@ -10,8 +10,12 @@ Why mapInArrow and not mapInPandas: the input column is
 ``array<struct<...>>``. Arrow can flatten a ListArray to its value
 StructArray (and rebuild it) in C without materializing Python objects;
 pandas would hand us a Series of list-of-dict. The kernel itself
-(operators/extract_kernel.py) is vectorized pandas/numpy over the flattened
-representation — the Arrow wrapper is pure plumbing.
+(operators/extract_arrow.py) is vectorized pyarrow/numpy over the flattened
+representation — the Arrow wrapper is pure plumbing. This module imports
+no pandas; only the test-only twin over the pandas reference kernel
+(operators/extract_kernel.py) does, inside its function. (pyarrow itself
+still imports pandas lazily in the worker, on the first ``to_numpy`` or
+``pa.array`` call of a batch.)
 
 Plan shape (verified in tests/test_plans.py): parquet scan with ReadSchema
 pruned to (doc_id, spans) -> ArrowEvalPython/MapInArrow -> sink. No
@@ -25,13 +29,11 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 
 from ..schema import DOCUMENTS_DDL
-from .extract_kernel import extract_exploded
-
-import pandas as pd
 
 _OUT_SPAN_TYPE = pa.struct(
     [
@@ -55,7 +57,7 @@ def _flatten(batch: pa.RecordBatch):
     if isinstance(spans, pa.ChunkedArray):  # pragma: no cover - defensive
         spans = spans.combine_chunks()
     n_docs = len(batch)
-    counts = pa.compute.list_value_length(spans).to_numpy(zero_copy_only=False)
+    counts = pc.list_value_length(spans).to_numpy(zero_copy_only=False)
     counts = np.nan_to_num(counts, nan=0).astype(np.int64)
     doc_idx = np.repeat(np.arange(n_docs, dtype=np.int64), counts)
     values = spans.flatten()  # StructArray, slice-aware
@@ -107,6 +109,10 @@ def _extract_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
 def _extract_batch_pandas(batch: pa.RecordBatch) -> pa.RecordBatch:
     """Reference path through the pandas kernel (kept for equivalence
     tests; semantics-defining implementation)."""
+    import pandas as pd
+
+    from .extract_kernel import extract_exploded
+
     doc_id, n_docs, doc_idx, kind, text, media, off = _flatten(batch)
     flat = pd.DataFrame(
         {
@@ -142,7 +148,7 @@ def _bounded(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     for batch in batches:
         if not len(batch):
             continue
-        counts = pa.compute.list_value_length(
+        counts = pc.list_value_length(
             batch.column("spans")
         ).to_numpy(zero_copy_only=False)
         counts = np.nan_to_num(counts, nan=0).astype(np.int64)

@@ -16,11 +16,16 @@ assembly (a minority of spans):
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from .extract_kernel import LINK_DENSITY_MAX, LINK_RE
+# link-density rule (spec step 4b): a text span whose markdown-link
+# characters exceed this share of its length is boilerplate
+LINK_RE = re.compile(r"\[[^\]]*\]\([^)]*\)")
+LINK_DENSITY_MAX = 0.5
 
 # canonical input-kind ids
 _IN_KINDS = (

@@ -3,12 +3,14 @@
 The composable operator (operators/extract.py) flows data through the
 JVM: scan -> Arrow -> kernel -> Arrow -> sink. For a pure extraction pass
 over an immutable table that double conversion is avoidable: this operator
-distributes FILE PATHS, and each task reads its parquet file with pyarrow,
-runs the same `_extract_batch` kernel, and writes the output file directly
-— Spark provides scheduling, retries and locality; bytes never cross the
-JVM boundary (only paths and per-file metrics do). This is the pattern
-native-engine vendors use to push whole stages out of the JVM, expressed
-with plain mapInArrow over a paths DataFrame.
+runs one task per input file, driven by ``spark.range(n_files)`` — each
+task maps its id to the file name (the sorted name list travels in the
+pickled closure), reads the file with pyarrow, runs the same
+`_extract_batch` kernel, and writes the output file directly. Spark
+provides scheduling and retries; bytes never cross the JVM boundary (only
+file ids and per-file metrics do), and the plan is Range -> MapInArrow
+with no Exchange. This is the pattern native-engine vendors use to push
+whole stages out of the JVM, expressed with plain mapInArrow.
 
 The composable counterpart is ``sources/pyscan.py``: a Spark 4 Python
 Data Source whose fused scan+extract output feeds downstream DataFrame
@@ -57,9 +59,7 @@ def extract_parquet_files(
         f for f in os.listdir(input_dir) if f.endswith(".parquet")
     )
     os.makedirs(output_dir, exist_ok=True)
-    paths = spark.createDataFrame(
-        [(f,) for f in files], "name string"
-    ).repartition(max(len(files), 1))
+    ids = spark.range(len(files), numPartitions=max(len(files), 1))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
@@ -71,7 +71,8 @@ def extract_parquet_files(
         )
 
         for b in batches:
-            for name in b.column("name").to_pylist():
+            for i in b.column("id").to_pylist():
+                name = files[i]
                 src = os.path.join(input_dir, name)
                 dst = os.path.join(output_dir, name)
                 tmp = f"{dst}.inprogress-{uuid.uuid4().hex}"
@@ -83,39 +84,24 @@ def extract_parquet_files(
                 out = pa.Table.from_batches(out_batches, schema=_OUT_SCHEMA)
                 pq.write_table(out, tmp)
                 os.rename(tmp, dst)  # attempt-race hygiene only (see module doc)
-                kinds = [
-                    x.column("spans").flatten().field("kind")
-                    for x in out_batches
-                ]
-                n_spans = sum(len(k) for k in kinds)
-                n_tables = sum(
-                    pc.sum(pc.equal(k, "table")).as_py() or 0 for k in kinds
+                kind = pc.struct_field(
+                    pc.list_flatten(out.column("spans")), "kind"
                 )
-                n_media = sum(
-                    pc.sum(pc.equal(k, "media")).as_py() or 0 for k in kinds
-                )
-                yield pa.RecordBatch.from_pylist(
-                    [
-                        {
-                            "path": name,
-                            "n_docs": table.num_rows,
-                            "n_spans_out": n_spans,
-                            "n_tables_built": n_tables,
-                            "n_media_emitted": n_media,
-                        }
-                    ],
-                    schema=pa.schema(
-                        [
-                            pa.field("path", pa.string()),
-                            pa.field("n_docs", pa.int64()),
-                            pa.field("n_spans_out", pa.int64()),
-                            pa.field("n_tables_built", pa.int64()),
-                            pa.field("n_media_emitted", pa.int64()),
-                        ]
-                    ),
+                yield pa.RecordBatch.from_pydict(
+                    {
+                        "path": [name],
+                        "n_docs": [table.num_rows],
+                        "n_spans_out": [len(kind)],
+                        "n_tables_built": [
+                            pc.sum(pc.equal(kind, "table")).as_py() or 0
+                        ],
+                        "n_media_emitted": [
+                            pc.sum(pc.equal(kind, "media")).as_py() or 0
+                        ],
+                    }
                 )
 
-    return paths.mapInArrow(run, METRICS_DDL)
+    return ids.mapInArrow(run, METRICS_DDL)
 
 
 def run_file_extraction(
@@ -142,23 +128,14 @@ def run_file_extraction(
     ).collect()
     # per-file lineage in the same shape append() writes, so
     # table.metrics() covers file-granular commits too (the file is this
-    # job's partition)
-    spark.createDataFrame(
+    # job's partition: partition_id is its index in sorted name order,
+    # the order range partitions are collected in)
+    table.write_metrics(
+        commit_id,
         [
-            (
-                run_id,
-                i,
-                m["n_docs"],
-                m["n_spans_out"],
-                m["n_tables_built"],
-                m["n_media_emitted"],
-            )
+            dict(m.asDict(), run_id=run_id, partition_id=i)
             for i, m in enumerate(metrics)
         ],
-        "run_id string, partition_id int, n_docs long, n_spans_out long,"
-        " n_tables_built long, n_media_emitted long",
-    ).write.mode("overwrite").parquet(
-        os.path.join(table.metrics_dir, commit_id)
     )
     n_docs = sum(m["n_docs"] for m in metrics)
     table._publish(

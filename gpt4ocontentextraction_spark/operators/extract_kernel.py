@@ -73,10 +73,10 @@ Deterministic extraction semantics (total order, no ties — SURVEY.md §7
 
 from __future__ import annotations
 
-import re
-
 import numpy as np
 import pandas as pd
+
+from .extract_arrow import LINK_DENSITY_MAX, LINK_RE
 
 BOILERPLATE_KINDS = ("nav", "footer", "ad", "script")
 KNOWN_KINDS = (
@@ -84,8 +84,6 @@ KNOWN_KINDS = (
     "nav", "footer", "ad", "script", "column_left", "column_right",
     "page_break",
 )
-LINK_RE = re.compile(r"\[[^\]]*\]\([^)]*\)")
-LINK_DENSITY_MAX = 0.5
 
 KERNEL_COLUMNS = ["doc_idx", "kind", "text", "media_ref", "offset"]
 

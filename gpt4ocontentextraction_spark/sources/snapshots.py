@@ -12,9 +12,11 @@ implements the same contract on plain parquet:
   ``{root}/_manifest/v{N}.json`` (write-temp + rename) listing all committed
   commit dirs — readers resolve the highest version, so a crashed writer
   leaves no partial state visible (snapshot isolation)
-- each commit also writes per-partition lineage + extraction metrics to
-  ``{root}/_metrics/{commit_id}.parquet`` (north_rule: "per-partition
-  lineage and extraction metrics ... alongside commit snapshots")
+- each commit also writes per-partition lineage + extraction metrics
+  (north_rule: "per-partition lineage and extraction metrics ...
+  alongside commit snapshots") as one parquet file under
+  ``{root}/_metrics/{commit_id}/``; the rows are already on the driver,
+  so pyarrow writes them (write-temp + rename) without a Spark job
 - resume = left-anti join of the input against committed doc_ids
   (broadcast when small), so re-running after an interrupt processes only
   missing documents and never duplicates (M6).
@@ -27,10 +29,25 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# One metric row per committed partition (or per file on the file path).
+METRICS_SCHEMA = pa.schema(
+    [
+        pa.field("run_id", pa.string()),
+        pa.field("partition_id", pa.int32()),
+        pa.field("n_docs", pa.int64()),
+        pa.field("n_spans_out", pa.int64()),
+        pa.field("n_tables_built", pa.int64()),
+        pa.field("n_media_emitted", pa.int64()),
+    ]
+)
 
 
 class SnapshotTable:
@@ -151,8 +168,6 @@ class SnapshotTable:
         """Uncompressed size of the doc_id column across committed files,
         from parquet footer column-chunk stats — the size that actually
         drives the resume anti-join's broadcast side."""
-        import pyarrow.parquet as pq
-
         total = 0
         for d in self.committed_dirs():
             for root, _, fs in os.walk(d):
@@ -181,10 +196,20 @@ class SnapshotTable:
                 raise ValueError(f"{commit_id} is already committed")
             # leftover from a crashed attempt with the same run_id
             # (e.g. a retried streaming epoch): uncommitted, safe to clear
-            import shutil
-
             shutil.rmtree(out)
         return out
+
+    def write_metrics(self, commit_id: str, rows: list[dict]) -> None:
+        """Write the commit's metric rows (already on the driver) as one
+        parquet file in ``_metrics/{commit_id}/``: temp file + rename,
+        after clearing a crashed attempt's leftover dir. Keys outside
+        METRICS_SCHEMA are ignored."""
+        out = os.path.join(self.metrics_dir, commit_id)
+        shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
+        tmp = os.path.join(out, f".inprogress-{uuid.uuid4().hex}")
+        pq.write_table(pa.Table.from_pylist(rows, schema=METRICS_SCHEMA), tmp)
+        os.rename(tmp, os.path.join(out, "part-00000.parquet"))
 
     def append(
         self,
@@ -194,10 +219,11 @@ class SnapshotTable:
     ) -> str:
         """Write df + per-partition metrics, then atomically commit.
 
-        The metrics aggregation shares the scan with the data write via
-        a localCheckpoint-free design: we write data first (uncommitted),
-        then derive metrics FROM THE WRITTEN FILES — so metrics describe
-        exactly what was committed, not what was planned.
+        Data is written first (uncommitted), then the metrics are derived
+        FROM THE WRITTEN FILES — so they describe exactly what was
+        committed, not what was planned. The per-partition rows (bounded
+        by the partition count) come back to the driver in that one read
+        and go to ``write_metrics``; their n_docs sum is the commit's.
         """
         run_id = run_id or uuid.uuid4().hex
         commit_id = f"c-{run_id}"
@@ -226,16 +252,9 @@ class SnapshotTable:
                 F.sum("n_media").alias("n_media_emitted"),
             )
         )
-        # ONE read of the committed files: the per-partition metric rows
-        # (bounded by the partition count) come back to the driver, get
-        # written as the metrics file, and their n_docs sum replaces what
-        # used to be a second full written.count() scan.
-        metric_rows = metrics.collect()
-        spark.createDataFrame(metric_rows, metrics.schema).coalesce(1) \
-            .write.mode("overwrite").parquet(
-                os.path.join(self.metrics_dir, commit_id)
-            )
-        n_docs = sum(r["n_docs"] for r in metric_rows)
+        rows = [r.asDict() for r in metrics.collect()]
+        self.write_metrics(commit_id, rows)
+        n_docs = sum(r["n_docs"] for r in rows)
         self._publish(commit_id, {"run_id": run_id, "n_docs": n_docs})
         return commit_id
 

@@ -118,12 +118,14 @@ def test_fused_kernel_equals_composed(spark):
     """The gate's fused Arrow kernel arm must be row-identical to the
     composed relational chain it replaces — on the seeded sf0.001 gate
     corpus AND on hand frames hitting every rule edge (empty text,
-    embedded newline inside a raw word, poison-doc ids)."""
+    embedded newline inside a raw word, poison-doc ids, NULL and
+    negative ids)."""
     from gpt4ocontentextraction_spark.operators import dedup
 
     def both(docs):
+        # key=repr: a NULL doc_id does not compare with ints
         a = sorted(
-            map(tuple, curation.c4_filters_fused(docs).collect())
+            map(tuple, curation.c4_filters_fused(docs).collect()), key=repr
         )
         b = sorted(
             map(
@@ -131,7 +133,8 @@ def test_fused_kernel_equals_composed(spark):
                 curation.c4_filters_fused(
                     docs, use_kernel=False
                 ).collect(),
-            )
+            ),
+            key=repr,
         )
         return a, b
 
@@ -139,6 +142,7 @@ def test_fused_kernel_equals_composed(spark):
     a, b = both(docs)
     assert a == b and len(a) > 0
 
+    words = " ".join(f"w{i}" for i in range(40))  # four reflowed lines
     hand = spark.createDataFrame(
         [
             (0, ""),  # empty text; also the %37 poison id
@@ -146,11 +150,17 @@ def test_fused_kernel_equals_composed(spark):
             (44, "word with\nnewline inside plus more words here"),
             (85, "x " * 40),  # %41==3 poison id, trailing-space words
             (7, "a"),
+            # NULL and negative ids: the JVM's % takes the dividend's
+            # sign (-38 % 41 is 3 in Python, -38 on the JVM)
+            (None, words),
+            (-1, words),
+            (-4, words),
+            (-38, words),
         ],
         "doc_id long, text string",
     )
     a, b = both(hand)
-    assert a == b and len(a) == 4
+    assert a == b and len(a) == 8
 
 
 def test_fused_plan_zero_exchange(spark):

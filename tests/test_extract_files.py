@@ -4,6 +4,8 @@ metrics must add up, and torn files must never be visible."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 from gpt4ocontentextraction_spark.fixtures import corpus_to_spark, make_corpus
 from gpt4ocontentextraction_spark.operators.extract import extract
@@ -93,3 +95,38 @@ def test_file_job_with_fixture_corpus(spark, tmp_path):
         for _, r in exp.iterrows()
     }
     assert got == want
+
+
+def test_file_job_on_empty_input_commits_zero_docs(spark, tmp_path):
+    """An input dir without parquet files is an empty commit, not an
+    error: zero metric rows, n_docs = 0 in the manifest."""
+    import json
+
+    from gpt4ocontentextraction_spark.operators.extract_files import (
+        run_file_extraction,
+    )
+    from gpt4ocontentextraction_spark.sources.snapshots import SnapshotTable
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    (in_dir / "_SUCCESS").touch()
+    table = SnapshotTable(str(tmp_path / "table"))
+    assert run_file_extraction(spark, str(in_dir), table, run_id="e") == "c-e"
+    with open(os.path.join(table.manifest_dir, "v1.json")) as f:
+        meta = json.load(f)["commit_meta"]
+    assert meta["n_docs"] == 0 and meta["n_files"] == 0
+    assert table.metrics(spark).count() == 0
+
+
+def test_extraction_modules_import_without_pandas():
+    """Extraction workers import these modules, so they import no pandas:
+    only the test-only twin over the pandas reference kernel does, inside
+    its function."""
+    code = (
+        "import sys\n"
+        "import gpt4ocontentextraction_spark.operators.extract\n"
+        "import gpt4ocontentextraction_spark.operators.extract_files\n"
+        "assert 'pandas' not in sys.modules, 'pandas was imported'\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", code], cwd=root, check=True)

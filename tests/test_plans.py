@@ -40,6 +40,24 @@ def test_extract_prunes_and_does_not_shuffle(spark, flat_docs):
     assert_read_schema_only(pipe, {"doc_id", "text"})
 
 
+def test_file_job_plan_has_no_exchange(spark, flat_docs, tmp_path):
+    """The file job's tasks come straight from spark.range: the executed
+    plan is Range -> MapInArrow, with no driver-list scan and no
+    round-robin Exchange."""
+    from gpt4ocontentextraction_spark.operators.extract_files import (
+        extract_parquet_files,
+    )
+    from gpt4ocontentextraction_spark.spanify import spanify
+
+    in_dir = str(tmp_path / "in")
+    spanify(flat_docs).repartition(3).write.parquet(in_dir)
+    df = extract_parquet_files(spark, in_dir, str(tmp_path / "out"))
+    assert len(df.collect()) == 3
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert "Range" in plan and "LocalTableScan" not in plan, plan
+
+
 def test_resume_join_broadcasts(spark, flat_docs):
     done = flat_docs.filter(F.col("doc_id") % 10 < 3).select("doc_id")
     pending = flat_docs.join(F.broadcast(done), "doc_id", "left_anti")

@@ -4,14 +4,25 @@ doc2md_utils.py:212-217; north_rule checkpoint-resumable requirement)."""
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from gpt4ocontentextraction_spark.fixtures import corpus_to_spark, make_corpus
 from gpt4ocontentextraction_spark.operators.extract import extract
+from gpt4ocontentextraction_spark.operators.extract_files import (
+    run_file_extraction,
+)
 from gpt4ocontentextraction_spark.sources.snapshots import (
+    METRICS_SCHEMA,
     SnapshotTable,
     run_resumable_extraction,
 )
+
+# the two commit paths: SnapshotTable.append and run_file_extraction
+COMMIT_PATHS = ("append", "files")
 
 
 def _spans_set(df):
@@ -26,6 +37,35 @@ def _spans_set(df):
 def docs(spark):
     pdf, _ = make_corpus(seed=11, docs_per_class=3, include_giant=False)
     return corpus_to_spark(spark, pdf)
+
+
+@pytest.fixture()
+def docs_dir(docs, tmp_path):
+    """The fixture corpus as parquet files (the file path's input)."""
+    d = str(tmp_path / "docs")
+    docs.repartition(3).write.parquet(d)
+    return d
+
+
+def _commit(spark, table, docs_dir, path, run_id):
+    """Commit every doc under docs_dir through one commit path."""
+    if path == "append":
+        docs = spark.read.parquet(docs_dir)
+        return table.append(extract(docs), spark, run_id=run_id)
+    return run_file_extraction(spark, docs_dir, table, run_id=run_id)
+
+
+def _metric_sums(spark, table):
+    cols = ("n_docs", "n_spans_out", "n_tables_built", "n_media_emitted")
+    rows = table.metrics(spark).collect()
+    return tuple(sum(r[c] for r in rows) for c in cols)
+
+
+def _table_counts(spark, table):
+    """(docs, spans, table spans, media spans) of the committed rows."""
+    rows = table.read(spark).collect()
+    kinds = [s["kind"] for r in rows for s in r["spans"]]
+    return (len(rows), len(kinds), kinds.count("table"), kinds.count("media"))
 
 
 def test_partial_commit_then_resume(spark, docs, tmp_path):
@@ -63,20 +103,69 @@ def test_uncommitted_data_is_invisible(spark, docs, tmp_path):
     assert table.pending(docs, spark).count() == docs.count()
 
 
-def test_metrics_written_per_partition(spark, docs, tmp_path):
+def test_metrics_written_per_partition(spark, docs, docs_dir, tmp_path):
+    """Both commit paths write their metric rows as one parquet file of
+    the shared Arrow schema, and the sums describe what was committed."""
+    for path in COMMIT_PATHS:
+        table = SnapshotTable(str(tmp_path / path))
+        commit = _commit(spark, table, docs_dir, path, "m1")
+        metrics_dir = os.path.join(table.metrics_dir, commit)
+        assert os.listdir(metrics_dir) == ["part-00000.parquet"]
+        schema = pq.read_schema(os.path.join(metrics_dir, "part-00000.parquet"))
+        assert schema == METRICS_SCHEMA, path
+        m = table.metrics(spark)
+        assert set(m.columns) == set(METRICS_SCHEMA.names)
+        assert {r["run_id"] for r in m.collect()} == {"m1"}
+        counts = _table_counts(spark, table)
+        assert counts[0] == docs.count() and min(counts) > 0
+        assert _metric_sums(spark, table) == counts, path
+
+
+def test_metrics_read_through_spark_written_dirs(spark, docs, tmp_path):
+    """A commit made before pyarrow wrote the metrics has a Spark-written
+    ``_metrics`` dir; metrics() reads it together with the new files."""
     table = SnapshotTable(str(tmp_path / "out"))
-    table.append(extract(docs), spark, run_id="m1")
+    half = docs.limit(docs.count() // 2)
+    old = table.append(extract(half), spark, run_id="old")
+    old_dir = os.path.join(table.metrics_dir, old)
+    rows = pq.read_table(old_dir).to_pylist()
+    spark.createDataFrame(
+        [tuple(r.values()) for r in rows],
+        "run_id string not null, partition_id int not null,"
+        " n_docs bigint not null, n_spans_out bigint,"
+        " n_tables_built bigint, n_media_emitted bigint",
+    ).coalesce(1).write.mode("overwrite").parquet(old_dir)
+    assert "part-00000.parquet" not in os.listdir(old_dir)
+
+    assert run_resumable_extraction(spark, docs, table, run_id="new")
     m = table.metrics(spark)
-    assert m is not None
-    rows = m.collect()
-    assert sum(r["n_docs"] for r in rows) == docs.count()
-    cols = set(m.columns)
-    assert {"run_id", "partition_id", "n_docs", "n_spans_out",
-            "n_tables_built", "n_media_emitted"} <= cols
-    # lineage sanity: table/media counts match the actual output
-    out = extract(docs).collect()
-    n_tables = sum(1 for r in out for s in r["spans"] if s["kind"] == "table")
-    assert sum(r["n_tables_built"] for r in rows) == n_tables
+    assert {r["run_id"] for r in m.collect()} == {"old", "new"}
+    assert _metric_sums(spark, table) == _table_counts(spark, table)
+
+
+def test_commit_paths_build_no_driver_list_dataframe(
+    spark, docs_dir, tmp_path, monkeypatch
+):
+    """Neither commit path sends driver-held rows back through
+    spark.createDataFrame (a Spark job per commit for a handful of
+    metric rows or file names)."""
+    from pyspark.sql import SparkSession
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("createDataFrame called on a commit path")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", refuse)
+    n_docs = spark.read.parquet(docs_dir).count()
+    for path in COMMIT_PATHS:
+        table = SnapshotTable(str(tmp_path / path))
+        if path == "append":
+            docs = spark.read.parquet(docs_dir)
+            commit = run_resumable_extraction(spark, docs, table, run_id="g")
+        else:
+            commit = run_file_extraction(spark, docs_dir, table, run_id="g")
+        assert commit == "c-g"
+        assert table.read(spark).count() == n_docs
+        assert _metric_sums(spark, table)[0] == n_docs
 
 
 def test_concurrent_publish_never_loses_commits(tmp_path):
@@ -100,26 +189,38 @@ def test_concurrent_publish_never_loses_commits(tmp_path):
 
 
 def test_retry_after_partial_write_recovers(spark, tmp_path):
-    """A crashed append (data dir exists, manifest unpublished) must be
-    retryable with the same run_id (streaming epoch retry semantics)."""
-    from gpt4ocontentextraction_spark.fixtures import corpus_to_spark, make_corpus
-    from gpt4ocontentextraction_spark.operators.extract import extract
-    from gpt4ocontentextraction_spark.sources.snapshots import SnapshotTable
-
+    """A crashed commit (data dir and a metrics part exist, manifest
+    unpublished) must be retryable with the same run_id (streaming epoch
+    retry semantics) on both commit paths, leaving only the new rows."""
     pdf, _ = make_corpus(seed=4, docs_per_class=1, include_giant=False)
-    docs = corpus_to_spark(spark, pdf)
-    table = SnapshotTable(str(tmp_path / "out"))
-    # crashed first attempt: data written, no manifest
-    extract(docs).write.parquet(f"{table.data_dir}/c-epoch-7")
-    assert table.read(spark) is None
-    commit = table.append(extract(docs), spark, run_id="epoch-7")
-    assert commit == "c-epoch-7"
-    assert table.read(spark).count() == docs.count()
-    # committed run_id cannot be appended again
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        table.append(extract(docs), spark, run_id="epoch-7")
+    docs_dir = str(tmp_path / "docs")
+    corpus_to_spark(spark, pdf).write.parquet(docs_dir)
+    docs = spark.read.parquet(docs_dir)
+    n_docs = docs.count()
+    stale = {c: 999 for c in ("n_docs", "n_spans_out", "n_tables_built",
+                              "n_media_emitted")}
+    for path in COMMIT_PATHS:
+        table = SnapshotTable(str(tmp_path / path))
+        # crashed first attempt: data and a metrics part written, no manifest
+        extract(docs).write.parquet(f"{table.data_dir}/c-epoch-7")
+        metrics_dir = os.path.join(table.metrics_dir, "c-epoch-7")
+        os.makedirs(metrics_dir)
+        pq.write_table(
+            pa.Table.from_pylist(
+                [dict(stale, run_id="epoch-7", partition_id=7)],
+                schema=METRICS_SCHEMA,
+            ),
+            os.path.join(metrics_dir, "part-00007-stale.parquet"),
+        )
+        assert table.read(spark) is None
+        commit = _commit(spark, table, docs_dir, path, "epoch-7")
+        assert commit == "c-epoch-7"
+        assert table.read(spark).count() == n_docs
+        assert os.listdir(metrics_dir) == ["part-00000.parquet"]
+        assert _metric_sums(spark, table) == _table_counts(spark, table)
+        # committed run_id cannot be committed again
+        with pytest.raises(ValueError):
+            _commit(spark, table, docs_dir, path, "epoch-7")
 
 
 def test_pending_broadcast_gated_on_size(spark, docs, tmp_path):
