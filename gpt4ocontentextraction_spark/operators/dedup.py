@@ -27,7 +27,6 @@ Scale posture:
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -1414,9 +1413,7 @@ SELECT doc_id, CAST(64 AS BIGINT) AS bits, simhash64 AS fp FROM fp64
 # lists are far smaller than the corpus (they only contain actual
 # near-duplicates); above the budget the iterative min-label loop below
 # remains the honest distributed shape.
-DEDUP_CC_PAIR_BUDGET = int(
-    os.environ.get("SPARK_GRAFT_CC_PAIR_BUDGET", "5000000")
-)
+DEDUP_CC_PAIR_BUDGET = 5_000_000
 
 
 def _cc_label_map(pairs: list) -> list:

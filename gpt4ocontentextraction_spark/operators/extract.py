@@ -12,10 +12,8 @@ StructArray (and rebuild it) in C without materializing Python objects;
 pandas would hand us a Series of list-of-dict. The kernel itself
 (operators/extract_arrow.py) is vectorized pyarrow/numpy over the flattened
 representation — the Arrow wrapper is pure plumbing. This module imports
-no pandas; only the test-only twin over the pandas reference kernel
-(operators/extract_kernel.py) does, inside its function. (pyarrow itself
-still imports pandas lazily in the worker, on the first ``to_numpy`` or
-``pa.array`` call of a batch.)
+no pandas. (pyarrow itself still imports pandas lazily in the worker, on
+the first ``to_numpy`` or ``pa.array`` call of a batch.)
 
 Plan shape (verified in tests/test_plans.py): parquet scan with ReadSchema
 pruned to (doc_id, spans) -> ArrowEvalPython/MapInArrow -> sink. No
@@ -24,7 +22,6 @@ Exchange.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -98,7 +95,7 @@ def _rebuild(doc_id, n_docs, out_doc, out_kind, out_text, out_media, out_off):
 
 
 def _extract_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
-    """Arrow-native fast path (operators/extract_arrow.py)."""
+    """One batch through the kernel (operators/extract_arrow.py)."""
     from .extract_arrow import extract_values_arrow
 
     doc_id, n_docs, doc_idx, kind, text, media, off = _flatten(batch)
@@ -106,42 +103,11 @@ def _extract_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     return _rebuild(doc_id, n_docs, *out)
 
 
-def _extract_batch_pandas(batch: pa.RecordBatch) -> pa.RecordBatch:
-    """Reference path through the pandas kernel (kept for equivalence
-    tests; semantics-defining implementation)."""
-    import pandas as pd
-
-    from .extract_kernel import extract_exploded
-
-    doc_id, n_docs, doc_idx, kind, text, media, off = _flatten(batch)
-    flat = pd.DataFrame(
-        {
-            "doc_idx": doc_idx,
-            "kind": kind.to_pandas(),
-            "text": text.to_pandas(),
-            "media_ref": media.to_pandas(),
-            "offset": off,
-        }
-    )
-    out = extract_exploded(flat)
-    return _rebuild(
-        doc_id,
-        n_docs,
-        out["doc_idx"].to_numpy(),
-        pa.array(out["kind"], type=pa.string()),
-        pa.array(out["text"], type=pa.string()),
-        pa.array(out["media_ref"], type=pa.string()),
-        out["offset"].to_numpy().astype(np.int32),
-    )
-
-
 # Memory guard: Arrow batch sizing is row-based (maxRecordsPerBatch), but a
 # single oversized document can carry 100k+ spans in ONE row. Rechunk
 # incoming batches so no kernel invocation holds more than this many spans
 # (bounds worker memory instead of relying on spill — SURVEY.md §4).
-MAX_SPANS_PER_KERNEL_BATCH = int(
-    os.environ.get("SPARK_GRAFT_MAX_SPANS_PER_BATCH", "262144")
-)
+MAX_SPANS_PER_KERNEL_BATCH = 262_144
 
 
 def _bounded(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

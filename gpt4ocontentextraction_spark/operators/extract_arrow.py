@@ -1,17 +1,50 @@
-"""Arrow-native extraction kernel — the fast path behind operators/extract.py.
+"""The extraction kernel: deterministic page->markdown span extraction.
 
-Same semantics as operators/extract_kernel.py (the pandas reference
-implementation; see its module docstring for the numbered spec — tests
-assert batch-for-batch equality between the two). The difference is purely
-mechanical: strings never materialize as Python objects except table-run
-assembly (a minority of spans):
+The rebuilt analog of the reference's core operator, GPT-4o vision asked to
+"Extract everything you see in this image to markdown" (docker/main.py:
+566-611, doc2md_utils.py:180-205): everything visible, in reading order,
+tables as Markdown pipes, charts referenced — with no model call and no
+per-row Python. Its executable spec is the DuckDB oracle
+(oracles.extract_sql_over, same numbered steps); tests pin the two equal on
+arbitrary span soup.
 
-- kinds are dictionary-encoded; all kind logic runs on small-int numpy
-- trims, lengths, the link-density regex (RE2), pipe-cell replacement and
-  line framing run as pyarrow.compute kernels (C)
-- the final text column is composed with a pool + take trick: variants
-  (heading-prefixed, table-joined) are appended to a pool array and a
-  single C-side take materializes the output without per-row Python
+Input is one row per span, ``(doc_idx, kind, text, media_ref, offset)``,
+each document's spans contiguous; operators/extract.py flattens the nested
+``array<struct>`` column to it (NULL strings as ``''``, NULL offset as 0)
+and rebuilds it after. Total order, no ties (SURVEY.md §7):
+
+1. **Offset sort** within each document.
+2. **Page segmentation.** A ``page_break`` ends the page before it
+   (the reference's ``||N||`` pages, docker/main.py:428-445).
+3. **Reading order.** Within a page, by ``(rank, offset)`` with rank
+   other=0, column_left=1, column_right=2, page_break=3: full-width
+   content, then the left column, then the right (FIXTURES.md
+   `pdf_two_column`).
+4. **Boilerplate strip.** Kinds nav/footer/ad/script are dropped. Textual
+   spans (text, column_left, column_right and unknown kinds) are dropped
+   when (a) blank after trimming the code points ``str.isspace()``
+   accepts, (b) more than half their characters sit inside markdown links
+   ``[label](url)``, or (c) among the page's textual spans that survived
+   (a)/(b), with ``wc`` = 1 + the number of ``' '``, ``m`` their count and
+   ``W`` their total ``wc``, ``2 * wc * m < W`` — fewer than half the
+   page's mean words per block. (b)+(c) are the Boilerpipe link-density /
+   number-of-words pair (Kohlschütter et al., WSDM'10; PAPERS.md); exact
+   integers, and per PAGE so page-range skew sharding (operators/skew.py)
+   cannot change the result.
+5. **Kind mapping.** heading1/heading2 -> ``heading`` prefixed ``"# "`` /
+   ``"## "``; textual kinds -> ``text``; chart/figure -> ``media`` with
+   ``media_ref`` (caption text kept); page_break -> ``page_break``. A
+   maximal run of ``table_row`` spans (after 1-4) becomes ONE ``table``
+   span: tab-separated cells render as ``| a | b |`` (newlines in a cell
+   become spaces), with a ``| --- | --- |`` separator of the header's
+   column count after the first row. Every other output keeps
+   ``media_ref = ''``.
+6. **Reindex.** Output offsets are 0..n-1 per document.
+
+Strings stay in Arrow except in table-run assembly: kinds are
+dictionary-encoded to small-int numpy; trims, lengths, the link regex
+(RE2) and pipe framing are pyarrow.compute kernels; the output text is one
+C-side take over a pool of variants (heading-prefixed, table-joined).
 """
 
 from __future__ import annotations
@@ -144,8 +177,7 @@ def extract_values_arrow(
             dense = (total - stripped) > LINK_DENSITY_MAX * np.maximum(total, 1)
             drop[np.flatnonzero(cand)[dense]] = True
 
-        # step 4c: per-page text-density strip (short-block chrome),
-        # same integer rule as extract_kernel.py step 4c.
+        # step 4c: per-page text-density strip (short-block chrome)
         alive = is_text & ~drop
         if alive.any():
             gid = np.cumsum(

@@ -9,7 +9,7 @@ span-table input shape leaves implicit: real web-scale corpora arrive as
 HTML strings, not pre-tagged span tables, so the engine needs a parser
 from markup to its canonical ``(kind, text, media_ref, offset)`` block
 representation — after which the existing densitometric kernel
-(operators/extract_kernel.py steps 3-5: link density, per-page
+(operators/extract_arrow.py steps 3-5: link density, per-page
 number-of-words block scoring, boilerplate-kind drop) does the actual
 main-content extraction. Rebuilt Spark-first:
 

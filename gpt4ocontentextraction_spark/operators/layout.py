@@ -4,7 +4,7 @@ The north star names "PDF layout parsing with column detection" as part of
 the extraction pipeline; the reference gets it implicitly from GPT-4o
 vision reading the rendered page (docker/main.py:566-611). The span-table
 input shape reduces the column decision to pre-tagged kinds
-(extract_kernel.py step 3: "x-coordinate column clustering reduced to its
+(extract_arrow.py step 3: "x-coordinate column clustering reduced to its
 decision"); this module implements the decision itself from block bounding
 boxes, Spark-first:
 

@@ -23,9 +23,7 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import DataFrame
 
 # input bytes below which spreading cannot pay for its own exchange
-SPREAD_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES", str(4 << 20))
-)
+SPREAD_MIN_BYTES = 4 << 20
 
 
 def _input_bytes(df: DataFrame) -> int | None:

@@ -15,7 +15,6 @@ is a sequential IEEE-double fold — bit-identical to the DuckDB oracle's
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -507,9 +506,7 @@ def _band_keys_udf(bands: int = EMB_BANDS, band_bits: int = EMB_BAND_BITS):
 # form shipped ~2.3 GB of vector payload through Arrow for 2.3M
 # candidates (guide §8: decide with small rows, move big rows never).
 # Above the budget the join form below remains the path (same rows).
-EMB_VERIFY_MATRIX_BUDGET = int(
-    os.environ.get("SPARK_GRAFT_EMB_MATRIX_BUDGET", str(1 << 16))
-)
+EMB_VERIFY_MATRIX_BUDGET = 1 << 16
 
 
 def _cos_ids_udf(ids, M, ok_row):

@@ -1,6 +1,6 @@
 """Structured table extraction: markdown pipe tables -> typed cell rows.
 
-The kernel reconstructs table grids as Markdown pipes (extract_kernel.py
+The kernel reconstructs table grids as Markdown pipes (extract_arrow.py
 step 5, mirroring the reference's chart/table -> pipe-table conversion at
 docker/main.py:574-576). Training-data pipelines for table understanding
 (table-QA, text-to-SQL corpora) need the INVERSE projection: every

@@ -4,7 +4,7 @@ Each constant here is the RELATIONAL SPEC of an engine operator, written
 for DuckDB over the driver's pre-registered parquet views. The driver runs
 the engine's Spark query and this SQL side-by-side and compares row
 multisets — so these strings are the executable definition of the kernel
-semantics in operators/extract_kernel.py (same numbered steps).
+semantics documented in operators/extract_arrow.py (same numbered steps).
 """
 
 from __future__ import annotations
@@ -41,15 +41,32 @@ RESOLVED_SQL = resolved_sql_over(SPANIFY_SQL)
 
 
 # Step 4: boilerplate strip — tagged kinds, blank text, link density > 0.5,
-# then the per-page text-density rule (step 4c in extract_kernel.py): among
-# a page's surviving textual spans, drop those with token count below half
-# the page mean (2 * wc * m < W, exact integers).
-_KEPT_SUFFIX = """,
+# then the per-page text-density rule (step 4c): among a page's surviving
+# textual spans, drop those with token count below half the page mean
+# (2 * wc * m < W, exact integers).
+#
+# A span is textual unless its kind is one of the known non-textual kinds,
+# so an unknown kind is plain text (step 5 maps it to `text`). Blank means
+# empty after trimming the 29 code points Python's str.isspace() accepts,
+# the set Arrow's utf8_trim_whitespace trims; DuckDB's one-argument trim
+# strips only the Unicode space separators and keeps e.g. tab and newline.
+_TEXTUAL = (
+    "kind NOT IN ('heading1', 'heading2', 'table_row', 'chart', 'figure',"
+    " 'nav', 'footer', 'ad', 'script', 'page_break')"
+)
+_WHITESPACE = (
+    0x09, 0x0A, 0x0B, 0x0C, 0x0D, 0x1C, 0x1D, 0x1E, 0x1F, 0x20, 0x85, 0xA0,
+    0x1680, *range(0x2000, 0x200B), 0x2028, 0x2029, 0x202F, 0x205F, 0x3000,
+)
+_BLANK = "trim(text, {}) = ''".format(
+    " || ".join(f"chr({c})" for c in _WHITESPACE)
+)
+_KEPT_SUFFIX = f""",
 kept0 AS (
   SELECT * FROM resolved
   WHERE kind NOT IN ('nav', 'footer', 'ad', 'script')
-    AND NOT (kind IN ('text', 'column_left', 'column_right') AND (
-      trim(text) = ''
+    AND NOT ({_TEXTUAL} AND (
+      {_BLANK}
       OR (length(text)
           - length(regexp_replace(text, '\\[[^\\]]*\\]\\([^)]*\\)', '', 'g')))
          > 0.5 * greatest(length(text), 1)))
@@ -57,13 +74,13 @@ kept0 AS (
 kept AS (
   SELECT doc_id, kind, text, media_ref, "offset", page, crank, rn FROM (
     SELECT *,
-      CASE WHEN kind IN ('text', 'column_left', 'column_right')
+      CASE WHEN {_TEXTUAL}
            THEN length(text) - length(replace(text, ' ', '')) + 1
       END AS td_wc,
-      SUM(CASE WHEN kind IN ('text', 'column_left', 'column_right')
+      SUM(CASE WHEN {_TEXTUAL}
                THEN length(text) - length(replace(text, ' ', '')) + 1
           END) OVER (PARTITION BY doc_id, page) AS td_w,
-      SUM(CASE WHEN kind IN ('text', 'column_left', 'column_right')
+      SUM(CASE WHEN {_TEXTUAL}
                THEN 1 END) OVER (PARTITION BY doc_id, page) AS td_m
     FROM kept0
   )

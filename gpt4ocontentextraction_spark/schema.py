@@ -34,7 +34,7 @@ INPUT_KINDS = (
 
 # HTML boilerplate kinds that are always stripped (the tagged analog of the
 # reference dropping chrome that GPT-4o would not transcribe; see also the
-# density-based scorer in operators/extract_kernel.py for untagged text).
+# density-based scorer in operators/extract_arrow.py for untagged text).
 BOILERPLATE_KINDS = frozenset({"nav", "footer", "ad", "script"})
 
 # Two-column PDF layout kinds (reading order: left column fully, then right,

@@ -1,64 +1,27 @@
-"""The Arrow-native kernel must be batch-for-batch identical to the pandas
-reference kernel on every fixture class (the pandas kernel defines the
-semantics; the Arrow kernel is the fast path behind extract())."""
+"""The Arrow-native kernel behind extract() must be batch-for-batch
+identical to its DuckDB spec (oracles.extract_sql_over) on every fixture
+class and on edge batches."""
 
 from __future__ import annotations
 
-import pyarrow as pa
 import pytest
 
+from extraction_spec import extract_both
 from gpt4ocontentextraction_spark.fixtures import make_corpus
-from gpt4ocontentextraction_spark.operators.extract import (
-    _extract_batch,
-    _extract_batch_pandas,
-)
-from gpt4ocontentextraction_spark.schema import DOCUMENTS_SCHEMA
-
-
-def _to_batch(pdf) -> pa.RecordBatch:
-    rows = [
-        {
-            "doc_id": r["doc_id"],
-            "spans": [
-                {
-                    "kind": s["kind"],
-                    "text": s["text"],
-                    "media_ref": s["media_ref"],
-                    "offset": s["offset"],
-                }
-                for s in r["spans"]
-            ],
-        }
-        for _, r in pdf.iterrows()
-    ]
-    span_t = pa.struct(
-        [
-            pa.field("kind", pa.string()),
-            pa.field("text", pa.string()),
-            pa.field("media_ref", pa.string()),
-            pa.field("offset", pa.int32()),
-        ]
-    )
-    schema = pa.schema(
-        [pa.field("doc_id", pa.string()), pa.field("spans", pa.list_(span_t))]
-    )
-    return pa.RecordBatch.from_pylist(rows, schema=schema)
 
 
 @pytest.mark.parametrize("seed", [1, 7, 42])
-def test_arrow_equals_pandas_kernel(seed):
+def test_arrow_equals_oracle(seed):
     pdf, _ = make_corpus(seed=seed, docs_per_class=5, include_giant=False)
-    batch = _to_batch(pdf)
-    a = _extract_batch(batch).to_pylist()
-    b = _extract_batch_pandas(batch).to_pylist()
+    a, b = extract_both(pdf.to_dict("records"))
     assert a == b
 
 
 def test_arrow_kernel_edge_batches():
-    # empty batch slice, nulls in media_ref/text, doc with zero spans
+    # doc with zero spans, nulls in media_ref/text
     pdf, _ = make_corpus(seed=9, docs_per_class=2, classes=("empty_and_edge",))
-    batch = _to_batch(pdf)
-    assert _extract_batch(batch).to_pylist() == _extract_batch_pandas(batch).to_pylist()
+    a, b = extract_both(pdf.to_dict("records"))
+    assert a == b
 
     rows = [
         {"doc_id": "nulls", "spans": [
@@ -66,9 +29,8 @@ def test_arrow_kernel_edge_batches():
             {"kind": "chart", "text": "c", "media_ref": None, "offset": 1},
         ]},
     ]
-    b2 = pa.RecordBatch.from_pylist(rows, schema=batch.schema)
-    out = _extract_batch(b2).to_pylist()
-    assert out == _extract_batch_pandas(b2).to_pylist()
+    out, oracle = extract_both(rows)
+    assert out == oracle
     # null text -> '' -> blank-dropped; null media_ref -> ''
     assert out[0]["spans"] == [
         {"kind": "media", "text": "c", "media_ref": "", "offset": 0}
@@ -81,16 +43,7 @@ def test_unknown_kinds_treated_as_text_in_both_kernels():
         {"kind": "mystery", "text": "hello", "media_ref": "", "offset": 1},
         {"kind": "weird", "text": "[x](y)", "media_ref": "", "offset": 2},
     ]}]
-    span_t = pa.struct([
-        pa.field("kind", pa.string()), pa.field("text", pa.string()),
-        pa.field("media_ref", pa.string()), pa.field("offset", pa.int32()),
-    ])
-    schema = pa.schema(
-        [pa.field("doc_id", pa.string()), pa.field("spans", pa.list_(span_t))]
-    )
-    b = pa.RecordBatch.from_pylist(rows, schema=schema)
-    a = _extract_batch(b).to_pylist()
-    p = _extract_batch_pandas(b).to_pylist()
+    a, p = extract_both(rows)
     assert a == p
     # blank + link-dense unknowns dropped like text; content kept as text
     assert a[0]["spans"] == [

@@ -156,11 +156,17 @@ def test_fused_kernel_equals_composed(spark):
             (-1, words),
             (-4, words),
             (-38, words),
+            # non-ASCII: 'İ' lower-cases to two code points; U+00A0 is
+            # neither trimmed nor a word separator (line 0 of id 57 is
+            # left unseeded and ends in '.' + U+00A0)
+            (50, "İ " + words + " JAVASCRİPT LOREM İPSUM"),
+            (57, words.replace("w11", "w11.\xa0").replace("w30 ", "w30\xa0")),
+            (52, words + " JAVASCRIPT"),  # upper case is still javascript
         ],
         "doc_id long, text string",
     )
     a, b = both(hand)
-    assert a == b and len(a) == 8
+    assert a == b and len(a) == 11
 
 
 def test_fused_plan_zero_exchange(spark):

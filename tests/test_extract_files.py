@@ -119,9 +119,8 @@ def test_file_job_on_empty_input_commits_zero_docs(spark, tmp_path):
 
 
 def test_extraction_modules_import_without_pandas():
-    """Extraction workers import these modules, so they import no pandas:
-    only the test-only twin over the pandas reference kernel does, inside
-    its function."""
+    """Extraction workers import these modules, so they import no
+    pandas."""
     code = (
         "import sys\n"
         "import gpt4ocontentextraction_spark.operators.extract\n"

@@ -1,13 +1,9 @@
-"""Unit tests for the pure-pandas extraction kernel (no Spark)."""
+"""Golden tests for the extraction kernel (no Spark): each case runs the
+Arrow kernel and checks the DuckDB oracle emits the same spans."""
 
 from __future__ import annotations
 
-from gpt4ocontentextraction_spark.operators.extract_kernel import (
-    extract_document,
-    link_density,
-)
-
-import pandas as pd
+from extraction_spec import extract_both, extract_document
 
 
 def span(kind, text="", media_ref="", offset=0):
@@ -57,8 +53,6 @@ def test_link_density_drop():
         [span("text", dense, offset=0), span("text", sparse, offset=1)]
     )
     assert got == [out("text", sparse, offset=0)]
-    ld = link_density(pd.Series([dense, sparse, "plain", ""]))
-    assert ld[0] > 0.9 and ld[1] < 0.5 and ld[2] == 0.0 and ld[3] == 0.0
 
 
 def test_blank_text_dropped():
@@ -126,20 +120,17 @@ def test_media_spans():
 
 
 def test_multi_doc_batch_independence():
-    from gpt4ocontentextraction_spark.operators.extract_kernel import (
-        extract_exploded,
-    )
-
-    flat = pd.DataFrame(
+    got, oracle = extract_both(
         [
-            {"doc_idx": 0, "kind": "table_row", "text": "a", "media_ref": "", "offset": 0},
-            {"doc_idx": 1, "kind": "table_row", "text": "b", "media_ref": "", "offset": 0},
+            {"doc_id": "a", "spans": [span("table_row", "a")]},
+            {"doc_id": "b", "spans": [span("table_row", "b")]},
         ]
     )
-    got = extract_exploded(flat)
+    assert got == oracle
     # table runs must NOT merge across documents
-    assert list(got["doc_idx"]) == [0, 1]
-    assert list(got["kind"]) == ["table", "table"]
+    assert [[s["kind"] for s in d["spans"]] for d in got] == [
+        ["table"], ["table"]
+    ]
 
 
 # --- step 4c: per-page text-density strip ----------------------------------
@@ -226,26 +217,15 @@ def test_density_stats_exclude_link_dense_and_blank_blocks():
 
 
 def test_null_text_normalizes_like_arrow_wrapper():
-    """A directly-invoked kernel must treat NaN/None string fields as ""
-    (the contract extract.py::_flatten enforces via fill_null), not crash
-    in the density stats."""
-    import pandas as pd
-
-    from gpt4ocontentextraction_spark.operators.extract_kernel import (
-        extract_exploded,
-    )
-
-    flat = pd.DataFrame(
-        {
-            "doc_idx": [0, 0, 0],
-            "kind": ["text", "text", None],
-            "text": ["real words here now", None, "more words arrive"],
-            "media_ref": [None, "", ""],
-            "offset": [0, 1, 2],
-        }
-    )
-    out = extract_exploded(flat)
-    ref = extract_exploded(flat.fillna(""))
-    pd.testing.assert_frame_equal(
-        out.reset_index(drop=True), ref.reset_index(drop=True)
-    )
+    """NULL kind/text/media_ref read as "" (the contract
+    extract.py::_flatten enforces via fill_null), not a crash in the
+    density stats."""
+    spans = [
+        span("text", "real words here now", None, offset=0),
+        span("text", None, offset=1),
+        span(None, "more words arrive", offset=2),
+    ]
+    blanked = [
+        {k: "" if v is None else v for k, v in s.items()} for s in spans
+    ]
+    assert extract_document(spans) == extract_document(blanked)

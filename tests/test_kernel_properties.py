@@ -1,17 +1,14 @@
 """Property-based kernel invariants (hypothesis): for ANY span soup the
-kernel must emit dense offsets, no boilerplate kinds, well-formed pipe
-tables, reading-order-sorted pages — and the arrow and pandas kernels must
-agree exactly."""
+Arrow kernel must emit dense offsets, no boilerplate kinds, well-formed
+pipe tables, reading-order-sorted pages — and equal the DuckDB oracle
+exactly."""
 
 from __future__ import annotations
 
-import pandas as pd
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from gpt4ocontentextraction_spark.operators.extract_kernel import (
-    extract_document,
-)
+from extraction_spec import extract_both, extract_document
 from gpt4ocontentextraction_spark.schema import INPUT_KINDS, OUTPUT_KINDS
 
 _texts = st.text(
@@ -74,31 +71,21 @@ def test_kernel_invariants(spans):
     assert extract_document(spans) == out
 
 
+def _one(kind, text):
+    return [{"kind": kind, "text": text, "media_ref": "", "offset": 0}]
+
+
 @settings(max_examples=60, deadline=None, derandomize=True)
 @given(documents(), documents())
-def test_arrow_pandas_agree_on_arbitrary_input(a, b):
-    import pyarrow as pa
-
-    from gpt4ocontentextraction_spark.operators.extract import (
-        _extract_batch,
-        _extract_batch_pandas,
+# unknown kinds are text: blank and link-dense ones are dropped
+@example(_one("mystery", "  "), [])
+@example(_one("weird", "[x](http://y)"), [])
+# blank is str.isspace() blank, beyond the Unicode space separators
+@example(_one("text", "\x0b"), [])
+@example(_one("text", "\x85"), [])
+@example(_one("text", "\u2028"), [])
+def test_arrow_oracle_agree_on_arbitrary_input(a, b):
+    arrow, oracle = extract_both(
+        [{"doc_id": "a", "spans": a}, {"doc_id": "b", "spans": b}]
     )
-
-    span_t = pa.struct(
-        [
-            pa.field("kind", pa.string()),
-            pa.field("text", pa.string()),
-            pa.field("media_ref", pa.string()),
-            pa.field("offset", pa.int32()),
-        ]
-    )
-    schema = pa.schema(
-        [pa.field("doc_id", pa.string()), pa.field("spans", pa.list_(span_t))]
-    )
-    batch = pa.RecordBatch.from_pylist(
-        [{"doc_id": "a", "spans": a}, {"doc_id": "b", "spans": b}],
-        schema=schema,
-    )
-    assert _extract_batch(batch).to_pylist() == _extract_batch_pandas(
-        batch
-    ).to_pylist()
+    assert arrow == oracle
