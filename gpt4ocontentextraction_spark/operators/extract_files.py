@@ -22,12 +22,15 @@ rename: callers route visibility through :func:`run_file_extraction`,
 which writes into an uncommitted SnapshotTable commit dir and publishes
 the manifest only after every file reports back, so a crashed or torn run
 is never visible to readers (object-store safe: no rename in the commit
-path). Within the uncommitted dir, each task attempt additionally writes
-to a unique ``.inprogress-*`` temp and renames into place — POSIX-only
-hygiene that stops two racing attempts of the same task from interleaving
-bytes into one file; on object stores (where PUT is already atomic per
-object) the rename degrades to copy+delete but correctness never depended
-on it.
+path). Within the uncommitted dir, each task attempt streams its output
+batches to a unique hidden ``.{name}.inprogress-*`` temp and renames into
+place (``sources.snapshots.write_counted``, the writer
+``SnapshotTable.append``'s tasks use too) — POSIX-only hygiene that stops
+two racing attempts of the same task from interleaving bytes into one
+file. The temp is hidden from Spark's file listing and unlinked when the
+write raises, so a failed attempt never reads as data. On object stores
+(where PUT is already atomic per object) the rename degrades to
+copy+delete but correctness never depended on it.
 """
 
 from __future__ import annotations
@@ -39,6 +42,8 @@ from collections.abc import Iterator
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.snapshots import write_counted
 
 METRICS_DDL = (
     "path string, n_docs long, n_spans_out long,"
@@ -62,44 +67,24 @@ def extract_parquet_files(
     ids = spark.range(len(files), numPartitions=max(len(files), 1))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         from gpt4ocontentextraction_spark.operators.extract import (
-            _OUT_SCHEMA,
             _extract_batch,
         )
 
         for b in batches:
             for i in b.column("id").to_pylist():
                 name = files[i]
-                src = os.path.join(input_dir, name)
-                dst = os.path.join(output_dir, name)
-                tmp = f"{dst}.inprogress-{uuid.uuid4().hex}"
-                table = pq.read_table(src)
-                out_batches = [
-                    _extract_batch(x)
-                    for x in table.to_batches(max_chunksize=batch_rows)
-                ]
-                out = pa.Table.from_batches(out_batches, schema=_OUT_SCHEMA)
-                pq.write_table(out, tmp)
-                os.rename(tmp, dst)  # attempt-race hygiene only (see module doc)
-                kind = pc.struct_field(
-                    pc.list_flatten(out.column("spans")), "kind"
+                table = pq.read_table(os.path.join(input_dir, name))
+                counts = write_counted(
+                    (
+                        _extract_batch(x)
+                        for x in table.to_batches(max_chunksize=batch_rows)
+                    ),
+                    os.path.join(output_dir, name),
                 )
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "path": [name],
-                        "n_docs": [table.num_rows],
-                        "n_spans_out": [len(kind)],
-                        "n_tables_built": [
-                            pc.sum(pc.equal(kind, "table")).as_py() or 0
-                        ],
-                        "n_media_emitted": [
-                            pc.sum(pc.equal(kind, "media")).as_py() or 0
-                        ],
-                    }
-                )
+                yield pa.RecordBatch.from_pylist([{"path": name, **counts}])
 
     return ids.mapInArrow(run, METRICS_DDL)
 

@@ -7,16 +7,19 @@ equivalent is a table format with atomic commit snapshots — Iceberg in
 production. The Iceberg runtime jar is not in this sandbox, so this module
 implements the same contract on plain parquet:
 
-- data files land in ``{root}/data/{commit_id}/`` (invisible until committed)
+- data files land in ``{root}/data/{commit_id}/`` (invisible until
+  committed); each Spark write task writes its own file with pyarrow
+  (:func:`write_counted`: hidden temp + rename) and returns one lineage
+  row counted from the batches it wrote, so no Spark job runs after the
+  write
 - a commit atomically publishes a new manifest version
-  ``{root}/_manifest/v{N}.json`` (write-temp + rename) listing all committed
-  commit dirs — readers resolve the highest version, so a crashed writer
-  leaves no partial state visible (snapshot isolation)
-- each commit also writes per-partition lineage + extraction metrics
-  (north_rule: "per-partition lineage and extraction metrics ...
-  alongside commit snapshots") as one parquet file under
-  ``{root}/_metrics/{commit_id}/``; the rows are already on the driver,
-  so pyarrow writes them (write-temp + rename) without a Spark job
+  ``{root}/_manifest/v{N}.json`` (write-temp + ``os.link``) listing all
+  committed commit dirs — readers resolve the highest version, so a
+  crashed writer leaves no partial state visible (snapshot isolation)
+- the per-partition lineage + extraction metrics (north_rule:
+  "per-partition lineage and extraction metrics ... alongside commit
+  snapshots") land as one parquet file under ``{root}/_metrics/{commit_id}/``,
+  written by the driver with pyarrow from the rows the tasks returned
 - resume = left-anti join of the input against committed doc_ids
   (broadcast when small), so re-running after an interrupt processes only
   missing documents and never duplicates (M6).
@@ -27,12 +30,15 @@ commits partial documents (SURVEY.md §7 hard point 3).
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
 import uuid
+from collections.abc import Iterable
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,6 +54,50 @@ METRICS_SCHEMA = pa.schema(
         pa.field("n_media_emitted", pa.int64()),
     ]
 )
+METRICS_DDL = (
+    "run_id string, partition_id int, n_docs bigint, n_spans_out bigint,"
+    " n_tables_built bigint, n_media_emitted bigint"
+)
+
+
+def write_counted(batches: Iterable[pa.RecordBatch], path: str) -> dict:
+    """Write the (doc_id, spans) batches to one parquet file at ``path``
+    and return the lineage counts of what was written (the four ``n_*``
+    columns of METRICS_SCHEMA). No rows, no file.
+
+    The bytes go to a hidden ``.{name}.inprogress-{uuid}`` temp in the
+    same dir (Spark's file listing skips ``.``/``_`` names, so a reader
+    never lists it), renamed into place once closed; when the write
+    raises, the temp is unlinked, so a failed task attempt leaves nothing
+    behind."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.inprogress-{uuid.uuid4().hex}")
+    counts = {"n_docs": 0, "n_spans_out": 0, "n_tables_built": 0,
+              "n_media_emitted": 0}
+    writer = None
+    try:
+        for b in batches:
+            if not len(b):
+                continue
+            if writer is None:
+                writer = pq.ParquetWriter(tmp, b.schema)
+            writer.write_batch(b)
+            kind = pc.struct_field(pc.list_flatten(b.column("spans")), "kind")
+            counts["n_docs"] += len(b)
+            counts["n_spans_out"] += len(kind)
+            counts["n_tables_built"] += pc.sum(pc.equal(kind, "table")).as_py() or 0
+            counts["n_media_emitted"] += pc.sum(pc.equal(kind, "media")).as_py() or 0
+        if writer is not None:
+            writer.close()
+            os.rename(tmp, path)
+    except BaseException:
+        if writer is not None:
+            with contextlib.suppress(Exception):
+                writer.close()
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(tmp)
+        raise
+    return counts
 
 
 class SnapshotTable:
@@ -186,8 +236,8 @@ class SnapshotTable:
     # -- write path --------------------------------------------------------
 
     def prepare_commit_dir(self, commit_id: str) -> str:
-        """Resolve (and clear, if it's a crashed uncommitted leftover) the
-        data dir for commit_id; refuse to reuse an already-committed id."""
+        """Create (after clearing a crashed uncommitted leftover) the data
+        dir for commit_id; refuse to reuse an already-committed id."""
         out = os.path.join(self.data_dir, commit_id)
         if os.path.exists(out):
             if commit_id in {
@@ -197,6 +247,7 @@ class SnapshotTable:
             # leftover from a crashed attempt with the same run_id
             # (e.g. a retried streaming epoch): uncommitted, safe to clear
             shutil.rmtree(out)
+        os.makedirs(out)
         return out
 
     def write_metrics(self, commit_id: str, rows: list[dict]) -> None:
@@ -216,45 +267,43 @@ class SnapshotTable:
         df: DataFrame,
         spark: SparkSession,
         run_id: str | None = None,
-    ) -> str:
+    ) -> str | None:
         """Write df + per-partition metrics, then atomically commit.
 
-        Data is written first (uncommitted), then the metrics are derived
-        FROM THE WRITTEN FILES — so they describe exactly what was
-        committed, not what was planned. The per-partition rows (bounded
-        by the partition count) come back to the driver in that one read
-        and go to ``write_metrics``; their n_docs sum is the commit's.
+        One Spark job: each write task writes its partition to
+        ``part-{partition_id:05d}.parquet`` in the uncommitted commit dir
+        (:func:`write_counted`) and returns one metric row counted from
+        the batches it wrote, so the metrics describe exactly what was
+        committed; an empty partition writes no file and returns no row.
+        The driver writes the rows (bounded by the partition count) with
+        ``write_metrics`` and publishes the manifest. A commit of 0 docs
+        removes its data dir, publishes nothing and returns None.
         """
         run_id = run_id or uuid.uuid4().hex
         commit_id = f"c-{run_id}"
         out = self.prepare_commit_dir(commit_id)
-        df.write.mode("errorifexists").parquet(out)
 
-        written = spark.read.parquet(out)
-        metrics = (
-            written.select(
-                F.lit(run_id).alias("run_id"),
-                F.spark_partition_id().alias("partition_id"),
-                F.col("doc_id"),
-                F.size("spans").alias("n_spans"),
-                F.size(
-                    F.filter(F.col("spans"), lambda s: s["kind"] == F.lit("table"))
-                ).alias("n_tables"),
-                F.size(
-                    F.filter(F.col("spans"), lambda s: s["kind"] == F.lit("media"))
-                ).alias("n_media"),
+        def write_task(batches):
+            from pyspark import TaskContext
+
+            pid = TaskContext.get().partitionId()
+            counts = write_counted(
+                batches, os.path.join(out, f"part-{pid:05d}.parquet")
             )
-            .groupBy("run_id", "partition_id")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum("n_spans").alias("n_spans_out"),
-                F.sum("n_tables").alias("n_tables_built"),
-                F.sum("n_media").alias("n_media_emitted"),
-            )
-        )
-        rows = [r.asDict() for r in metrics.collect()]
-        self.write_metrics(commit_id, rows)
+            if counts["n_docs"]:
+                yield pa.RecordBatch.from_pylist(
+                    [dict(counts, run_id=run_id, partition_id=pid)],
+                    schema=METRICS_SCHEMA,
+                )
+
+        rows = [
+            r.asDict() for r in df.mapInArrow(write_task, METRICS_DDL).collect()
+        ]
         n_docs = sum(r["n_docs"] for r in rows)
+        if not n_docs:
+            shutil.rmtree(out)
+            return None
+        self.write_metrics(commit_id, rows)
         self._publish(commit_id, {"run_id": run_id, "n_docs": n_docs})
         return commit_id
 
@@ -276,10 +325,9 @@ def run_resumable_extraction(
     run_id: str | None = None,
 ) -> str | None:
     """One checkpoint-resumable extraction increment: pending docs ->
-    extract -> atomic append. Returns the commit id (None if up to date)."""
+    extract -> atomic append: one Spark job on a fresh table. Returns the
+    commit id (None if up to date)."""
     from ..operators.extract import extract
 
     todo = table.pending(documents, spark)
-    if not todo.take(1):
-        return None
     return table.append(extract(todo), spark, run_id=run_id)

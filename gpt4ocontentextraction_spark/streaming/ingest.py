@@ -12,6 +12,8 @@ batch and streaming paths share one sink with exactly-once visibility
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.extract import extract
@@ -35,12 +37,15 @@ def stream_extract(
     extracted = extract(docs)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        # epoch-keyed commit id: a retried epoch overwrites nothing and
-        # re-publishing the same commit id is rejected by errorifexists,
-        # keeping the sink effectively exactly-once.
-        todo = table.pending(batch_df, batch_df.sparkSession)
-        if todo.take(1):
-            table.append(todo, batch_df.sparkSession, run_id=f"epoch-{epoch_id}")
+        # epoch-keyed commit id: an epoch replayed after its commit was
+        # published (crash before the checkpoint's commit log) is skipped;
+        # one replayed after a crash mid-write clears its uncommitted dir
+        # and commits again, keeping the sink effectively exactly-once.
+        run_id = f"epoch-{epoch_id}"
+        if os.path.join(table.data_dir, f"c-{run_id}") in table.committed_dirs():
+            return
+        spark = batch_df.sparkSession
+        table.append(table.pending(batch_df, spark), spark, run_id=run_id)
 
     return (
         extracted.writeStream.foreachBatch(sink)

@@ -18,6 +18,9 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
+
+import pyarrow.parquet as pq
 
 
 def main() -> None:
@@ -49,11 +52,6 @@ def main() -> None:
 
     table = SnapshotTable(args.output)
     todo = table.pending(docs, spark)
-    if not todo.take(1):
-        print(json.dumps({"status": "up-to-date",
-                          "version": table.current_version()}))
-        return
-
     if args.skew_threshold > 0:
         from gpt4ocontentextraction_spark.operators.skew import (
             extract_with_skew_defusal,
@@ -66,8 +64,11 @@ def main() -> None:
         out = extract(todo)
 
     commit = table.append(out, spark, run_id=args.run_id)
-    m = table.metrics(spark)
-    n_parts = m.filter(m.run_id == commit.removeprefix("c-")).count() if m is not None else 0
+    if commit is None:
+        print(json.dumps({"status": "up-to-date",
+                          "version": table.current_version()}))
+        return
+    n_parts = pq.read_table(os.path.join(table.metrics_dir, commit)).num_rows
     print(
         json.dumps(
             {

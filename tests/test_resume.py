@@ -5,6 +5,7 @@ doc2md_utils.py:212-217; north_rule checkpoint-resumable requirement)."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -19,6 +20,7 @@ from gpt4ocontentextraction_spark.sources.snapshots import (
     METRICS_SCHEMA,
     SnapshotTable,
     run_resumable_extraction,
+    write_counted,
 )
 
 # the two commit paths: SnapshotTable.append and run_file_extraction
@@ -66,6 +68,13 @@ def _table_counts(spark, table):
     rows = table.read(spark).collect()
     kinds = [s["kind"] for r in rows for s in r["spans"]]
     return (len(rows), len(kinds), kinds.count("table"), kinds.count("media"))
+
+
+def _file_counts(path):
+    """(docs, spans, table spans, media spans) of one parquet file."""
+    spans = pq.read_table(path, columns=["spans"]).column("spans").to_pylist()
+    kinds = [s["kind"] for doc in spans for s in doc]
+    return (len(spans), len(kinds), kinds.count("table"), kinds.count("media"))
 
 
 def test_partial_commit_then_resume(spark, docs, tmp_path):
@@ -119,6 +128,19 @@ def test_metrics_written_per_partition(spark, docs, docs_dir, tmp_path):
         counts = _table_counts(spark, table)
         assert counts[0] == docs.count() and min(counts) > 0
         assert _metric_sums(spark, table) == counts, path
+        # each row describes exactly one committed file: the append task's
+        # part-{partition_id} file, or the file job's partition_id-th file
+        data_dir = os.path.join(table.data_dir, commit)
+        files = sorted(f for f in os.listdir(data_dir) if f.endswith(".parquet"))
+        by_file = {}
+        for r in m.collect():
+            pid = r["partition_id"]
+            name = f"part-{pid:05d}.parquet" if path == "append" else files[pid]
+            by_file[name] = (r["n_docs"], r["n_spans_out"], r["n_tables_built"],
+                             r["n_media_emitted"])
+        assert sorted(by_file) == files and len(files) > 1, path
+        for name, row in by_file.items():
+            assert row == _file_counts(os.path.join(data_dir, name)), (path, name)
 
 
 def test_metrics_read_through_spark_written_dirs(spark, docs, tmp_path):
@@ -166,6 +188,58 @@ def test_commit_paths_build_no_driver_list_dataframe(
         assert commit == "c-g"
         assert table.read(spark).count() == n_docs
         assert _metric_sums(spark, table)[0] == n_docs
+
+
+def test_composable_commit_runs_one_spark_job(spark, docs_dir, tmp_path):
+    """run_resumable_extraction on a fresh table is one Spark job: the
+    write tasks count their own metric rows (no take(1) probe, no
+    readback). Re-run on the same input it commits nothing: None, no new
+    manifest version, no leftover data dir."""
+    table = SnapshotTable(str(tmp_path / "out"))
+    docs = spark.read.parquet(docs_dir)
+    sc = spark.sparkContext
+    sc.setJobGroup("one-commit", "composable commit")
+    try:
+        commit = run_resumable_extraction(spark, docs, table, run_id="first")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert commit == "c-first"
+    assert len(sc.statusTracker().getJobIdsForGroup("one-commit")) == 1
+
+    assert run_resumable_extraction(spark, docs, table) is None
+    assert table.current_version() == 1
+    assert os.listdir(table.data_dir) == ["c-first"]
+    assert table.read(spark).count() == docs.count()
+
+
+def test_failed_write_attempt_leaves_nothing_visible(spark, docs_dir, tmp_path):
+    """A write attempt whose batches raise midway leaves no file behind
+    (its temp is hidden, then unlinked); a killed attempt's un-renamed
+    temp is hidden from Spark's listing, so the dir reads each row once
+    after a good second attempt."""
+    batches = pq.read_table(docs_dir).to_batches(max_chunksize=4)
+    n_docs = sum(len(b) for b in batches)
+    out = tmp_path / "c-x"
+    out.mkdir()
+    dst = str(out / "part-00000.parquet")
+    mid_write = []
+
+    def crashing():
+        yield batches[0]
+        mid_write.extend(os.listdir(out))
+        raise RuntimeError("task killed")
+
+    with pytest.raises(RuntimeError):
+        write_counted(crashing(), dst)
+    assert len(mid_write) == 1
+    assert mid_write[0].startswith(".part-00000.parquet.inprogress-")
+    assert os.listdir(out) == []
+
+    assert write_counted(iter(batches), dst)["n_docs"] == n_docs
+    shutil.copy(dst, out / mid_write[0])  # a killed attempt's leftover
+    got = spark.read.parquet(str(out))
+    assert got.count() == n_docs
+    assert got.select("doc_id").distinct().count() == n_docs
 
 
 def test_concurrent_publish_never_loses_commits(tmp_path):

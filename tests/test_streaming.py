@@ -44,3 +44,29 @@ def test_stream_extract_incremental(spark, tmp_path):
         r["doc_id"]: [tuple(s) for s in r["spans"]] for r in final.collect()
     }
     assert batch == streamed
+
+
+def test_replayed_epoch_after_publish_is_skipped(spark, tmp_path):
+    """A crash after an epoch's commit was published but before the
+    checkpoint logged it makes Spark replay the epoch under the same id;
+    the sink skips it instead of failing on the committed commit id."""
+    in_dir = str(tmp_path / "in")
+    table = SnapshotTable(str(tmp_path / "out"))
+    ckpt = str(tmp_path / "ckpt")
+    pdf, _ = make_corpus(seed=22, docs_per_class=1, include_giant=False)
+    corpus_to_spark(spark, pdf).coalesce(1).write.parquet(in_dir)
+
+    stream_extract(spark, in_dir, table, ckpt).awaitTermination(120)
+    n_docs, version = table.read(spark).count(), table.current_version()
+    assert n_docs == len(pdf) and version >= 1
+
+    commits = os.path.join(ckpt, "commits")
+    last = max((f for f in os.listdir(commits) if f.isdigit()), key=int)
+    for f in (last, f".{last}.crc"):  # the crash: epoch not logged
+        os.remove(os.path.join(commits, f))
+    q = stream_extract(spark, in_dir, table, ckpt)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert table.current_version() == version
+    assert table.read(spark).count() == n_docs
+    assert os.path.exists(os.path.join(commits, last))  # the epoch re-ran
