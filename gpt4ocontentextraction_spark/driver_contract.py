@@ -1179,12 +1179,11 @@ def q_c4_filters(spark, sf_dir):
     with per-rule violation counters — over the reflowed corpus view
     seeded so every rule demonstrably fires (261 kept / 239 dropped at
     sf0.001; the seed_pii lesson: an unseeded gate would drop 100% of
-    lines on the punctuation rule alone). r6: the three composed views
-    are five interpreted HOF passes per doc; the gate runs the fused
-    Arrow kernel arm — one ArrowEvalPython projection, zero shuffles —
-    with the composed relational chain kept as the equality-pinned spec
-    twin (tests/test_c4.py::test_fused_kernel_equals_composed). EXTRA
-    (local-parity) gate, swept by tests/test_oracle_parity.py."""
+    lines on the punctuation rule alone). The gate runs the fused Arrow
+    kernel — one ArrowEvalPython projection, zero shuffles — pinned to
+    the oracle on hand and edge frames (tests/test_c4.py,
+    tests/test_kernel_oracle_edges.py). EXTRA (local-parity) gate, swept
+    by tests/test_oracle_parity.py."""
     return curation.c4_filters_fused(_docs(spark, sf_dir))
 
 
@@ -1503,8 +1502,9 @@ def q_label_noise(spark, sf_dir):
     vector whose cosine to its OWN label's LOO centroid loses to some
     OTHER label's centroid is a suspected mislabel. All sums are exact
     fixed-point integers; LOO costs nothing via dot(x, c-x) = dot -
-    |x|^2. One centroid aggregate + a broadcast n*L pass, no window.
-    EXTRA (local-parity) gate; hand geometry in tests/test_labels.py."""
+    |x|^2. One centroid aggregate + one Arrow n*L scoring pass over the
+    collected centroids, no join, no window. EXTRA (local-parity) gate;
+    hand geometry in tests/test_labels.py."""
     return labels.label_noise(
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     )
@@ -1958,8 +1958,8 @@ def q_pq_codebooks(spark, sf_dir):
 @register_extra("pq_codes", _pq.PQ_CODES_SQL)
 def q_pq_codes(spark, sf_dir):
     """PQ encoding: every vector's nearest trained centroid per
-    subspace — 12 bits per vector at (m=4, k=8); codebook re-enters the
-    plan as literals so encode is a pure projection."""
+    subspace — 12 bits per vector at (m=4, k=8); after the codebook
+    collect, encode is one Arrow projection with no Exchange."""
     return _pq.pq_codes(_embeds(spark, sf_dir))
 
 

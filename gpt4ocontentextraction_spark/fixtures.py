@@ -285,3 +285,89 @@ def corpus_to_spark(spark, pdf: pd.DataFrame):
         for _, r in pdf.iterrows()
     ]
     return spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA)
+
+
+# ---------------------------------------------------------------------------
+# Edge frames: the input domain every kernelised operator must share with
+# its DuckDB oracle (tests/test_kernel_oracle_edges.py)
+# ---------------------------------------------------------------------------
+
+_EDGE_WORDS = " ".join(f"w{i}" for i in range(40))  # four 12-word lines
+
+
+def edge_documents():
+    """(doc_id, text) rows at the edges of the documents domain: NULL, 0
+    and negative ids; NULL, empty and blank text; double and trailing
+    spaces; a newline inside text; U+00A0; 'İ' (which lower-cases to two
+    code points); one ~20k-word document. As a pyarrow Table."""
+    import pyarrow as pa
+
+    w = _EDGE_WORDS
+    rng = random.Random("edge/long")
+    long_doc = " ".join(
+        rng.choice(_WORDS) + ("." if i % 9 == 8 else "")
+        for i in range(20_000)
+    )
+    rows = [
+        (0, ""),  # empty text; also the c4 %37 poison id
+        (3, None),
+        (6, None),
+        (1, " "),
+        (2, "\n"),
+        (44, "word with\nnewline inside plus more words here"),
+        (85, "x " * 40),  # c4 %41==3 poison id, trailing space
+        (9, "double  spaces  between  words  and  a  trailing  one. "),
+        (7, "a"),
+        # NULL and negative ids: the JVM's % takes the dividend's sign
+        (None, w),
+        (-1, w),
+        (-4, w),
+        (-38, w),
+        (50, "İ " + w + " JAVASCRİPT LOREM İPSUM"),
+        # U+00A0 is neither trimmed nor a word separator
+        (57, w.replace("w11", "w11.\xa0").replace("w30 ", "w30\xa0")),
+        (52, w + " JAVASCRIPT"),
+        (1000, long_doc),
+    ]
+    return pa.table(
+        {
+            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+            "text": pa.array([r[1] for r in rows], pa.string()),
+        }
+    )
+
+
+def edge_embeddings(base):
+    """``base`` (vec_id int64, embedding list<float>, label int32) plus
+    edge rows: a NULL vec_id, ids -5 and -500, a NULL label, an all-zero
+    vector, an exact duplicate of vec 0 and a singleton label. As a
+    pyarrow Table with base's schema."""
+    import pyarrow as pa
+
+    base = base.select(["vec_id", "embedding", "label"])
+    dim = len(base.column("embedding")[0].as_py())
+    rng = random.Random("edge/embeddings")
+
+    def vec():
+        return [rng.uniform(-1.0, 1.0) for _ in range(dim)]
+
+    first = base.slice(0, 1).to_pylist()[0]
+    label = first["label"]
+    rows = [
+        (None, vec(), label),
+        (-5, vec(), label),
+        (-500, vec(), label),
+        (100_000, vec(), None),
+        (100_001, [0.0] * dim, label),
+        (100_002, first["embedding"], label),  # duplicate of the first row
+        (100_003, vec(), 1_000),  # the only member of label 1000
+    ]
+    edge = pa.table(
+        {
+            "vec_id": [r[0] for r in rows],
+            "embedding": [r[1] for r in rows],
+            "label": [r[2] for r in rows],
+        },
+        schema=base.schema,
+    )
+    return pa.concat_tables([base, edge])

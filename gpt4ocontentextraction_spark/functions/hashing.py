@@ -49,15 +49,6 @@ def spark_polyhash(col_expr: str) -> str:
     )
 
 
-def spark_polyhash37(col_expr: str) -> str:
-    """Second independent 32-bit fold (multiplier 37) — pairs with
-    spark_polyhash to build 64-bit SimHash fingerprints."""
-    return (
-        f"aggregate(split({col_expr}, ''), 0L,"
-        f" (acc, c) -> (acc * 37 + ascii(c)) % {MOD})"
-    )
-
-
 def spark_polyhash_over_array(arr_expr: str) -> str:
     """array<string> -> array<long> of polyhashes."""
     return (

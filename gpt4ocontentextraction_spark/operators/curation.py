@@ -1282,9 +1282,19 @@ def seed_c4_cte(src: str = "rdocs", out: str = "cdocs") -> str:
 )"""
 
 
-_C4_PUNCT_D = "right(trim(l), 1) IN ('.', '!', '?', '\"')"
-_C4_LEN_D = f"len(string_split(trim(l), ' ')) >= {C4_MIN_WORDS}"
-_C4_JS_D = "contains(lower(l), 'javascript')"
+# The JVM's semantics, which the views and the fused kernel follow:
+# Spark's trim strips U+0020 only (DuckDB's one-argument trim also strips
+# U+00A0), and Java's toLowerCase maps 'İ' (U+0130, the one unconditional
+# special-casing lowercase) to 'i' + U+0307 (DuckDB's lower gives 'i').
+_C4_PUNCT_D = "right(trim(l, ' '), 1) IN ('.', '!', '?', '\"')"
+_C4_LEN_D = f"len(string_split(trim(l, ' '), ' ')) >= {C4_MIN_WORDS}"
+
+
+def _duck_jvm_lower(x: str) -> str:
+    return f"lower(replace({x}, 'İ', 'i' || chr(775)))"
+
+
+_C4_JS_D = f"contains({_duck_jvm_lower('l')}, 'javascript')"
 
 
 def c4_filters_select(src: str = "cdocs") -> str:
@@ -1303,7 +1313,7 @@ def c4_filters_select(src: str = "cdocs") -> str:
 FROM (
   SELECT doc_id, ls, kept,
          CAST(len(kept) >= {C4_MIN_KEPT_LINES}
-              AND NOT contains(lower(text), 'lorem ipsum')
+              AND NOT contains({_duck_jvm_lower('text')}, 'lorem ipsum')
               AND NOT contains(text, '{{') AS BIGINT) AS keep
   FROM (
     SELECT doc_id, text, ls,
@@ -1435,11 +1445,7 @@ def _c4_fused_kernel_udf(words_per_line: int):
     return fused
 
 
-def c4_filters_fused(
-    docs: DataFrame,
-    words_per_line: int = 12,
-    use_kernel: bool = True,
-) -> DataFrame:
+def c4_filters_fused(docs: DataFrame, words_per_line: int = 12) -> DataFrame:
     """The gate query's fused form of
     ``c4_filters(seed_c4(reflow_lines(docs)))`` over raw
     ``(doc_id, text)``.
@@ -1449,16 +1455,11 @@ def c4_filters_fused(
     seed's transform, c4's filter x4 — Spark does not whole-stage-
     codegen HOFs; the pq_adc/label_noise defect class), ~0.7-1.1 s of
     the query's ~1.0-1.3 s at sf0.1 while the same work is a 53 ms
-    single Python pass. ``use_kernel=True`` runs the whole chain in one
-    ArrowEvalPython projection — zero shuffles, identical rows
-    (tests/test_c4.py::test_fused_kernel_equals_composed pins equality
-    on the gate corpus and the rule-isolation hand frames);
-    ``use_kernel=False`` keeps the composed relational chain as the
-    spec twin the oracle SQL mirrors CTE-for-CTE."""
-    if not use_kernel:
-        from .dedup import reflow_lines
-
-        return c4_filters(seed_c4(reflow_lines(docs, words_per_line)))
+    single Python pass. So the whole chain runs in one ArrowEvalPython
+    projection (_c4_fused_kernel_udf) — zero shuffles. Spec:
+    C4_FILTERS_SQL (which mirrors the composed views CTE-for-CTE),
+    pinned on the gate corpus and hand frames (tests/test_c4.py) and on
+    fixtures.edge_documents (tests/test_kernel_oracle_edges.py)."""
     base = (
         docs.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
         .filter(F.col("text").isNotNull())

@@ -1,10 +1,11 @@
 """Deduplication operator family over the flat documents table.
 
 Large-scale training-data pipeline operators (exact dedup, MinHash+LSH,
-SimHash, n-gram Jaccard), each as a Spark DataFrame query built from
-JVM-side expressions (no Python UDFs — hashing folds run inside
-whole-stage codegen) and each with a bit-exact DuckDB oracle
-(functions/hashing.py defines the shared arithmetic).
+SimHash, n-gram Jaccard), each as one Spark DataFrame query — JVM-side
+expressions, or an Arrow numpy kernel where the per-word hashing folds
+would otherwise run as interpreted higher-order functions (the MinHash
+encoder, the SimHash fingerprints) — and each with a bit-exact DuckDB
+oracle, its spec (functions/hashing.py defines the shared arithmetic).
 
 Scale posture:
 - exact dedup: one hash-aggregate, map-side partial combine, AQE-coalesced.
@@ -405,22 +406,9 @@ SELECT id_a, id_b, jaccard FROM jac WHERE jaccard >= {JACCARD_THRESHOLD}
 # SimHash fingerprints (+ bounded hamming pairs)
 # ---------------------------------------------------------------------------
 
-_WORD_HASHES = spark_polyhash_over_array("split(text, ' ')")
-
-_SIMHASH_EXPR = f"""
-element_at(transform(array({_WORD_HASHES}), wh ->
-  aggregate(sequence(0, 31), 0L, (fp, j) ->
-    fp + IF(
-      aggregate(wh, 0L, (acc, h) ->
-        acc + IF((shiftright(h, j) & 1) = 1, 1L, -1L)) > 0,
-      shiftleft(1L, j), 0L))
-), 1)
-"""
-
-
 def _np_polyhash(uniques, mult: int):
-    """Vectorized polyhash over unique words — the numpy twin of
-    spark_polyhash/spark_polyhash37: per-character contributions
+    """Vectorized polyhash over unique words — the numpy form of the
+    functions/hashing.py fold (multiplier 31 or 37): per-character contributions
     cp * mult^(L-1-i) mod M summed and re-reduced mod M are congruent
     to (and bounded like) the left fold both engines run. The same
     construction the MinHash encoder (_shingle_core) has used since r2
@@ -486,11 +474,16 @@ def word_buckets_udf(n_buckets: int):
 def _simhash_kernel_udf(width: int):
     """Arrow-batched SimHash kernel (32- or 64-bit): per-batch word
     split + factorized polyhash (the proven _shingle_core machinery) +
-    one ±1 vote reduction per doc — integer-identical to the relational
-    vote aggregation (equality pinned in tests/test_dedup_forms.py) but
-    a ZERO-SHUFFLE projection: no word explode, no 32/64-SUM aggregate,
-    no doc_id exchange. The relational/expression forms stay as the
-    spec twins."""
+    one ±1 vote reduction per doc — integer-identical to the oracle's
+    vote aggregation (_duck_simhash_base / _duck_simhash64_base; pinned
+    in tests/test_kernel_oracle_edges.py) but a ZERO-SHUFFLE projection:
+    no word explode, no 32/64-SUM aggregate, no doc_id exchange.
+
+    64-bit slots: h1/h2 are 31-bit polyhashes (mod 2^31-1), so their
+    bit 31 is CONSTANT ZERO — mapping fingerprint bits 31 / 63 to those
+    positions would leave two dead bits and halve two bands' key spaces.
+    Those two slots instead take bits 0/1 of a third mix hash
+    (h1*31 + h2) mod (2^31-1)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -534,60 +527,29 @@ def _simhash_kernel_udf(width: int):
         )
         fp = (pos * weights[None, :]).sum(axis=1, dtype=np.uint64)
         # uint64 -> two's-complement int64: bit 63's weight becomes the
-        # relational form's MIN_LONG contribution exactly
+        # oracle's -2^63 contribution exactly
         return pd.Series(fp.view(np.int64))
 
     return simhash_kernel
 
 
-def simhash_fingerprints(docs: DataFrame, use_kernel: bool = True) -> DataFrame:
-    """SimHash fingerprints. use_kernel=True (production): one Arrow
-    projection per batch (zero Exchange — see _simhash_kernel_udf),
-    null-text docs filtered exactly as the word explode drops them.
-    use_kernel=False: the relational form — explode words, ONE codegen'd
-    aggregation with 32 per-bit vote sums (map-side partial combine),
-    reassemble the fingerprint; kept as the distributed spec twin
-    (higher-order-function lambdas run interpreted in Catalyst, so the
-    single-expression form _SIMHASH_EXPR costs 32 interpreted ops per
-    word — both spec forms are equality-pinned in tests)."""
-    if use_kernel:
-        from .partitioning import spread_small_scan
+def simhash_fingerprints(docs: DataFrame) -> DataFrame:
+    """32-bit SimHash fingerprints (doc_id, simhash): one Arrow
+    projection per batch (zero Exchange — see _simhash_kernel_udf).
+    NULL-text docs are dropped, as the oracle's word UNNEST drops them;
+    empty text is one empty word, so every vote is -1 and the
+    fingerprint is 0. Spec: SIMHASH_FP_SQL."""
+    return _simhash_projection(docs, 32, "simhash")
 
-        return spread_small_scan(
-            docs.filter(F.col("text").isNotNull()).select(
-                F.col("doc_id").cast("long").alias("doc_id"), "text"
-            )
-        ).select(
-            "doc_id", _simhash_kernel_udf(32)("text").alias("simhash")
+
+def _simhash_projection(docs: DataFrame, width: int, col: str) -> DataFrame:
+    from .partitioning import spread_small_scan
+
+    return spread_small_scan(
+        docs.filter(F.col("text").isNotNull()).select(
+            F.col("doc_id").cast("long").alias("doc_id"), "text"
         )
-    words = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.explode(F.split("text", " ")).alias("w"),
-    )
-    from ..functions.hashing import spark_polyhash
-
-    hashed = words.select("doc_id", F.expr(spark_polyhash("w")).alias("h"))
-    votes = [
-        F.sum(
-            F.when(F.expr(f"(shiftright(h, {j}) & 1) = 1"), 1).otherwise(-1)
-        ).alias(f"s{j}")
-        for j in range(32)
-    ]
-    sums = hashed.groupBy("doc_id").agg(*votes)
-    fp = None
-    for j in range(32):
-        bit = F.when(F.col(f"s{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        fp = bit if fp is None else fp + bit
-    return sums.select("doc_id", fp.cast("long").alias("simhash"))
-
-
-def simhash_fingerprints_expr(docs: DataFrame) -> DataFrame:
-    """Single-expression (no-shuffle) form — the semantics-defining spec;
-    equal to simhash_fingerprints (pinned by test)."""
-    return docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.expr(_SIMHASH_EXPR).alias("simhash"),
-    )
+    ).select("doc_id", _simhash_kernel_udf(width)("text").alias(col))
 
 
 SIMHASH_BANDS = 4
@@ -694,77 +656,22 @@ def _simhash_banded_pairs(
 # (multiplier 37); since both folds are 31-bit values (mod 2^31-1), the
 # two remaining slots (fingerprint bits 31 and 63) take bits of a third
 # (h1*31 + h2) mod (2^31-1) mix hash so ALL 64 vote bits really vary
-# (see _simhash64_bit_expr — without this, two bands would have 2^15
+# (see _simhash_kernel_udf — without this, two bands would have 2^15
 # effective values and double their candidate collisions).
 # ---------------------------------------------------------------------------
 
 SIMHASH64_BANDS = 4
 SIMHASH64_BAND_BITS = 16
-_MIN_LONG = -(1 << 63)
 
 
-def _simhash64_bit_expr(j: int) -> str:
-    """Per-word vote bit j as a Spark SQL predicate over (h1, h2).
-
-    h1/h2 are 31-bit polyhashes (mod 2^31-1), so their bit 31 is
-    CONSTANT ZERO — mapping j=31 / j=63 to those positions would leave
-    two dead fingerprint bits and halve two bands' key spaces (2^15
-    effective values -> 2x the candidate collisions). Those two slots
-    instead take bits 0/1 of a third mix hash (h1*31 + h2) mod (2^31-1)
-    — a nonlinear-mod-prime combine, the same construction as the word
-    hashes themselves, mirrored verbatim in the DuckDB oracle."""
-    if j < 31:
-        return f"(shiftright(h1, {j}) & 1) = 1"
-    if j == 31:
-        return "(((h1 * 31 + h2) % 2147483647) & 1) = 1"
-    if j < 63:
-        return f"(shiftright(h2, {j - 32}) & 1) = 1"
-    return "((shiftright((h1 * 31 + h2) % 2147483647, 1)) & 1) = 1"
-
-
-def simhash64_fingerprints(docs: DataFrame, use_kernel: bool = True) -> DataFrame:
-    """64-bit SimHash fingerprints: two polyhash folds (31/37) plus the
-    mix hash for the two slots 31-bit hashes cannot fill
-    (_simhash64_bit_expr). use_kernel=True (production): zero-shuffle
-    Arrow kernel (_simhash_kernel_udf); False: the relational form —
-    explode words, ONE codegen'd aggregation with 64 per-bit vote sums,
-    reassemble (the distributed spec twin, equality-pinned in tests).
+def simhash64_fingerprints(docs: DataFrame) -> DataFrame:
+    """64-bit SimHash fingerprints (doc_id, simhash64): two polyhash
+    folds (31/37) plus the mix hash for the two slots 31-bit hashes
+    cannot fill, in the zero-shuffle Arrow kernel (_simhash_kernel_udf).
     Bit 63's contribution is the two's-complement -2^63 so the
-    fingerprint stays a plain BIGINT on both engines."""
-    if use_kernel:
-        from .partitioning import spread_small_scan
-
-        return spread_small_scan(
-            docs.filter(F.col("text").isNotNull()).select(
-                F.col("doc_id").cast("long").alias("doc_id"), "text"
-            )
-        ).select(
-            "doc_id", _simhash_kernel_udf(64)("text").alias("simhash64")
-        )
-    from ..functions.hashing import spark_polyhash, spark_polyhash37
-
-    words = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.explode(F.split("text", " ")).alias("w"),
-    )
-    hashed = words.select(
-        "doc_id",
-        F.expr(spark_polyhash("w")).alias("h1"),
-        F.expr(spark_polyhash37("w")).alias("h2"),
-    )
-    votes = [
-        F.sum(
-            F.when(F.expr(_simhash64_bit_expr(j)), 1).otherwise(-1)
-        ).alias(f"s{j}")
-        for j in range(64)
-    ]
-    sums = hashed.groupBy("doc_id").agg(*votes)
-    fp = None
-    for j in range(64):
-        val = F.lit(_MIN_LONG) if j == 63 else F.lit(1 << j)
-        bit = F.when(F.col(f"s{j}") > 0, val).otherwise(F.lit(0).cast("long"))
-        fp = bit if fp is None else fp + bit
-    return sums.select("doc_id", fp.cast("long").alias("simhash64"))
+    fingerprint stays a plain BIGINT on both engines. NULL text is
+    dropped as in simhash_fingerprints. Spec: SIMHASH64_FP_SQL."""
+    return _simhash_projection(docs, 64, "simhash64")
 
 
 def simhash64_pairs_banded(
@@ -806,7 +713,7 @@ from ..functions.hashing import duck_polyhash  # noqa: E402
 
 def _duck_simhash_base(src: str) -> str:
     """DuckDB CTE chain computing 32-bit simhash fingerprints over ``src``
-    (a relation with doc_id, text) — the same arithmetic as _SIMHASH_EXPR."""
+    (a relation with doc_id, text) — the spec of simhash_fingerprints."""
     return f"""
 words AS (
   SELECT CAST(doc_id AS BIGINT) AS doc_id, UNNEST(string_split(text, ' ')) AS w
@@ -877,7 +784,7 @@ whash64 AS (
 bits64 AS (
   -- j=31 / j=63 take bits 0/1 of the (h1*31 + h2) mod (2^31-1) mix hash:
   -- h1/h2 are 31-bit values, so their own bit 31 is constant zero
-  -- (mirrors _simhash64_bit_expr exactly)
+  -- (mirrors _simhash_kernel_udf exactly)
   SELECT doc_id, j,
          SUM(CASE WHEN (CASE WHEN j < 31 THEN (h1 >> j) & 1
                              WHEN j = 31 THEN ((h1 * 31 + h2) % 2147483647) & 1

@@ -21,13 +21,14 @@ dot(x, c-x) = dot(x, c) - |x|^2 and |c-x|^2 = |c|^2 - 2*dot(x, c) +
 |x|^2 — all exact, so LOO costs nothing beyond the full-centroid pass.
 
 Scale shape: centroid sums are one map-side-combinable (label, pos)
-hash aggregate (L*dim rows); every vector then meets only the L-row
-broadcast centroid relation — n*L rows, never n^2. Argmax-with-
-tie-break is an integer-key MAX (no window). int64 headroom: |x_int| <=
-~1e4 (unit vectors), so dot(x, c_sum) <= 1e4 * (1e4*n_label) * dim —
-safe through n_label ~ 1e9 at dim 64; past that, switch the broadcast
-centroid side to double (parity with a SQL twin is a test-scale
-contract, not a production one).
+hash aggregate (L*dim rows); every vector then meets only the L
+centroids (label_noise: collected once into an Arrow scoring kernel;
+label_centroids: an L-row broadcast relation) — n*L, never n^2.
+Argmax-with-tie-break is an integer-key MAX (no window). int64
+headroom: |x_int| <= ~1e4 (unit vectors), so dot(x, c_sum) <= 1e4 *
+(1e4*n_label) * dim — safe through n_label ~ 1e9 at dim 64; past that,
+switch the centroid side to double (parity with the DuckDB oracle is
+a test-scale contract, not a production one).
 
 Reference analog: the embedding relation the reference indexes per
 document chunk (docker/main.py:382-420 builds embedding records); label
@@ -115,19 +116,19 @@ def _pairs(qv: DataFrame, cent: DataFrame) -> DataFrame:
 def _noise_kernel_udf(cl, C, cn, n2c):
     """Arrow numpy kernel for the per-vector noise scores: every batch
     row meets the DRIVER-COLLECTED centroid matrix (L x d integer sums
-    — bounded by the label vocabulary, the PQ-codebook/IVF precedent),
-    so the n*L pass is one int64 matmul instead of the broadcast cross
-    join's interpreted aggregate(zip_with(...)) fold per pair (r6: the
-    measured PQ-class defect). Arithmetic is the SPEC's exactly: integer
-    dots, then the single IEEE sequence divide -> *10000 -> floor on
-    float64 (numpy and the JVM both use correctly-rounded IEEE doubles),
-    with the same zero-norm and singleton-label guards. Returns
-    (own_ci, rk) per vector; rk is NULL when no rival label exists."""
+    of the non-NULL labels — bounded by the label vocabulary, the
+    PQ-codebook/IVF precedent), so the n*L pass is one int64 matmul
+    instead of a broadcast cross join's interpreted
+    aggregate(zip_with(...)) fold per pair. Arithmetic is the oracle's
+    exactly: integer dots, then the single IEEE sequence divide ->
+    *10000 -> floor on float64 (numpy and DuckDB both use
+    correctly-rounded IEEE doubles), with the same zero-norm and
+    singleton-label guards. Returns (own_ci, rk) per vector; rk is NULL
+    when no rival label exists, and both are NULL for a NULL label
+    (no centroid equals or differs from NULL)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
-
-    L = len(cl)
 
     @pandas_udf("struct<own_ci: bigint, rk: bigint>")
     def score(labels, qs):
@@ -135,7 +136,8 @@ def _noise_kernel_udf(cl, C, cn, n2c):
         if n == 0:
             return pd.DataFrame({"own_ci": [], "rk": []})
         X = np.stack([np.asarray(q, dtype=np.int64) for q in qs])
-        lab = labels.to_numpy(dtype=np.int64)
+        labeled = labels.notna().to_numpy()
+        lab = labels.fillna(0).to_numpy(dtype=np.int64)
         n2x = np.einsum("ij,ij->i", X, X)
         dots = X @ C.T  # (n, L) exact int64
         with np.errstate(divide="ignore", invalid="ignore"):
@@ -149,9 +151,9 @@ def _noise_kernel_udf(cl, C, cn, n2c):
         key = (riv_ci + 20000) * _KEY_SHIFT + (
             _KEY_SHIFT - 1 - cl[None, :]
         )
-        own_mask = lab[:, None] == cl[None, :]
-        rk = np.where(own_mask, np.iinfo(np.int64).min, key).max(axis=1)
-        has_rival = (~own_mask).any(axis=1)
+        own_mask = labeled[:, None] & (lab[:, None] == cl[None, :])
+        rival_mask = labeled[:, None] & ~own_mask
+        rk = np.where(rival_mask, key, np.iinfo(np.int64).min).max(axis=1)
         own_idx = own_mask.argmax(axis=1)
         dot_o = dots[np.arange(n), own_idx]
         n2b = n2c[own_idx] - 2 * dot_o + n2x
@@ -168,102 +170,61 @@ def _noise_kernel_udf(cl, C, cn, n2c):
             np.int64
         )
         own_ci = np.where(cn[own_idx] <= 1, 0, own_ci)
+        own_s = pd.Series(own_ci, dtype="Int64")
+        own_s[~labeled] = pd.NA
         rk_s = pd.Series(rk, dtype="Int64")
-        rk_s[~has_rival] = pd.NA
-        return pd.DataFrame({"own_ci": own_ci, "rk": rk_s})
+        rk_s[~rival_mask.any(axis=1)] = pd.NA
+        return pd.DataFrame({"own_ci": own_s, "rk": rk_s})
 
     return score
 
 
-def label_noise(emb: DataFrame, use_kernel: bool = True) -> DataFrame:
+def label_noise(emb: DataFrame) -> DataFrame:
     """Per-vector leave-one-out mislabel detection: own_cos = cosine to
     the OWN label's centroid with self removed (exact via the integer
     LOO identities; 0.0 for singleton labels), rival = the best OTHER
     label centroid (ties -> smaller label), margin = own - rival in
     1e-4 units, flagged = margin < 0. Output one row per vector so the
-    gate asserts both keep classes.
+    gate asserts both keep classes. A NULL label has no own and no
+    rival centroid: its scores are NULL, and NULL-label vectors are
+    nobody's rival.
 
-    Execution (r6): the centroid relation is bounded by the label
-    vocabulary, so it is collected once and the n*L scoring pass runs
-    as one Arrow numpy kernel over the broadcast matrix — zero joins,
-    zero aggregates after the centroid pass (the interpreted
-    aggregate(zip_with) fold per broadcast-pair was the PQ-class
-    measured defect). ``use_kernel=False`` keeps the relational
-    broadcast-cross-join form as the equality-pinned spec twin
-    (tests/test_labels.py::test_label_noise_kernel_equals_relational).
-
-    Relational plan (spec twin): one centroid aggregate + one broadcast
-    cross join + one map-side-combinable per-vector hash aggregate — no
-    window, no n^2.
+    Execution: the centroid relation (one map-side-combinable hash
+    aggregate) is bounded by the label vocabulary, so it is collected
+    once and the n*L scoring pass runs as one Arrow numpy kernel over
+    the collected matrix — zero joins, zero aggregates after the
+    centroid pass. Spec: LABEL_NOISE_SQL (a relational broadcast cross
+    join + per-vector MAX), pinned on the sf0.001 table and on
+    fixtures.edge_embeddings (tests/test_kernel_oracle_edges.py).
     """
-    qv = _quantized(emb)
-    if use_kernel:
-        import numpy as np
+    import numpy as np
 
-        rows = _centroids(qv).collect()
-        if rows:
-            cl = np.array([r["label"] for r in rows], dtype=np.int64)
-            C = np.stack(
-                [np.asarray(r["c"], dtype=np.int64) for r in rows]
-            )
-            cn = np.array([r["n"] for r in rows], dtype=np.int64)
-            n2c = np.array([r["n2c"] for r in rows], dtype=np.int64)
-            score = _noise_kernel_udf(cl, C, cn, n2c)
-            per = qv.select(
-                "vec_id",
-                "label",
-                score(F.col("label"), F.col("q")).alias("o"),
-            ).select(
-                "vec_id",
-                "label",
-                F.col("o.own_ci").alias("own_ci"),
-                F.col("o.rk").alias("rk"),
-            )
-        else:  # empty corpus: no centroids, no rows — schema only
-            per = qv.select(
-                "vec_id",
-                "label",
-                F.lit(None).cast("bigint").alias("own_ci"),
-                F.lit(None).cast("bigint").alias("rk"),
-            )
-        return per.select(
+    qv = _quantized(emb)
+    rows = [r for r in _centroids(qv).collect() if r["label"] is not None]
+    if rows:
+        cl = np.array([r["label"] for r in rows], dtype=np.int64)
+        C = np.stack([np.asarray(r["c"], dtype=np.int64) for r in rows])
+        cn = np.array([r["n"] for r in rows], dtype=np.int64)
+        n2c = np.array([r["n2c"] for r in rows], dtype=np.int64)
+        score = _noise_kernel_udf(cl, C, cn, n2c)
+        per = qv.select(
             "vec_id",
             "label",
-            (F.col("own_ci") / 10000.0).alias("own_cos"),
-            (F.lit(_KEY_SHIFT - 1) - F.col("rk") % F.lit(_KEY_SHIFT)).alias(
-                "rival_label"
-            ),
-            (
-                (F.floor(F.col("rk") / F.lit(_KEY_SHIFT)) - 20000) / 10000.0
-            ).alias("rival_cos"),
-            (
-                (
-                    F.col("own_ci")
-                    - (F.floor(F.col("rk") / F.lit(_KEY_SHIFT)) - 20000)
-                )
-                / 10000.0
-            ).alias("margin"),
-            (
-                F.col("own_ci")
-                < (F.floor(F.col("rk") / F.lit(_KEY_SHIFT)) - 20000)
-            )
-            .cast("long")
-            .alias("flagged"),
+            score(F.col("label"), F.col("q")).alias("o"),
+        ).select(
+            "vec_id",
+            "label",
+            F.col("o.own_ci").alias("own_ci"),
+            F.col("o.rk").alias("rk"),
         )
-    p = _pairs(qv, _centroids(qv))
-    own_ci = F.expr(
-        "CASE WHEN cn <= 1 THEN CAST(0 AS BIGINT) ELSE "
-        + _cos_int("dot - n2x", "n2x", "n2c - 2 * dot + n2x")
-        + " END"
-    )
-    riv_ci = F.expr(_cos_int("dot", "n2x", "n2c"))
-    key = (riv_ci + F.lit(20000)) * F.lit(_KEY_SHIFT) + (
-        F.lit(_KEY_SHIFT - 1) - F.col("cl")
-    )
-    per = p.groupBy("vec_id", "label").agg(
-        F.max(F.when(F.col("cl") == F.col("label"), own_ci)).alias("own_ci"),
-        F.max(F.when(F.col("cl") != F.col("label"), key)).alias("rk"),
-    )
+    else:  # no labeled vector: no centroid to score against
+        per = qv.select(
+            "vec_id",
+            "label",
+            F.lit(None).cast("bigint").alias("own_ci"),
+            F.lit(None).cast("bigint").alias("rk"),
+        )
+    rival_ci = F.floor(F.col("rk") / F.lit(_KEY_SHIFT)) - 20000
     return per.select(
         "vec_id",
         "label",
@@ -271,22 +232,9 @@ def label_noise(emb: DataFrame, use_kernel: bool = True) -> DataFrame:
         (F.lit(_KEY_SHIFT - 1) - F.col("rk") % F.lit(_KEY_SHIFT)).alias(
             "rival_label"
         ),
-        (
-            (F.floor(F.col("rk") / F.lit(_KEY_SHIFT)) - 20000) / 10000.0
-        ).alias("rival_cos"),
-        (
-            (
-                F.col("own_ci")
-                - (F.floor(F.col("rk") / F.lit(_KEY_SHIFT)) - 20000)
-            )
-            / 10000.0
-        ).alias("margin"),
-        (
-            F.col("own_ci")
-            < (F.floor(F.col("rk") / F.lit(_KEY_SHIFT)) - 20000)
-        )
-        .cast("long")
-        .alias("flagged"),
+        (rival_ci / 10000.0).alias("rival_cos"),
+        ((F.col("own_ci") - rival_ci) / 10000.0).alias("margin"),
+        (F.col("own_ci") < rival_ci).cast("long").alias("flagged"),
     )
 
 
@@ -351,7 +299,7 @@ def label_centroids(emb: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# DuckDB oracle twins
+# DuckDB oracles (the specs)
 # ---------------------------------------------------------------------------
 
 _DUCK_COMMON = f"""

@@ -12,27 +12,39 @@ Reference analog: the vector index the repo queries
 Pipeline (all arithmetic INTEGER after the int8 step, so both engines
 agree bit-for-bit — the quantize.py determinism contract):
 
-1. int8-quantize each embedding (the proven exprs from quantize.py).
+1. int8-quantize each embedding (_quantize_np: the quantize.py
+   expressions' IEEE ops in the same order).
 2. Split into ``m`` subspaces of ``d`` components.
 3. Codebook training = one Lloyd iteration from a deterministic init
-   (centroid j of subspace s = the subvector of vec_id j): integer
-   squared-L2 assignment with (dist, j) tie-break, then the component
-   mean rounded by the one float op both engines define identically —
-   ``floor(sum / count + 0.5)`` (single IEEE double divide + floor).
-   Empty clusters simply produce no codebook row.
+   (centroid j of subspace s = the subvector of vec_id j, for every
+   vec_id < k — negative ids included): integer squared-L2 assignment
+   with (dist, j) tie-break, then the component mean rounded by the one
+   float op both engines define identically — ``floor(sum / count +
+   0.5)`` (single IEEE double divide + floor). Empty clusters simply
+   produce no codebook row.
 4. Encode: nearest final centroid per subspace (integer argmin again).
 5. ADC query: per-subspace lookup table of integer distances from the
-   quantized query to each centroid; approximate distance = the LUT sum
-   over the vector's codes; exact int-L2 rerank of the top candidates
-   restores precision (same scan-then-rerank shape as
+   quantized query to each centroid, indexed by the centroid's slot in
+   the collected codebook (ids need not be 0..k-1); approximate distance
+   = the LUT sum over the vector's codes; exact int-L2 rerank of the top
+   candidates restores precision (same scan-then-rerank shape as
    quantized_rerank_topk).
+
+NULL ids: a row with a NULL vec_id is dropped at the input of every PQ
+relation (training, codes, ADC), as NULL text is dropped by the text
+operators. The oracle (PQ_BASE_SQL's ``pq_q``) applies the same rule.
+
+Execution: steps 1, 2, 4 and 5 run in Arrow-batched numpy kernels over
+the collected codebook. The DuckDB oracle (PQ_BASE_SQL) is the spec,
+pinned on the sf0.001 table and on fixtures.edge_embeddings
+(tests/test_kernel_oracle_edges.py).
 
 Scale shape: training aggregates are map-side-combinable sums over
 (sub, centroid, component) — k*m*d rows total (512 here); the codebook
 is collected driver-side (bounded, the IVF-centroid precedent) and
-re-enters the plan as literals, so assignment/encode/ADC are pure
-projections with zero Exchange, and the only shuffle in the whole
-pipeline is the bounded codebook aggregation and the final top-k
+ships in the kernels' closures, so assignment/encode/ADC are
+projections with zero Exchange, and the only shuffles in the whole
+pipeline are the bounded codebook aggregation and the final top-k
 (TakeOrderedAndProject).
 """
 
@@ -54,36 +66,16 @@ PQ_TOPK = 10
 _QVEC = _q_vec(_VD, _q_scale(_VD))
 
 
+def _identified(embeddings: DataFrame) -> DataFrame:
+    """The PQ input rule: rows with a NULL vec_id are dropped."""
+    return embeddings.filter(F.col("vec_id").isNotNull())
+
+
 def quantized(embeddings: DataFrame) -> DataFrame:
     return embeddings.select(
         F.col("vec_id").cast("long").alias("vec_id"),
         F.expr(_QVEC).alias("qvec"),
     )
-
-
-def _sq_dist_expr(s: int, cent_lit: str, d: int = PQ_D) -> str:
-    """Integer squared L2 between qvec's subspace s and a centroid
-    literal array (element_at is 1-based)."""
-    x = f"cast(element_at(qvec, {s * d} + p) as bigint)"
-    c = f"element_at({cent_lit}, p)"
-    return (
-        f"aggregate(sequence(1, {d}), 0L,"
-        f" (acc, p) -> acc + ({x} - {c}) * ({x} - {c}))"
-    )
-
-
-def _argmin_code_expr(s: int, cents: list[tuple[int, list[int]]]) -> str:
-    """argmin_j dist(qvec_sub_s, centroid_j), ties to smallest j —
-    array_sort over (d, j) structs; centroids enter as literals."""
-    structs = ", ".join(
-        f"named_struct('d', {_sq_dist_expr(s, _arr_lit(vec))}, 'j', {j})"
-        for j, vec in cents
-    )
-    return f"element_at(array_sort(array({structs})), 1).j"
-
-
-def _arr_lit(vals: list[int]) -> str:
-    return "array(" + ", ".join(f"{int(v)}L" for v in vals) + ")"
 
 
 def _init_rows(q: DataFrame) -> dict[int, list[int]]:
@@ -104,17 +96,11 @@ def _init_from_rows(rows: dict[int, list[int]]) -> dict[int, list[tuple[int, lis
     }
 
 
-def _init_centroids(q: DataFrame) -> dict[int, list[tuple[int, list[int]]]]:
-    """Deterministic init: centroid j of subspace s = subvector of
-    vec_id j (bounded collect of PQ_K rows)."""
-    return _init_from_rows(_init_rows(q))
-
-
 def _np_cents(cents: dict[int, list[tuple[int, list[int]]]]):
     """Broadcastable numpy view of a collected codebook: per subspace,
     (centroid-id vector js, centroid matrix C[k, d]) — js sorted
-    ascending by construction, so np.argmin's first-minimum rule equals
-    the literal spec's (dist, j) tie-break."""
+    ascending by construction, so np.argmin's first-minimum rule is the
+    oracle's (dist, j) tie-break."""
     import numpy as np
 
     out = {}
@@ -128,13 +114,13 @@ def _np_cents(cents: dict[int, list[tuple[int, list[int]]]]):
 
 
 def _quantize_np(V):
-    """numpy twin of the _q_scale/_q_vec expressions — the same IEEE
+    """numpy form of the _q_scale/_q_vec expressions — the same IEEE
     double ops in the same order as quantize.quantize_vec (the proven
-    driver-side twin): exact |x| max, ONE double divide for the scale,
+    driver-side form): exact |x| max, ONE double divide for the scale,
     floor(x/scale + 0.5) per element, clamp to the int8 range. Input
     float64 (n, d) -> int64 (n, d); elementwise IEEE arithmetic is
-    engine-independent, so this is bit-identical to the expression
-    form (pinned in tests/test_pq.py)."""
+    engine-independent, so this is bit-identical to the oracle's
+    _duck_q_vec (pinned by the PQ oracle tests)."""
     import numpy as np
 
     maxabs = np.abs(V).max(axis=1)
@@ -151,29 +137,37 @@ def _emb_to_q(embs):
     return _quantize_np(V)
 
 
-def _codes_from_q(Q, npc):
-    """Integer argmin encode per subspace over the broadcast codebook;
-    ties to smallest j via np.argmin's first-minimum rule."""
+def _nearest_slots(Q, npc):
+    """Integer argmin per subspace over the collected codebook -> (n, m)
+    slots into npc[s]; ties to the smallest centroid id via np.argmin's
+    first-minimum rule."""
     import numpy as np
 
-    out = np.empty((len(Q), PQ_M), dtype=np.int32)
+    out = np.empty((len(Q), PQ_M), dtype=np.int64)
     for s in range(PQ_M):
-        js, C = npc[s]
+        _, C = npc[s]
         sub = Q[:, s * PQ_D : (s + 1) * PQ_D]
         d2 = ((sub[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        out[:, s] = js[np.argmin(d2, axis=1)]
+        out[:, s] = np.argmin(d2, axis=1)
     return out
 
 
+def _codes_from_q(Q, npc):
+    """Centroid ids of the nearest centroids -> (n, m) int32."""
+    import numpy as np
+
+    slots = _nearest_slots(Q, npc)
+    return np.stack(
+        [npc[s][0][slots[:, s]] for s in range(PQ_M)], axis=1
+    ).astype(np.int32)
+
+
 def _codes_kernel_udf(cents: dict[int, list[tuple[int, list[int]]]]):
-    """Arrow-batched quantize+encode kernel (the VERDICT r5 #3
-    re-lowering): the collected codebook ships once in the UDF closure;
-    quantization and the per-row integer argmin run as numpy broadcasts
-    — replacing the `aggregate(sequence(...))` literal trees Spark
-    evaluates interpreted with zero codegen (~3 ms/vector), AND the
-    _QVEC projection whose scale aggregate re-evaluates per element in
-    interpreted HOF eval. Bit-identical to the literal spec (pinned in
-    tests/test_pq.py). Input: the RAW embedding column."""
+    """Arrow-batched quantize+encode kernel: the collected codebook
+    ships once in the UDF closure; quantization and the per-row integer
+    argmin run as numpy broadcasts (interpreted higher-order-function
+    trees cost ~3 ms/vector in Spark, which does not codegen them).
+    Input: the RAW embedding column."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -219,8 +213,7 @@ def _adc_exact_kernel_udf(
     """Arrow-batched ADC scan kernel: quantize + encode (argmin per
     subspace) + LUT-sum approximate distance + exact int-L2 to the
     query, one numpy pass per batch, emitted as [adc_dist, exact_dist].
-    Integer-identical to the literal expression chain in the spec
-    path."""
+    ``luts[s]`` is indexed by the centroid's slot in ``cents[s]``."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -234,50 +227,31 @@ def _adc_exact_kernel_udf(
         if len(embs) == 0:
             return pd.Series([], dtype=object)
         Q = _emb_to_q(embs)
-        codes = _codes_from_q(Q, npc)
+        slots = _nearest_slots(Q, npc)
         adc = np.zeros(len(Q), dtype=np.int64)
         for s in range(PQ_M):
-            adc += L[s][codes[:, s]]
+            adc += L[s][slots[:, s]]
         exact = ((Q - qarr[None, :]) ** 2).sum(axis=1)
         return pd.Series(list(np.stack([adc, exact], axis=1)))
 
     return adc_exact
 
 
-def pq_codebooks(
-    embeddings: DataFrame, use_kernel: bool = True, _init=None
-) -> DataFrame:
+def pq_codebooks(embeddings: DataFrame, _init=None) -> DataFrame:
     """One Lloyd iteration from the deterministic init ->
-    (sub, j, pos, val, n_members); empty clusters emit no rows.
-
-    use_kernel=True (production) runs the assignment argmin in the
-    Arrow-batched numpy kernel; False keeps the literal-expression spec
-    (interpreted HOF trees — the oracle twin, equality-pinned in
-    tests/test_pq.py)."""
-    q = quantized(embeddings)
-    init = _init if _init is not None else _init_centroids(q)
-    if use_kernel:
-        a = embeddings.select(
-            F.col("vec_id").cast("long").alias("vec_id"),
-            _assign_qvec_kernel_udf(init)("embedding").alias("r"),
-        )
-        comp0 = a.select(
-            F.posexplode(F.col("r.qvec")).alias("pos0", "val"),
-            F.col("r.asg").alias("asg"),
-        )
-    else:
-        assigns = [
-            F.expr(_argmin_code_expr(s, init[s])).alias(f"a{s}")
-            for s in range(PQ_M)
-        ]
-        a = q.select("vec_id", "qvec", *assigns)
-        comp0 = a.select(
-            F.posexplode("qvec").alias("pos0", "val"),
-            F.expr(
-                "array(" + ", ".join(f"a{s}" for s in range(PQ_M)) + ")"
-            ).alias("asg"),
-        )
-    comp = comp0.select(
+    (sub, j, pos, val, n_members); empty clusters emit no rows. The
+    assignment argmin runs in the Arrow numpy kernel; the component
+    sums are one (sub, j, pos) hash aggregate. Spec: PQ_CODEBOOKS_SQL."""
+    embeddings = _identified(embeddings)
+    if _init is None:
+        _init = _init_from_rows(_init_rows(quantized(embeddings)))
+    a = embeddings.select(
+        _assign_qvec_kernel_udf(_init)("embedding").alias("r")
+    )
+    comp = a.select(
+        F.posexplode(F.col("r.qvec")).alias("pos0", "val"),
+        F.col("r.asg").alias("asg"),
+    ).select(
         "val",
         F.expr(f"element_at(asg, int(pos0 div {PQ_D}) + 1)").alias("j"),
         F.expr(f"int(pos0 div {PQ_D})").alias("sub"),
@@ -299,12 +273,10 @@ def pq_codebooks(
 
 
 def _final_centroids(
-    embeddings: DataFrame, use_kernel: bool = True, _init=None
+    embeddings: DataFrame, _init=None
 ) -> dict[int, list[tuple[int, list[int]]]]:
     """Collect the trained codebook (bounded: <= m*k*d rows)."""
-    rows = pq_codebooks(
-        embeddings, use_kernel=use_kernel, _init=_init
-    ).collect()
+    rows = pq_codebooks(embeddings, _init=_init).collect()
     by_sj: dict[tuple[int, int], dict[int, int]] = {}
     for r in rows:
         by_sj.setdefault((r.sub, r.j), {})[r.pos] = r.val
@@ -315,118 +287,68 @@ def _final_centroids(
     return out
 
 
-def pq_codes(embeddings: DataFrame, use_kernel: bool = True) -> DataFrame:
+def pq_codes(embeddings: DataFrame) -> DataFrame:
     """Encode every vector against the trained codebook ->
-    (vec_id, sub, code). Kernel path: one Arrow argmin pass, codes
-    exploded relationally; literal path kept as the spec twin."""
-    cents = _final_centroids(embeddings, use_kernel=use_kernel)
-    q = quantized(embeddings)
-    if use_kernel:
-        coded = embeddings.select(
-            F.col("vec_id").cast("long").alias("vec_id"),
-            _codes_kernel_udf(cents)("embedding").alias("codes"),
-        )
-        return coded.select(
-            "vec_id", F.posexplode("codes").alias("sub", "code")
-        ).select(
-            "vec_id",
-            F.col("sub").cast("long").alias("sub"),
-            F.col("code").cast("long").alias("code"),
-        )
-    cols = [
-        F.expr(_argmin_code_expr(s, cents[s])).alias(f"c{s}")
-        for s in range(PQ_M)
-    ]
-    coded = q.select("vec_id", *cols)
-    stack = ", ".join(f"{s}L, c{s}" for s in range(PQ_M))
-    return coded.selectExpr(
-        "vec_id", f"stack({PQ_M}, {stack}) as (sub, code)"
-    ).select("vec_id", "sub", F.col("code").cast("long").alias("code"))
+    (vec_id, sub, code): after the codebook collect, one Arrow argmin
+    projection with the codes exploded relationally — no Exchange.
+    Spec: PQ_CODES_SQL."""
+    embeddings = _identified(embeddings)
+    cents = _final_centroids(embeddings)
+    coded = embeddings.select(
+        F.col("vec_id").cast("long").alias("vec_id"),
+        _codes_kernel_udf(cents)("embedding").alias("codes"),
+    )
+    return coded.select(
+        "vec_id", F.posexplode("codes").alias("sub", "code")
+    ).select(
+        "vec_id",
+        F.col("sub").cast("long").alias("sub"),
+        F.col("code").cast("long").alias("code"),
+    )
 
 
 def _int_sq_dist(a: list[int], b: list[int]) -> int:
     return sum((int(x) - int(y)) * (int(x) - int(y)) for x, y in zip(a, b))
 
 
-def pq_adc_topk(
-    spark: SparkSession, embeddings: DataFrame, use_kernel: bool = True
-) -> DataFrame:
+def pq_adc_topk(spark: SparkSession, embeddings: DataFrame) -> DataFrame:
     """ADC scan + exact int-L2 rerank for the fixed gate query
     (vec_id PQ_QUERY_ID) -> top PQ_TOPK of (vec_id, adc_dist,
     exact_dist), ordered by (exact_dist, vec_id).
 
-    Kernel path (production): encode + LUT-sum ADC + exact int-L2 run in
-    one Arrow-batched numpy pass over the broadcast codebook, then two
-    TakeOrderedAndProject cuts. Computing exact_dist for every row
-    instead of candidates-only is value-identical (the rerank reads the
-    same integers) and removes the second interpreted pass. The literal
-    expression chain below stays as the spec/oracle twin."""
+    Encode + LUT-sum ADC + exact int-L2 run in one Arrow-batched numpy
+    pass over the collected codebook, then two TakeOrderedAndProject
+    cuts. Computing exact_dist for every row instead of candidates-only
+    is value-identical (the rerank reads the same integers) and needs no
+    second pass. Spec: PQ_TOPK_SQL."""
+    embeddings = _identified(embeddings)
     q = quantized(embeddings)
     # one bounded collect serves both the codebook init and the query
     # vector (PQ_QUERY_ID < PQ_K by construction) — was two driver jobs
     irows = _init_rows(q)
-    cents = _final_centroids(
-        embeddings, use_kernel=use_kernel, _init=_init_from_rows(irows)
-    )
+    cents = _final_centroids(embeddings, _init=_init_from_rows(irows))
     if PQ_QUERY_ID in irows:
         qv = list(irows[PQ_QUERY_ID])
     else:  # pragma: no cover — gate config pins PQ_QUERY_ID < PQ_K
         qv = list(
             q.filter(F.col("vec_id") == PQ_QUERY_ID).collect()[0].qvec
         )
-    # per-subspace LUT by centroid id j (k slots; absent j -> sentinel 0,
-    # unreachable because codes only name existing centroids)
-    luts = []
-    for s in range(PQ_M):
-        lut = [0] * PQ_K
-        sub_q = qv[s * PQ_D : (s + 1) * PQ_D]
-        for j, vec in cents[s]:
-            lut[j] = _int_sq_dist(sub_q, vec)
-        luts.append(lut)
-    if use_kernel:
-        scored = embeddings.select(
-            F.col("vec_id").cast("long").alias("vec_id"),
-            _adc_exact_kernel_udf(cents, luts, qv)("embedding").alias("ae"),
-        ).select(
-            "vec_id",
-            F.element_at("ae", 1).alias("adc_dist"),
-            F.element_at("ae", 2).alias("exact_dist"),
-        )
-        cand = scored.orderBy("adc_dist", "vec_id").limit(PQ_NCAND)
-        return (
-            cand.orderBy("exact_dist", "vec_id")
-            .limit(PQ_TOPK)
-            .select(
-                "vec_id",
-                F.col("adc_dist").cast("long").alias("adc_dist"),
-                F.col("exact_dist").cast("long").alias("exact_dist"),
-            )
-        )
-    code_cols = [
-        F.expr(_argmin_code_expr(s, cents[s])).alias(f"c{s}")
+    # per-subspace LUT, one entry per centroid slot of cents[s]
+    luts = [
+        [_int_sq_dist(qv[s * PQ_D : (s + 1) * PQ_D], vec) for _, vec in cents[s]]
         for s in range(PQ_M)
     ]
-    adc = (
-        "("
-        + " + ".join(
-            f"element_at({_arr_lit(luts[s])}, c{s} + 1)" for s in range(PQ_M)
-        )
-        + ")"
-    )
-    exact = (
-        f"aggregate(sequence(1, {PQ_DIM}), 0L, (acc, p) ->"
-        f" acc + (cast(element_at(qvec, p) as bigint)"
-        f" - element_at({_arr_lit(qv)}, p))"
-        f" * (cast(element_at(qvec, p) as bigint)"
-        f" - element_at({_arr_lit(qv)}, p)))"
-    )
-    scored = q.select("vec_id", "qvec", *code_cols).selectExpr(
-        "vec_id", "qvec", f"{adc} as adc_dist"
+    scored = embeddings.select(
+        F.col("vec_id").cast("long").alias("vec_id"),
+        _adc_exact_kernel_udf(cents, luts, qv)("embedding").alias("ae"),
+    ).select(
+        "vec_id",
+        F.element_at("ae", 1).alias("adc_dist"),
+        F.element_at("ae", 2).alias("exact_dist"),
     )
     cand = scored.orderBy("adc_dist", "vec_id").limit(PQ_NCAND)
     return (
-        cand.selectExpr("vec_id", "adc_dist", f"{exact} as exact_dist")
-        .orderBy("exact_dist", "vec_id")
+        cand.orderBy("exact_dist", "vec_id")
         .limit(PQ_TOPK)
         .select(
             "vec_id",
@@ -459,6 +381,7 @@ pq_q AS (
   SELECT CAST(vec_id AS BIGINT) AS vec_id,
          {_duck_q_vec('embedding', _duck_q_scale('embedding'))} AS qvec
   FROM embeddings
+  WHERE vec_id IS NOT NULL
 ),
 pq_sub AS (
   SELECT vec_id, s, qvec[s * {PQ_D} + 1 : s * {PQ_D} + {PQ_D}] AS sv

@@ -114,59 +114,57 @@ def test_plan_zero_exchange(spark):
     assert "EvalPython" not in plan
 
 
-def test_fused_kernel_equals_composed(spark):
-    """The gate's fused Arrow kernel arm must be row-identical to the
-    composed relational chain it replaces — on the seeded sf0.001 gate
-    corpus AND on hand frames hitting every rule edge (empty text,
-    embedded newline inside a raw word, poison-doc ids, NULL and
-    negative ids)."""
-    from gpt4ocontentextraction_spark.operators import dedup
+def test_fused_kernel_equals_oracle(spark, tmp_path):
+    """The gate's fused Arrow kernel must equal its DuckDB oracle
+    (C4_FILTERS_SQL) row for row — on the seeded sf0.001 gate corpus AND
+    on a hand frame hitting every rule edge (empty text, embedded newline
+    inside a raw word, poison-doc ids, NULL and negative ids,
+    non-ASCII case and trim)."""
+    import pyarrow as pa
+    from oracle_spec import run_both, write_tables
 
-    def both(docs):
-        # key=repr: a NULL doc_id does not compare with ints
-        a = sorted(
-            map(tuple, curation.c4_filters_fused(docs).collect()), key=repr
-        )
-        b = sorted(
-            map(
-                tuple,
-                curation.c4_filters_fused(
-                    docs, use_kernel=False
-                ).collect(),
-            ),
-            key=repr,
-        )
-        return a, b
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a, b = both(docs)
-    assert a == b and len(a) > 0
+    got, want = run_both(spark, "c4_filters", "/root/testdata/sf0.001")
+    assert got == want and len(got) > 0
 
     words = " ".join(f"w{i}" for i in range(40))  # four reflowed lines
-    hand = spark.createDataFrame(
-        [
-            (0, ""),  # empty text; also the %37 poison id
-            (3, None),  # dropped
-            (44, "word with\nnewline inside plus more words here"),
-            (85, "x " * 40),  # %41==3 poison id, trailing-space words
-            (7, "a"),
-            # NULL and negative ids: the JVM's % takes the dividend's
-            # sign (-38 % 41 is 3 in Python, -38 on the JVM)
-            (None, words),
-            (-1, words),
-            (-4, words),
-            (-38, words),
-            # non-ASCII: 'İ' lower-cases to two code points; U+00A0 is
-            # neither trimmed nor a word separator (line 0 of id 57 is
-            # left unseeded and ends in '.' + U+00A0)
-            (50, "İ " + words + " JAVASCRİPT LOREM İPSUM"),
-            (57, words.replace("w11", "w11.\xa0").replace("w30 ", "w30\xa0")),
-            (52, words + " JAVASCRIPT"),  # upper case is still javascript
-        ],
-        "doc_id long, text string",
+    hand = [
+        (0, ""),  # empty text; also the %37 poison id
+        (3, None),  # dropped
+        (44, "word with\nnewline inside plus more words here"),
+        (85, "x " * 40),  # %41==3 poison id, trailing-space words
+        (7, "a"),
+        # NULL and negative ids: the JVM's % takes the dividend's
+        # sign (-38 % 41 is 3 in Python, -38 on the JVM)
+        (None, words),
+        (-1, words),
+        (-4, words),
+        (-38, words),
+        # non-ASCII: 'İ' lower-cases to two code points; U+00A0 is
+        # neither trimmed nor a word separator (line 0 of id 57 is
+        # left unseeded and ends in '.' + U+00A0)
+        (50, "İ " + words + " JAVASCRİPT LOREM İPSUM"),
+        (57, words.replace("w11", "w11.\xa0").replace("w30 ", "w30\xa0")),
+        (52, words + " JAVASCRIPT"),  # upper case is still javascript
+    ]
+    table = pa.table(
+        {
+            "doc_id": pa.array([r[0] for r in hand], pa.int64()),
+            "text": pa.array([r[1] for r in hand], pa.string()),
+        }
     )
-    a, b = both(hand)
-    assert a == b and len(a) == 11
+    got, want = run_both(
+        spark, "c4_filters", write_tables(tmp_path, {"documents": table})
+    )
+    assert got == want and len(got) == 11
+    cols = ("cleaned", "doc_id", "keep", "n_js", "n_kept", "n_lines",
+            "n_nopunct", "n_short")  # run_both sorts columns by name
+    by_id = {r[1]: dict(zip(cols, r)) for r in got}
+    # the JVM semantics both sides follow: 'İ' lower-cases to 'i' +
+    # U+0307, so JAVASCRİPT / LOREM İPSUM trip no rule ...
+    assert (by_id[50]["keep"], by_id[50]["n_js"]) == (1, 0)
+    # ... and trim strips U+0020 only, so line 0 of id 57 ('w11.' +
+    # U+00A0) is not punctuation-terminated
+    assert by_id[57]["n_nopunct"] == 2
 
 
 def test_fused_plan_zero_exchange(spark):

@@ -1,8 +1,10 @@
-"""The relational (codegen'd vote aggregation) and single-expression
-simhash forms must be value-identical — the expression form is the
-semantics spec, the relational form is the fast path the operators use."""
+"""Dedup operator forms: the SimHash kernels and the MinHash encoder
+against their specs, n-gram span/range semantics on hand cases, and the
+dedup-cluster arms."""
 
 from __future__ import annotations
+
+from oracle_spec import run_both, write_tables
 
 from gpt4ocontentextraction_spark.operators import dedup
 
@@ -10,27 +12,30 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_simhash_forms_equal(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    fast = sorted(
-        tuple(r) for r in dedup.simhash_fingerprints(docs).collect()
-    )
-    spec = sorted(
-        tuple(r) for r in dedup.simhash_fingerprints_expr(docs).collect()
-    )
-    assert fast == spec
-    assert len(fast) == docs.count()
+    """The 32- and 64-bit SimHash kernels equal their DuckDB oracles
+    (SIMHASH_FP_SQL / SIMHASH64_FP_SQL) on the gate corpus, one
+    fingerprint per document."""
+    n_docs = spark.read.parquet(f"{SF}/documents.parquet").count()
+    for name in ("simhash_fingerprints", "simhash64_fingerprints"):
+        got, want = run_both(spark, name, SF)
+        assert got == want
+        assert len(got) == n_docs
 
 
-def test_simhash_empty_text_is_zero(spark):
-    docs = spark.createDataFrame(
-        [(1, ""), (2, "alpha beta")], "doc_id long, text string"
+def test_simhash_empty_text_is_zero(spark, tmp_path):
+    import pyarrow as pa
+
+    table = pa.table(
+        {
+            "doc_id": pa.array([1, 2], pa.int64()),
+            "text": ["", "alpha beta"],
+        }
     )
-    got = {r["doc_id"]: r["simhash"] for r in
-           dedup.simhash_fingerprints(docs).collect()}
-    spec = {r["doc_id"]: r["simhash"] for r in
-            dedup.simhash_fingerprints_expr(docs).collect()}
-    assert got == spec
-    assert got[1] == 0  # all vote sums negative -> every bit 0
+    sf = write_tables(tmp_path, {"documents": table})
+    got, want = run_both(spark, "simhash_fingerprints", sf)
+    assert got == want
+    # all vote sums negative -> every bit 0 (columns sorted: doc_id, simhash)
+    assert dict(got)[1] == 0
 
 
 def test_minhash_vectorized_equals_expr_spec(spark):
@@ -80,7 +85,7 @@ def test_minhash_null_text_parity_with_expr_spec(spark):
 def test_simhash64_all_bits_vary(spark):
     """Fingerprint bits 31 and 63 must be real functions of the text:
     both word polyhashes are 31-bit values, so without the mix hash
-    (_simhash64_bit_expr) those two positions are constant zero and two
+    (_simhash_kernel_udf) those two positions are constant zero and two
     of the four 16-bit bands silently halve their key space."""
     from gpt4ocontentextraction_spark.operators.dedup import (
         simhash64_fingerprints,

@@ -3,25 +3,25 @@ corpus invariants, and the no-window/broadcast plan shape."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from gpt4ocontentextraction_spark.operators import labels as L
 
 SF = "/root/testdata/sf0.001"
 
 
+# label 0: two vectors on +x (mutual LOO centroid IS the other one),
+# label 1: two on +y, and one mislabeled +x vector carrying label 1
+_TINY = [
+    (1, [1.0, 0.0], 0),
+    (2, [0.9, 0.1], 0),
+    (3, [0.0, 1.0], 1),
+    (4, [0.1, 0.9], 1),
+    (5, [0.95, 0.05], 1),  # geometrically label-0: must flag
+]
+
+
 def _tiny(spark):
-    # label 0: two vectors on +x (mutual LOO centroid IS the other one),
-    # label 1: two on +y, and one mislabeled +x vector carrying label 1
-    rows = [
-        (1, [1.0, 0.0], 0),
-        (2, [0.9, 0.1], 0),
-        (3, [0.0, 1.0], 1),
-        (4, [0.1, 0.9], 1),
-        (5, [0.95, 0.05], 1),  # geometrically label-0: must flag
-    ]
     return spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
+        _TINY, "vec_id long, embedding array<float>, label int"
     )
 
 
@@ -80,26 +80,34 @@ def test_label_noise_corpus_invariants(spark):
         assert -1.0001 <= r["rival_cos"] <= 1.0
 
 
-def test_label_noise_kernel_equals_relational(spark):
-    """The Arrow broadcast-centroid kernel and the relational
-    broadcast-cross-join spec twin must agree row-for-row, on the hand
-    frame and the gate corpus."""
-    for df in (_tiny(spark), spark.read.parquet(f"{SF}/embeddings.parquet")):
-        fast = sorted(tuple(r) for r in L.label_noise(df).collect())
-        spec = sorted(
-            tuple(r) for r in L.label_noise(df, use_kernel=False).collect()
-        )
-        assert fast == spec and len(fast) > 0
+def test_label_noise_equals_oracle(spark, tmp_path):
+    """The Arrow broadcast-centroid kernel equals its DuckDB oracle
+    (LABEL_NOISE_SQL) row for row, on the hand frame and the gate
+    corpus."""
+    import pyarrow as pa
+    from oracle_spec import run_both, write_tables
+
+    tiny = pa.table(
+        {
+            "vec_id": pa.array([r[0] for r in _TINY], pa.int64()),
+            "embedding": pa.array(
+                [r[1] for r in _TINY], pa.list_(pa.float32())
+            ),
+            "label": pa.array([r[2] for r in _TINY], pa.int32()),
+        }
+    )
+    for sf in (write_tables(tmp_path, {"embeddings": tiny}), SF):
+        got, want = run_both(spark, "label_noise", sf)
+        assert got == want and len(got) > 0
 
 
 def test_label_plan_shape(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    for df in (L.label_noise(emb, use_kernel=False), L.label_centroids(emb)):
-        p = df._jdf.queryExecution().executedPlan().toString()
-        assert "Window" not in p  # argmax is an integer-key MAX
-        assert "BroadcastNestedLoopJoin" in p or "BroadcastExchange" in p
-        assert "HashAggregate" in p  # map-side combinable aggregates
-        assert "CartesianProduct" not in p  # n*L only ever via broadcast
+    p = L.label_centroids(emb)._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in p  # argmax is an integer-key MAX
+    assert "BroadcastNestedLoopJoin" in p or "BroadcastExchange" in p
+    assert "HashAggregate" in p  # map-side combinable aggregates
+    assert "CartesianProduct" not in p  # n*L only ever via broadcast
     # kernel form: the scoring pass is one Arrow projection — no join,
     # no window, no per-pair expression fold
     pk = (

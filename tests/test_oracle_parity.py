@@ -4,38 +4,17 @@ row multisets exactly. sf0.01 is exercised in the same way by the driver."""
 
 from __future__ import annotations
 
-import math
 import os
 
 import duckdb
 import pytest
+from oracle_spec import rows_to_multiset, run_both
 
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
 ).split()
-
-
-def _canon(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return round(v, 9)
-    # Surface type-representation drift the driver's hash gate would catch:
-    # Decimal vs float compare equal in Python but hash-differ on the driver.
-    import decimal
-
-    if isinstance(v, decimal.Decimal):
-        return ("DECIMAL", str(v))
-    return v
-
-
-def _rows_to_multiset(rows, colnames):
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    return sorted(
-        tuple(_canon(r[i]) for i in order) for r in rows
-    )
 
 
 @pytest.fixture(scope="module")
@@ -108,8 +87,8 @@ def test_all_queries_match_oracles(spark, con):
         if sorted(spark_cols) != sorted(duck_cols):
             failures.append(f"{name}: columns {spark_cols} vs {duck_cols}")
             continue
-        g = _rows_to_multiset(spark_rows, spark_cols)
-        w = _rows_to_multiset(duck_rows, duck_cols)
+        g = rows_to_multiset(spark_rows, spark_cols)
+        w = rows_to_multiset(duck_rows, duck_cols)
         if g != w:
             n_bad = sum(1 for a, b in zip(g, w) if a != b)
             sample = next(((a, b) for a, b in zip(g, w) if a != b), None)
@@ -125,3 +104,14 @@ def test_entry_smoke(spark):
     df = mod.entry(spark)
     assert df.count() > 0
     assert df.columns == ["doc_id", "kind", "text", "media_ref", "offset"]
+
+
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.01", "sf0.1"])
+def test_pack_sequences_rows_in_order(spark, scale):
+    """The pack_sequences gate equals its oracle row for row AND in
+    order (doc_id order) at every fixture scale, pinning this side of a
+    driver-reported hash mismatch."""
+    got, want = run_both(
+        spark, "pack_sequences", f"/root/testdata/{scale}", ordered=True
+    )
+    assert got == want and len(got) > 0
