@@ -418,11 +418,9 @@ def q_page_chunks(spark, sf_dir):
     f" pg_number, file_name, title, content FROM page_chunks",
 )
 def q_page_chunks_fused(spark, sf_dir):
-    """C2 fused into the extraction mapInArrow pass (zero shuffle) — same
-    oracle as the relational page_chunks, so fusion is gate-proven."""
-    from .operators.chunk_fused import page_chunks_fused
-
-    return page_chunks_fused(spanify(_docs(spark, sf_dir)))
+    """C2 over raw spans: extraction and chunking in one Python stage,
+    same oracle as page_chunks."""
+    return _chunk.page_chunks_fused(spanify(_docs(spark, sf_dir)))
 
 
 @register_extra(
@@ -431,11 +429,9 @@ def q_page_chunks_fused(spark, sf_dir):
     f" pg_number, file_name, title, content FROM md_chunks",
 )
 def q_markdown_chunks_fused(spark, sf_dir):
-    """C3 fused into the extraction pass (zero shuffle), oracle-equal to
-    the relational markdown_chunks."""
-    from .operators.chunk_fused import markdown_chunks_fused
-
-    return markdown_chunks_fused(spanify(_docs(spark, sf_dir)))
+    """C3 over raw spans: extraction and chunking in one Python stage,
+    same oracle as markdown_chunks."""
+    return _chunk.markdown_chunks_fused(spanify(_docs(spark, sf_dir)))
 
 
 @register_extra(
@@ -483,15 +479,18 @@ def q_chunk_dispatch(spark, sf_dir):
     """C1: strategy dispatch — page chunking for slide/sheet/image file
     types, markdown for document types (docker/main.py:457-463); file_type
     derived deterministically from doc_id (% 6 over the 6 reference types,
-    so even ids land on page-chunk types)."""
+    so even ids land on page-chunk types). As in the oracle's
+    ``file_name % 2`` routing, a NULL or odd negative id has no type and
+    is chunked by neither branch."""
     from .operators.chunk import chunk_dispatch
 
     extracted = extract(spanify(_docs(spark, sf_dir)))
     typed = extracted.withColumn(
         "file_type",
         F.expr(
-            "element_at(array('pptx','pdf','xlsx','docx','png','html'),"
-            " int(cast(doc_id as bigint) % 6) + 1)"
+            "CASE WHEN cast(doc_id as bigint) % 2 >= 0 THEN"
+            " element_at(array('pptx','pdf','xlsx','docx','png','html'),"
+            " int(pmod(cast(doc_id as bigint), 6)) + 1) END"
         ),
     )
     return chunk_dispatch(typed)
@@ -1715,7 +1714,7 @@ _PAGE_CHUNKS_BASE_SQL = (
 def q_page_chunks_variants(spark, sf_dir):
     """C2 alternate paths in one gate: chunking fused into the extraction
     mapInArrow pass and the whole-pipeline pyscan source, both against the
-    relational page_chunks oracle."""
+    page_chunks oracle."""
     fu = q_page_chunks_fused(spark, sf_dir).withColumn(
         "variant", F.lit("fused")
     )
@@ -1739,7 +1738,7 @@ _MD_CHUNKS_BASE_SQL = (
 )
 def q_markdown_chunks_variants(spark, sf_dir):
     """C3 alternate paths in one gate: fused and pyscan forms against the
-    relational markdown_chunks oracle (separator mode keeps its own gate —
+    markdown_chunks oracle (separator mode keeps its own gate —
     its recurrence has a different oracle)."""
     fu = q_markdown_chunks_fused(spark, sf_dir).withColumn(
         "variant", F.lit("fused")

@@ -16,80 +16,314 @@ Two strategies, as in the reference's `vectorize_markdown` dispatch
   lags one chunk (title and prefix use the pre-update value,
   main.py:521,535-537); content is prefixed
   ``||{pg-1}||\\n{last_heading}\\n`` (main.py:521). The reference's
-  recursive splitter prefers separator boundaries; this engine uses a
-  deterministic fixed-stride window — same size/overlap contract, fully
-  relational (and therefore oracle-checkable).
+  recursive splitter prefers separator boundaries; this mode uses a
+  deterministic fixed-stride window with the same size/overlap contract,
+  and :func:`markdown_chunks_separator` the separator-aligned one.
 
-Both are pure DataFrame ops (window + groupBy + explode(sequence));
-the groupBy shuffles by (doc_id, page/section) which co-partitions with
-every later per-chunk stage. At 100 TB the page/markdown chunkers run
-fused after extraction in the same stage — the shuffle key doc_id is
-already the table's write partitioning.
+One kernel runs all of them: :func:`chunk_batches`, over Arrow batches of
+*extracted* ``(doc_id, spans)`` rows. Precondition: one row per document
+(``extract()`` and the snapshot tables guarantee it), so a document's
+chunks are assembled inside one batch and the operators are a single
+mapInArrow with no shuffle. A document's spans are read in offset order.
+The fused forms (``*_fused`` and the pyscan chunk modes) run the
+extraction kernel and then this one in the same Python stage. The spec is
+the DuckDB oracles (oracles.PAGE_CHUNKS_SQL, MD_CHUNKS_SQL,
+MD_SEP_CHUNKS_SQL), including NULL ``chunk_doc_id``/``file_name`` for a
+NULL ``doc_id``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable, Iterator
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .extract import _bounded, _extract_iter, _flatten
 
 CHUNK_SIZE = 8192  # docker/main.py:50
 CHUNK_OVERLAP = 820  # docker/main.py:51
 _STRIDE = CHUNK_SIZE - CHUNK_OVERLAP
 
+CHUNKS_DDL = (
+    "chunk_doc_id string, chunk_id long, pg_number long, file_name string,"
+    " title string, content string"
+)
+_CHUNK_COLUMNS = [
+    "chunk_doc_id", "chunk_id", "pg_number", "file_name", "title", "content",
+]
 
-def exploded_spans(extracted: DataFrame) -> DataFrame:
-    """(doc_id, spans) -> one row per span."""
-    return extracted.select(
-        "doc_id", F.explode("spans").alias("s")
-    ).select(
-        "doc_id",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
+
+def _doc_starts(a: np.ndarray) -> np.ndarray:
+    return np.r_[True, a[1:] != a[:-1]]
+
+
+def _excl_cumsum_per_doc(flag: np.ndarray, doc: np.ndarray) -> np.ndarray:
+    cs = np.cumsum(flag) - flag
+    return cs - np.maximum.accumulate(np.where(_doc_starts(doc), cs, 0))
+
+
+def _seg_cummax_idx(idx: np.ndarray, seg_starts: np.ndarray) -> np.ndarray:
+    """Running max of `idx` (candidate positions, -1 = none) resetting at
+    each True in `seg_starts`: the vectorized forward-fill behind the
+    reference's sequential last_heading / pg_number carries."""
+    seg = np.cumsum(seg_starts) - 1
+    base = (len(idx) + 1) * seg
+    return np.maximum.accumulate(idx + base) - base
+
+
+def _group_join(
+    text: pa.Array, group_key: np.ndarray
+) -> tuple[np.ndarray, pa.Array]:
+    """Join contiguous groups' texts with newlines (C-side). Returns
+    (start positions, joined array)."""
+    starts = np.flatnonzero(_doc_starts(group_key))
+    bounds = np.r_[starts, len(group_key)].astype(np.int32)
+    joined = pc.binary_join(
+        pa.ListArray.from_arrays(pa.array(bounds), text), "\n"
+    )
+    return starts, joined
+
+
+def _spans(batch: pa.RecordBatch):
+    """(doc_id, doc index, kind, text) of every span, each document's
+    spans in offset order. Ascending offsets (everything ``extract()``
+    writes) skip the sort; otherwise a stable sort, so ties keep array
+    order."""
+    doc_id, _n, d, kind, text, _media, off = _flatten(batch)
+    if ((d[1:] == d[:-1]) & (off[1:] < off[:-1])).any():
+        order = np.lexsort((off, d))
+        d = d[order]
+        kind, text = pc.take(kind, order), pc.take(text, order)
+    return doc_id, d, kind, text
+
+
+def _page_chunks(doc_id, d, kind, text) -> list[pa.Array] | None:
+    """C2: one chunk per page; a page_break ends the page before it."""
+    is_pb = pc.fill_null(pc.equal(kind, "page_break"), False).to_numpy(
+        zero_copy_only=False
+    )
+    page = _excl_cumsum_per_doc(is_pb, d)
+    # a NULL kind is neither a break nor content (kind <> 'page_break')
+    keep = np.flatnonzero(
+        ~is_pb & kind.is_valid().to_numpy(zero_copy_only=False)
+    )
+    if not len(keep):
+        return None
+    d, page = d[keep], page[keep]
+    starts, body = _group_join(
+        pc.take(text, keep), d * (page.max() + 1) + page
+    )
+    pg = pa.array(page[starts] + 1)
+    pg_str = pc.cast(pg, pa.string())
+    doc = pc.take(doc_id, d[starts])
+    return [
+        pc.binary_join_element_wise(doc, pg_str, "-"),
+        pg,
+        pg,
+        doc,
+        pa.nulls(len(starts), pa.string()),
+        pc.binary_join_element_wise("||", pg_str, "||\n", body, ""),
+    ]
+
+
+def _stride_split(content: pa.Array) -> tuple[np.ndarray, pa.Array]:
+    """Fixed windows: piece k of a section is its code points
+    [k * STRIDE, k * STRIDE + CHUNK_SIZE). Returns (section, piece) in
+    (section, k) order."""
+    lens = pc.utf8_length(content).to_numpy(zero_copy_only=False)
+    n = np.maximum(1, np.ceil((lens - CHUNK_OVERLAP) / _STRIDE)).astype(
+        np.int64
+    )
+    sec = np.repeat(np.arange(len(n)), n)
+    k = np.arange(len(sec)) - np.repeat(np.cumsum(n) - n, n)
+    # one C-side slice per distinct k, over only the pieces with that k
+    parts, rows = [], []
+    for kv in np.unique(k):
+        r = np.flatnonzero(k == kv)
+        lo = int(kv) * _STRIDE
+        parts.append(
+            pc.utf8_slice_codeunits(
+                pc.take(content, sec[r]), lo, lo + CHUNK_SIZE
+            )
+        )
+        rows.append(r)
+    return sec, pc.take(
+        pa.concat_arrays(parts), np.argsort(np.concatenate(rows))
     )
 
 
-def _with_page(e: DataFrame) -> DataFrame:
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("offset")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return e.withColumn(
-        "page",
-        F.coalesce(
-            F.sum(F.when(F.col("kind") == "page_break", 1).otherwise(0)).over(w),
-            F.lit(0),
+def _separator_split(content: pa.Array) -> tuple[np.ndarray, pa.Array]:
+    """Separator windows (see :func:`markdown_chunks_separator`). The next
+    start depends on the previous cut, so this is a per-section Python
+    loop of a handful of iterations; 1-based positions mirror the SQL
+    oracle's recursive CTE."""
+    sec, pieces = [], []
+    for s, text in enumerate(content.to_pylist()):
+        start, length = 1, len(text)
+        while True:
+            if length - start + 1 <= CHUNK_SIZE:
+                t = text[start - 1:]
+                cut = length
+            else:
+                tail = text[start - 1 + _STRIDE: start - 1 + CHUNK_SIZE]
+                p2 = tail.rfind("\n\n")
+                if p2 >= 0:
+                    pos = p2 + 1  # end at the pair's 2nd newline
+                else:
+                    pos = tail.rfind("\n")
+                    if pos < 0:
+                        pos = tail.rfind(" ")
+                    if pos < 0:
+                        pos = CHUNK_OVERLAP - 1
+                cut = start + _STRIDE + pos
+                t = text[start - 1: cut]
+            sec.append(s)
+            pieces.append(t)
+            if cut >= length:
+                break
+            start = cut - CHUNK_OVERLAP + 1
+    return np.array(sec, dtype=np.int64), pa.array(pieces, pa.string())
+
+
+def _markdown_chunks(
+    doc_id, d, kind, text, split: Callable
+) -> list[pa.Array]:
+    """C3: '# '/'## ' sections, windows from `split`, then the reference's
+    sequential carries over each document's chunks (module docstring)."""
+    is_sec = pc.fill_null(
+        pc.and_(
+            pc.equal(kind, "heading"),
+            pc.or_(pc.starts_with(text, "# "), pc.starts_with(text, "## ")),
         ),
+        False,
+    ).to_numpy(zero_copy_only=False)
+    sec = _excl_cumsum_per_doc(is_sec, d) + is_sec
+    starts, content = _group_join(text, d * (sec.max() + 1) + sec)
+    piece_sec, t = split(content)
+    chunk_doc = d[starts][piece_sec]
+    nc = len(chunk_doc)
+    chunk_starts = _doc_starts(chunk_doc)
+
+    # h1: flat index of the chunk's last line starting with '# '
+    lines = pc.split_pattern(t, "\n")
+    line_vals = lines.values
+    line_offs = lines.offsets.to_numpy()
+    line_starts = np.zeros(len(line_vals), dtype=bool)
+    line_starts[line_offs[:-1]] = True
+    is_h1 = pc.starts_with(line_vals, "# ").to_numpy(zero_copy_only=False)
+    h1_idx = _seg_cummax_idx(
+        np.where(is_h1, np.arange(len(line_vals)), -1), line_starts
+    )[line_offs[1:] - 1]
+    # upd: the first ||N|| marker, ignored when the chunk starts with '||'
+    m = pc.extract_regex(t, r"\|\|(?P<n>\d+)\|\|")
+    upd_valid = m.is_valid().to_numpy(zero_copy_only=False) & ~pc.starts_with(
+        t, "||"
+    ).to_numpy(zero_copy_only=False)
+    upd = pc.cast(
+        pc.fill_null(pc.struct_field(m, "n"), "0"), pa.int64()
+    ).to_numpy(zero_copy_only=False)
+
+    # carries: last_heading lags one chunk (the pre-update value)
+    pos = np.arange(nc)
+    run_lh = _seg_cummax_idx(np.where(h1_idx >= 0, pos, -1), chunk_starts)
+    prev_lh = np.r_[-1, run_lh[:-1]]
+    prev_lh[chunk_starts] = -1
+    run_pg = _seg_cummax_idx(np.where(upd_valid, pos, -1), chunk_starts)
+    pg = np.where(run_pg >= 0, upd[np.maximum(run_pg, 0)], 1)
+    lh = pc.fill_null(
+        pc.take(
+            line_vals,
+            pa.array(h1_idx[np.maximum(prev_lh, 0)], mask=prev_lh < 0),
+        ),
+        "",
     )
+
+    chunk_id = pa.array(
+        pos - np.maximum.accumulate(np.where(chunk_starts, pos, 0))
+    )
+    doc = pc.take(doc_id, chunk_doc)
+    return [
+        pc.binary_join_element_wise(doc, pc.cast(chunk_id, pa.string()), "-"),
+        chunk_id,
+        pa.array(pg),
+        doc,
+        lh,
+        pc.binary_join_element_wise(
+            "||", pc.cast(pa.array(pg - 1), pa.string()), "||\n", lh, "\n",
+            t, "",
+        ),
+    ]
+
+
+_SPLITS = {"markdown": _stride_split, "separator": _separator_split}
+
+
+def chunk_batches(
+    batches: Iterator[pa.RecordBatch], mode: str
+) -> Iterator[pa.RecordBatch]:
+    """The chunk kernel: extracted (doc_id, spans) Arrow batches, one row
+    per document, to chunk rows (CHUNKS_DDL). ``mode`` is ``page``,
+    ``markdown`` (fixed stride) or ``separator``."""
+    for batch in _bounded(batches):
+        doc_id, d, kind, text = _spans(batch)
+        if not len(d):
+            continue
+        if mode == "page":
+            cols = _page_chunks(doc_id, d, kind, text)
+        else:
+            cols = _markdown_chunks(doc_id, d, kind, text, _SPLITS[mode])
+        if cols is not None:
+            yield pa.RecordBatch.from_arrays(cols, names=_CHUNK_COLUMNS)
+
+
+def _chunked(frame: DataFrame, mode: str, fused: bool = False) -> DataFrame:
+    def chunks(batches):
+        if fused:
+            batches = _extract_iter(batches)
+        return chunk_batches(batches, mode)
+
+    return frame.select("doc_id", "spans").mapInArrow(chunks, CHUNKS_DDL)
 
 
 def page_chunks(extracted: DataFrame) -> DataFrame:
     """One chunk per page: (chunk_doc_id, chunk_id, pg_number, file_name,
     title=NULL, content='||pg||\\n' + page markdown)."""
-    e = _with_page(exploded_spans(extracted))
-    grouped = (
-        e.filter(F.col("kind") != "page_break")
-        .groupBy("doc_id", "page")
-        .agg(
-            F.expr(
-                "array_join(transform(array_sort(collect_list(struct(offset as o,"
-                " text as t))), x -> x.t), '\n')"
-            ).alias("body")
-        )
-    )
-    pg = (F.col("page") + 1).cast("long")
-    return grouped.select(
-        F.concat_ws("-", "doc_id", pg.cast("string")).alias("chunk_doc_id"),
-        pg.alias("chunk_id"),
-        pg.alias("pg_number"),
-        F.col("doc_id").alias("file_name"),
-        F.lit(None).cast("string").alias("title"),
-        F.concat(
-            F.lit("||"), pg.cast("string"), F.lit("||\n"), F.col("body")
-        ).alias("content"),
-    )
+    return _chunked(extracted, "page")
+
+
+def markdown_chunks(extracted: DataFrame) -> DataFrame:
+    """Reference-faithful heading-section chunks (see module docstring)."""
+    return _chunked(extracted, "markdown")
+
+
+def markdown_chunks_separator(extracted: DataFrame) -> DataFrame:
+    """C3 separator mode: windows END at the last paragraph break
+    ``\\n\\n`` (else last newline, else last space, else hard cut) found
+    in the window's CHUNK_OVERLAP tail — the full separator hierarchy of
+    RecursiveCharacterTextSplitter (docker/main.py:63-65: separators
+    ``["\\n\\n", "\\n", " "]``), made deterministic and oracle-checkable.
+    Overlap stays exactly CHUNK_OVERLAP; non-final chunks span
+    (STRIDE, CHUNK_SIZE] chars; a paragraph-break cut ends at the pair's
+    SECOND newline so the next chunk starts at a paragraph head. Sections
+    and carries are shared with the default mode."""
+    return _chunked(extracted, "separator")
+
+
+def page_chunks_fused(documents: DataFrame) -> DataFrame:
+    """Raw documents(doc_id, spans) -> page chunks: the extraction kernel,
+    then the chunk kernel, in one Python stage."""
+    return _chunked(documents, "page", fused=True)
+
+
+def markdown_chunks_fused(documents: DataFrame) -> DataFrame:
+    """Raw documents(doc_id, spans) -> markdown chunks in one Python
+    stage (extraction kernel, then the chunk kernel)."""
+    return _chunked(documents, "markdown", fused=True)
 
 
 PAGE_CHUNK_TYPES = ("pptx", "ppt", "xlsx", "xls", "png", "jpg")
@@ -99,8 +333,7 @@ def chunk_dispatch(extracted: DataFrame, file_type_col: str = "file_type") -> Da
     """C1: strategy dispatch — `page` chunking for slide/sheet/image types,
     `markdown` for document types (docker/main.py:457-463). The input must
     carry a file_type column; rows route to the matching chunker and the
-    results union (each branch prunes to its docs before chunking, so the
-    window/groupBy work only touches its own partition of the corpus)."""
+    results union (each branch prunes to its docs before chunking)."""
     is_page = F.col(file_type_col).isin(*PAGE_CHUNK_TYPES)
     page_part = page_chunks(
         extracted.filter(is_page).drop(file_type_col)
@@ -109,175 +342,6 @@ def chunk_dispatch(extracted: DataFrame, file_type_col: str = "file_type") -> Da
         extracted.filter(~is_page).drop(file_type_col)
     ).withColumn("chunk_type", F.lit("markdown"))
     return page_part.unionByName(md_part)
-
-
-def _sections(extracted: DataFrame) -> DataFrame:
-    """(doc_id, sec, content): heading-delimited sections ('# ' and '## ',
-    heading line kept — MarkdownHeaderTextSplitter with strip_headers=False,
-    docker/main.py:53-61)."""
-    e = exploded_spans(extracted)
-    is_sec = (F.col("kind") == "heading") & (
-        F.col("text").startswith("# ") | F.col("text").startswith("## ")
-    )
-    w_inc = (
-        Window.partitionBy("doc_id")
-        .orderBy("offset")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    e = e.withColumn("sec", F.sum(is_sec.cast("int")).over(w_inc))
-    return e.groupBy("doc_id", "sec").agg(
-        F.expr(
-            "array_join(transform(array_sort(collect_list(struct(offset as o,"
-            " text as t))), x -> x.t), '\n')"
-        ).alias("content"),
-    )
-
-
-def markdown_chunks(extracted: DataFrame) -> DataFrame:
-    """Reference-faithful heading-section chunks (see module docstring)."""
-    sections = _sections(extracted)
-    n_chunks = F.greatest(
-        F.lit(1),
-        F.ceil((F.length("content") - F.lit(CHUNK_OVERLAP)) / F.lit(float(_STRIDE))),
-    ).cast("int")
-    pieces = sections.select(
-        "doc_id",
-        "sec",
-        "content",
-        F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("k"),
-    ).select(
-        "doc_id",
-        "sec",
-        F.col("k").cast("long").alias("k"),
-        F.col("content")
-        .substr(F.col("k") * _STRIDE + 1, F.lit(CHUNK_SIZE))
-        .alias("t"),
-    )
-    return _carry_and_emit(pieces)
-
-
-def markdown_chunks_separator(extracted: DataFrame) -> DataFrame:
-    """C3 separator mode: windows END at the last paragraph break
-    ``\\n\\n`` (else last newline, else last space, else hard cut) found
-    in the window's 820-char overlap tail — the full separator hierarchy
-    of RecursiveCharacterTextSplitter (docker/main.py:63-65: separators
-    ``["\\n\\n", "\\n", " "]``), made deterministic and oracle-checkable.
-    Overlap stays exactly CHUNK_OVERLAP; non-final chunks span
-    (STRIDE, CHUNK_SIZE] chars; a paragraph-break cut ends at the pair's
-    SECOND newline so the next chunk starts at a paragraph head.
-
-    The cut recurrence is sequential per section (next start depends on
-    the previous cut), which Catalyst cannot express — so splitting runs
-    in mapInPandas with a per-SECTION (not per-row-of-text) Python loop;
-    the unit of Python work is a whole multi-KB section, a handful of
-    iterations each. The carry stage stays relational, shared with the
-    default mode."""
-    import pandas as pd
-
-    sections = _sections(extracted)
-
-    def split(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "sec": [], "k": [], "t": []}
-            for doc_id, sec, content in zip(
-                pdf["doc_id"], pdf["sec"], pdf["content"]
-            ):
-                start, k = 1, 0  # 1-based, mirrors the SQL oracle
-                length = len(content)
-                while True:
-                    if length - start + 1 <= CHUNK_SIZE:
-                        t = content[start - 1:]
-                        cut = length
-                    else:
-                        tail = content[
-                            start - 1 + _STRIDE: start - 1 + CHUNK_SIZE
-                        ]
-                        p2 = tail.rfind("\n\n")
-                        if p2 >= 0:
-                            pos = p2 + 1  # end at the pair's 2nd newline
-                        else:
-                            pos = tail.rfind("\n")
-                            if pos < 0:
-                                pos = tail.rfind(" ")
-                            if pos < 0:
-                                pos = CHUNK_OVERLAP - 1
-                        cut = start + _STRIDE + pos
-                        t = content[start - 1: cut]
-                    out["doc_id"].append(doc_id)
-                    out["sec"].append(sec)
-                    out["k"].append(k)
-                    out["t"].append(t)
-                    if cut >= length:
-                        break
-                    start = cut - CHUNK_OVERLAP + 1
-                    k += 1
-            yield pd.DataFrame(out)
-
-    pieces = sections.mapInPandas(
-        split, "doc_id string, sec long, k long, t string"
-    )
-    return _carry_and_emit(pieces)
-
-
-def _carry_and_emit(pieces: DataFrame) -> DataFrame:
-    """The reference's sequential carry loop over chunks (doc_id, sec, k,
-    t), as windowed forward-fills; shared by both splitting modes."""
-    marked = pieces.select(
-        "doc_id",
-        "sec",
-        "k",
-        "t",
-        # last '# ' line of the RAW chunk text (find_last_heading_level_1
-        # over the prefixed text reduces to this, because the prefix's
-        # heading line is the carried value itself)
-        F.try_element_at(
-            F.filter(
-                F.split("t", "\n"), lambda x: x.startswith("# ")
-            ),
-            F.lit(-1),
-        ).alias("h1"),
-        F.when(
-            F.substring("t", 1, 2) != "||",
-            F.nullif(
-                F.regexp_extract("t", r"\|\|(\d+)\|\|", 1), F.lit("")
-            ).cast("long"),
-        ).alias("upd"),
-    )
-    w_prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("sec", "k")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_cur = (
-        Window.partitionBy("doc_id")
-        .orderBy("sec", "k")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    carried = marked.select(
-        "doc_id",
-        "sec",
-        "k",
-        "t",
-        F.coalesce(F.last("h1", ignorenulls=True).over(w_prev), F.lit("")).alias("lh"),
-        F.coalesce(F.last("upd", ignorenulls=True).over(w_cur), F.lit(1)).alias("pg"),
-    )
-    w_chunk = Window.partitionBy("doc_id").orderBy("sec", "k")
-    chunk_id = (F.row_number().over(w_chunk) - 1).cast("long")
-    return carried.select(
-        F.concat_ws("-", "doc_id", chunk_id.cast("string")).alias("chunk_doc_id"),
-        chunk_id.alias("chunk_id"),
-        F.col("pg").cast("long").alias("pg_number"),
-        F.col("doc_id").alias("file_name"),
-        F.col("lh").alias("title"),
-        F.concat(
-            F.lit("||"),
-            (F.col("pg") - 1).cast("string"),
-            F.lit("||\n"),
-            F.col("lh"),
-            F.lit("\n"),
-            F.col("t"),
-        ).alias("content"),
-    )
 
 
 # ---------------------------------------------------------------------------

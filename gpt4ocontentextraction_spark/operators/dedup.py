@@ -1437,7 +1437,9 @@ def dedup_clusters(
     # decreasing until the fixpoint and equal exactly there — no change
     # column, no second join. SUM of zero rows is NULL == NULL: an
     # empty corpus converges immediately rather than crashing the cap.
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
+    # Summed as DECIMAL(38,0): two ids near 2^62 overflow a BIGINT sum.
+    label_sum = F.sum(F.col("label").cast("decimal(38,0)"))
+    prev_sum = labels.agg(label_sum).collect()[0][0]
     converged = False
     for _ in range(max_iters):
         new_labels = cached.track(
@@ -1446,7 +1448,7 @@ def dedup_clusters(
             .agg(F.min("label").alias("label"))
             .select(F.col("id_a").alias("id"), "label")
         )
-        new_sum = new_labels.agg(F.sum("label")).collect()[0][0]
+        new_sum = new_labels.agg(label_sum).collect()[0][0]
         # drop ONLY the pre-iteration label persist; new_labels stays
         # tracked as the next iteration's input / the returned relation
         cached.release_entry(labels)

@@ -70,7 +70,7 @@ def _flatten(batch: pa.RecordBatch):
         doc_id,
         n_docs,
         doc_idx,
-        _str("kind"),
+        values.field("kind"),  # NULL kept: the kernel drops such spans
         _str("text"),
         _str("media_ref"),
         off.to_numpy(zero_copy_only=False).astype(np.int64),

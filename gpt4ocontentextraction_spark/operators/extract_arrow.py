@@ -10,8 +10,10 @@ arbitrary span soup.
 
 Input is one row per span, ``(doc_idx, kind, text, media_ref, offset)``,
 each document's spans contiguous; operators/extract.py flattens the nested
-``array<struct>`` column to it (NULL strings as ``''``, NULL offset as 0)
-and rebuilds it after. Total order, no ties (SURVEY.md §7):
+``array<struct>`` column to it (NULL text and media_ref as ``''``, NULL
+offset as 0) and rebuilds it after. A span with a NULL kind is dropped,
+as the oracle's step-4 ``kind NOT IN (...)`` filter drops it. Total
+order, no ties (SURVEY.md §7):
 
 1. **Offset sort** within each document.
 2. **Page segmentation.** A ``page_break`` ends the page before it
@@ -105,11 +107,15 @@ def extract_values_arrow(
             np.empty(0, dtype=np.int32),
         )
 
-    # kind -> small-int ids via dictionary encoding (unknown kinds -> text)
+    # kind -> small-int ids via dictionary encoding (unknown kinds -> text;
+    # NULL -> nav: never a page break, rank 0, dropped in step 4)
     dk = pc.dictionary_encode(kind)
     dict_vals = dk.dictionary.to_pylist()
-    lut = np.array([_KID.get(v, KID_TEXT) for v in dict_vals], dtype=np.int8)
-    kid = lut[dk.indices.to_numpy(zero_copy_only=False)]
+    lut = np.array(
+        [_KID.get(v, KID_TEXT) for v in dict_vals] + [_KID["nav"]],
+        dtype=np.int8,
+    )
+    kid = lut[dk.indices.fill_null(len(dict_vals)).to_numpy()]
 
     # steps 1-3: one permutation for offset order + page seg + reading
     # order. Inputs written by this engine (and any sorted table) already

@@ -142,7 +142,10 @@ def _dot_col(a, b):
 
 
 def _cos_col(a, b):
-    return _dot_col(a, b) / (F.sqrt(_dot_col(a, a)) * F.sqrt(_dot_col(b, b)))
+    # a zero-norm side gives NULL, as DuckDB's division by zero does
+    return F.try_divide(
+        _dot_col(a, b), F.sqrt(_dot_col(a, a)) * F.sqrt(_dot_col(b, b))
+    )
 
 
 def _cos_pairs_udf():
@@ -672,8 +675,13 @@ def embedding_neardup_lsh(
     )
     # Verify: ids-only against the bounded broadcast matrix when the
     # corpus fits the budget (the IVF literal-budget dispatch pattern);
-    # per-pair vector join above it.
-    head = vecs.limit(EMB_VERIFY_MATRIX_BUDGET + 1).collect()
+    # per-pair vector join above it. A NULL vec_id never passes
+    # id_a < id_b, so it has no matrix row.
+    head = (
+        vecs.filter(F.col("vec_id").isNotNull())
+        .limit(EMB_VERIFY_MATRIX_BUDGET + 1)
+        .collect()
+    )
     if len(head) <= EMB_VERIFY_MATRIX_BUDGET:
         import numpy as np
 
@@ -1102,7 +1110,8 @@ def ivf_kmeans_topk(
                 acc += x * y
             return acc
 
-        return dot(a, b) / ((dot(a, a) ** 0.5) * (dot(b, b) ** 0.5))
+        den = (dot(a, a) ** 0.5) * (dot(b, b) ** 0.5)
+        return dot(a, b) / den if den else float("-inf")  # NULL: last
 
     probes = sorted(
         cent_list, key=lambda c: (-_pycos(c[1], qv_list), c[0])

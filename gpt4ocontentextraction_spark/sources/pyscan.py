@@ -98,9 +98,9 @@ class SpanExtractDataSource(DataSource):
 
     def schema(self) -> str:
         if self.options.get("mode") in ("page_chunks", "markdown_chunks"):
-            from ..operators.chunk_fused import _CHUNKS_DDL
+            from ..operators.chunk import CHUNKS_DDL
 
-            return _CHUNKS_DDL
+            return CHUNKS_DDL
         return DOCUMENTS_DDL
 
     def reader(self, schema) -> "SpanExtractReader":
@@ -135,7 +135,7 @@ class SpanExtractReader(DataSourceReader):
     def read(self, partition: _FileGroup) -> Iterator:
         import pyarrow.parquet as pq
 
-        from ..operators.extract import _bounded, _extract_batch
+        from ..operators.extract import _extract_iter
 
         def batches():
             for path in partition.files:
@@ -146,17 +146,14 @@ class SpanExtractReader(DataSourceReader):
 
         if self.mode == "raw":
             yield from batches()
-        elif self.mode == "page_chunks":
-            from ..operators.chunk_fused import page_chunks_batches
-
-            yield from page_chunks_batches(_bounded(batches()))
-        elif self.mode == "markdown_chunks":
-            from ..operators.chunk_fused import markdown_chunks_batches
-
-            yield from markdown_chunks_batches(_bounded(batches()))
+        elif self.mode == "extract":
+            yield from _extract_iter(batches())
         else:
-            for batch in _bounded(batches()):
-                yield _extract_batch(batch)
+            from ..operators.chunk import chunk_batches
+
+            yield from chunk_batches(
+                _extract_iter(batches()), self.mode.removesuffix("_chunks")
+            )
 
 
 def register_span_extract(spark: SparkSession) -> None:

@@ -16,7 +16,9 @@ string arithmetic, implemented twice:
 Spec (span i, 0-based, for a document with words = split(text, ' ')):
 - ``n_spans = ceil(len(words) / 6)``; span i covers words[6i .. 6i+5]
 - ``kind = KIND_CYCLE[(i + doc_id) mod 16]`` — a fixed 16-entry cycle that
-  exercises every input kind of the extraction kernel
+  exercises every input kind of the extraction kernel; the modulus is
+  non-negative (Spark ``pmod``) so negative ids index the cycle too, and
+  a NULL id gives a NULL kind
 - ``text = '||i||'`` for page_break spans; the 6-word slice joined by a
   TAB for table_row spans (cells); else the slice joined by a single space
 - ``media_ref = 'media://<doc_id>/<i>'`` for chart/figure spans, else ''
@@ -54,21 +56,24 @@ _KINDS_ARRAY_SQL = "array(" + ", ".join(f"'{k}'" for k in KIND_CYCLE) + ")"
 # Without it, Catalyst's project collapsing re-inlines split() into every
 # use inside the inner lambda, making span generation O(words x spans)
 # per document (measured 125s -> ~2s on the heavy bench input).
+# try_element_at, not element_at: under ANSI, element_at over a literal
+# array of non-NULL strings is typed non-nullable, so a NULL doc_id's NULL
+# index fails in generated code instead of giving a NULL kind.
 _SPANS_EXPR = f"""
 element_at(transform(array(split(text, ' ')), ws ->
   transform(
     sequence(0, int(ceil(size(ws) / 6.0)) - 1),
     i -> named_struct(
-      'kind', element_at({_KINDS_ARRAY_SQL}, int((i + doc_id) % 16) + 1),
+      'kind', try_element_at({_KINDS_ARRAY_SQL}, int(pmod(i + doc_id, 16)) + 1),
       'text',
-        CASE WHEN element_at({_KINDS_ARRAY_SQL}, int((i + doc_id) % 16) + 1) = 'page_break'
+        CASE WHEN try_element_at({_KINDS_ARRAY_SQL}, int(pmod(i + doc_id, 16)) + 1) = 'page_break'
              THEN concat('||', cast(i as string), '||')
-             WHEN element_at({_KINDS_ARRAY_SQL}, int((i + doc_id) % 16) + 1) = 'table_row'
+             WHEN try_element_at({_KINDS_ARRAY_SQL}, int(pmod(i + doc_id, 16)) + 1) = 'table_row'
              THEN array_join(slice(ws, i * 6 + 1, 6), '\t')
              ELSE array_join(slice(ws, i * 6 + 1, 6), ' ')
         END,
       'media_ref',
-        CASE WHEN element_at({_KINDS_ARRAY_SQL}, int((i + doc_id) % 16) + 1)
+        CASE WHEN try_element_at({_KINDS_ARRAY_SQL}, int(pmod(i + doc_id, 16)) + 1)
                   IN ('chart', 'figure')
              THEN concat('media://', cast(doc_id as string), '/', cast(i as string))
              ELSE ''
@@ -120,16 +125,16 @@ spanify_base AS (
 spanified AS (
   SELECT
     doc_id,
-    ({_KINDS_LIST_SQL})[CAST((i + did) % 16 AS BIGINT) + 1] AS kind,
+    ({_KINDS_LIST_SQL})[CAST(((i + did) % 16 + 16) % 16 AS BIGINT) + 1] AS kind,
     CASE
-      WHEN ({_KINDS_LIST_SQL})[CAST((i + did) % 16 AS BIGINT) + 1] = 'page_break'
+      WHEN ({_KINDS_LIST_SQL})[CAST(((i + did) % 16 + 16) % 16 AS BIGINT) + 1] = 'page_break'
       THEN '||' || CAST(i AS VARCHAR) || '||'
-      WHEN ({_KINDS_LIST_SQL})[CAST((i + did) % 16 AS BIGINT) + 1] = 'table_row'
+      WHEN ({_KINDS_LIST_SQL})[CAST(((i + did) % 16 + 16) % 16 AS BIGINT) + 1] = 'table_row'
       THEN array_to_string(ws[i * 6 + 1 : i * 6 + 6], chr(9))
       ELSE array_to_string(ws[i * 6 + 1 : i * 6 + 6], ' ')
     END                                                    AS text,
     CASE
-      WHEN ({_KINDS_LIST_SQL})[CAST((i + did) % 16 AS BIGINT) + 1]
+      WHEN ({_KINDS_LIST_SQL})[CAST(((i + did) % 16 + 16) % 16 AS BIGINT) + 1]
            IN ('chart', 'figure')
       THEN 'media://' || doc_id || '/' || CAST(i AS VARCHAR)
       ELSE ''

@@ -22,10 +22,11 @@ _SCHEMA = pa.schema(
     [pa.field("doc_id", pa.string()), pa.field("spans", pa.list_(_SPAN))]
 )
 
-# NULL span fields read as '' and 0: the contract extract._flatten applies
+# NULL text/media_ref/offset read as '' and 0: the contract extract._flatten
+# applies. A NULL kind stays NULL; the spec's step 4 drops the span.
 _INPUT_CTE = """spanified AS (
   SELECT doc_id,
-    COALESCE(s.kind, '') AS kind,
+    s.kind AS kind,
     COALESCE(s.text, '') AS text,
     COALESCE(s.media_ref, '') AS media_ref,
     COALESCE(s."offset", 0) AS "offset"

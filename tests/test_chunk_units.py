@@ -138,11 +138,30 @@ def _py_sep_cuts(content: str) -> list[str]:
         start = cut - CHUNK_OVERLAP + 1
 
 
+def _paragraphs(word) -> str:
+    """140 paragraphs of varying width separated by \\n\\n; the text
+    after the last pair in each tail holds lone newlines and spaces, so a
+    single-separator implementation would cut elsewhere."""
+    paras = []
+    for i in range(140):
+        words = " ".join(word(i, j) for j in range(40 + (i * 7) % 23))
+        paras.append(words + ("\nline2 of para" if i % 3 == 0 else ""))
+    return "\n\n".join(paras)
+
+
+_EXTRACTED_DDL = (
+    "doc_id string, spans array<struct<kind string, text string,"
+    " media_ref string, offset int>>"
+)
+
+
 def test_separator_mode_prefers_paragraph_breaks(spark):
     """Full hierarchy: a tail containing '\\n\\n' must cut at the LAST
     paragraph break (ending at its second newline), not at a later lone
     newline or space — pinned against a Python reference AND the DuckDB
-    recursive-CTE oracle fragment on the same content."""
+    recursive-CTE oracle fragment on the same content. Positions count
+    code points: the second input puts 'İ', U+00A0 (not a separator) and
+    a non-BMP emoji in every cut window."""
     import duckdb
 
     from gpt4ocontentextraction_spark.oracles import _duck_cut
@@ -150,45 +169,74 @@ def test_separator_mode_prefers_paragraph_breaks(spark):
         markdown_chunks_separator,
     )
 
-    # paragraphs of varying width separated by \n\n; later text after the
-    # last pair in each tail contains lone newlines and spaces, so a
-    # single-separator implementation would cut elsewhere.
-    paras = []
-    for i in range(140):
-        words = " ".join(f"p{i}w{j}" for j in range(40 + (i * 7) % 23))
-        paras.append(words + ("\nline2 of para" if i % 3 == 0 else ""))
-    content = "\n\n".join(paras)
-    assert len(content) > 3 * CHUNK_SIZE and "\n\n" in content[7372:8192]
-
-    expected = _py_sep_cuts(content)
-    assert any(t.endswith("\n\n") for t in expected[:-1])
-
-    # Spark path: wrap the content as one extracted text span
-    extracted = spark.createDataFrame(
-        [("0", [("text", content, "", 0)])],
-        "doc_id string, spans array<struct<kind string, text string,"
-        " media_ref string, offset int>>",
+    ascii_text = _paragraphs(lambda i, j: f"p{i}w{j}")
+    assert "\n\n" in ascii_text[7372:8192]
+    non_ascii = _paragraphs(
+        lambda i, j: f"İ{i}\xa0w{j}\U0001F600" if j % 5 == 0 else f"p{i}w{j}"
     )
-    rows = markdown_chunks_separator(extracted).collect()
-    got = [_raw(r) for r in sorted(rows, key=lambda r: r["chunk_id"])]
-    assert got == expected
+    for c in ("İ", "\xa0", "\U0001F600"):
+        assert c in non_ascii[CHUNK_SIZE:]
+    for content in (ascii_text, non_ascii):
+        assert len(content) > 3 * CHUNK_SIZE
+        expected = _py_sep_cuts(content)
+        assert any(t.endswith("\n\n") for t in expected[:-1])
 
-    # DuckDB recursive-CTE recurrence on the same content
-    con = duckdb.connect()
-    con.execute("CREATE TABLE sections AS SELECT ? AS content", [content])
-    cut = _duck_cut("content", "start_pos")
-    duck = con.execute(f"""
-        WITH RECURSIVE cuts AS (
-          SELECT content, CAST(1 AS BIGINT) AS start_pos, 0 AS k
-          FROM sections
-          UNION ALL
-          SELECT content, {cut} - 819 AS start_pos, k + 1 AS k
-          FROM cuts WHERE length(content) - start_pos + 1 > 8192
+        # Spark path: wrap the content as one extracted text span
+        extracted = spark.createDataFrame(
+            [("0", [("text", content, "", 0)])], _EXTRACTED_DDL
         )
-        SELECT substr(content, start_pos, {cut} - start_pos + 1) AS t
-        FROM cuts ORDER BY k
-    """).fetchall()
-    assert [r[0] for r in duck] == expected
+        rows = markdown_chunks_separator(extracted).collect()
+        got = [_raw(r) for r in sorted(rows, key=lambda r: r["chunk_id"])]
+        assert got == expected
+
+        # DuckDB recursive-CTE recurrence on the same content
+        con = duckdb.connect()
+        con.execute("CREATE TABLE sections AS SELECT ? AS content", [content])
+        cut = _duck_cut("content", "start_pos")
+        duck = con.execute(f"""
+            WITH RECURSIVE cuts AS (
+              SELECT content, CAST(1 AS BIGINT) AS start_pos, 0 AS k
+              FROM sections
+              UNION ALL
+              SELECT content, {cut} - 819 AS start_pos, k + 1 AS k
+              FROM cuts WHERE length(content) - start_pos + 1 > 8192
+            )
+            SELECT substr(content, start_pos, {cut} - start_pos + 1) AS t
+            FROM cuts ORDER BY k
+        """).fetchall()
+        assert [r[0] for r in duck] == expected
+
+
+def test_out_of_offset_order_spans_chunk_like_sorted(spark):
+    """The chunk kernel reads a document's spans in offset order, as the
+    relational form and the oracles do: spans stored out of order chunk
+    exactly like their sorted copy, in every mode."""
+    from gpt4ocontentextraction_spark.operators.chunk import (
+        markdown_chunks_separator,
+    )
+
+    spans = [
+        ("heading", "# Title", "", 0),
+        ("text", "alpha beta", "", 1),
+        ("page_break", "||1||", "", 2),
+        ("heading", "## Sub", "", 3),
+        ("text", "gamma delta\n" * 1500, "", 4),
+        ("page_break", "||2||", "", 5),
+        ("text", "epsilon", "", 6),
+    ]
+    shuffled = [spans[i] for i in (4, 0, 6, 2, 5, 1, 3)]
+
+    def chunks(op, doc_spans):
+        # one batch: the document under test next to a sorted one
+        df = spark.createDataFrame(
+            [("7", doc_spans), ("8", spans)], _EXTRACTED_DDL
+        )
+        return sorted(map(tuple, op(df).collect()))
+
+    for op in (page_chunks, markdown_chunks, markdown_chunks_separator):
+        got = chunks(op, shuffled)
+        assert got == chunks(op, spans), op.__name__
+        assert len(got) > 4
 
 
 def test_window_chunks_overlap_and_coverage(spark):

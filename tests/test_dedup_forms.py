@@ -263,6 +263,29 @@ def test_dedup_clusters_driver_arm_equals_distributed(spark):
     assert any(k == 0 for _, _, k in fast)
 
 
+def test_dedup_clusters_arms_agree_on_large_ids(spark):
+    """Two near-duplicate documents with ids 5e18 and 5e18 + 1: the
+    distributed arm's label-sum convergence check must not overflow
+    (it sums as DECIMAL(38,0)), and both arms label one cluster per id
+    pair (each document and its variant) rooted at the smaller id."""
+    big = 5 * 10**18
+    w = [f"w{i}" for i in range(12)]
+    docs = spark.createDataFrame(
+        [(big, " ".join(w)), (big + 1, " ".join(w[:11] + ["x"]))],
+        "doc_id long, text string",
+    )
+    fast = sorted(tuple(r) for r in dedup.dedup_clusters(docs).collect())
+    slow = sorted(
+        tuple(r)
+        for r in dedup.dedup_clusters(docs, pair_budget=0).collect()
+    )
+    assert fast == slow
+    assert {d for d, _, _ in fast} == {
+        big, big + 1, big + 1_000_000, big + 1_000_001
+    }
+    assert [d for d, _, k in fast if k == 1] == [big]
+
+
 def test_dedup_cut_removes_merged_ranges(spark):
     """Cutting uses the gap-merged ranges: doc 1's whole text lies in
     the single merged interval [0,9] (cleaned -> ''), doc 2 keeps only

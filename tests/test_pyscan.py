@@ -78,7 +78,7 @@ def test_missing_path_raises(spark, tmp_path):
 
 
 def test_chunk_modes_match_fused_operators(spark, spans_dir):
-    from gpt4ocontentextraction_spark.operators.chunk_fused import (
+    from gpt4ocontentextraction_spark.operators.chunk import (
         markdown_chunks_fused,
         page_chunks_fused,
     )
