@@ -1,35 +1,11 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract + BASELINE.md scaling measurement).
+"""Per-query timer: python bench.py [query ...]
 
-Times the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], then measures extraction
-throughput (docs/sec) at the CONTRACT's two parallelism levels — local[8]
-vs local[32], the sandbox stand-in for N vs 4N executors (BASELINE.json
-north_rule: scaling efficiency >= 0.8).
-
-Methodology (fixes the round-1 overhead-dominated measurement):
-- per level, a MIN_SEC-second (default 60 s) steady-state window of
-  back-to-back identical extraction jobs over one materialized, page-cached
-  input; session startup and a full warmup job are excluded and reported
-  separately;
-- levels interleave across rounds and the best window per level is used
-  (this shared host shows up-to-4x external interference; noise only adds
-  time);
-- a pure-compute control (the extraction kernel in a multiprocessing pool
-  on a cache-resident batch) measures the HOST's parallel-scaling ceiling
-  at the same level pairs — on this virtualized box even ideal CPU work
-  stops scaling near ~20 effective cores, so the end-to-end number is also
-  reported relative to that ceiling (a real 4N-executor cluster multiplies
-  memory bandwidth and real cores; this box cannot).
-
-Prints ONE JSON line:
-  {"metric": ..., "value": <total headline sec>, "unit": "sec",
-   "queries": {name: sec}, "sf": ...,
-   "extraction_docs_per_sec": {"local[8]": n, "local[32]": n},
-   "scaling_efficiency": e, "scaling": {...detail...}}
-
-Also refreshes BENCH/BASELINE.md with the measured numbers.
-"""
+Times each HEADLINE query (or each query named) over $SPARK_GRAFT_SF_DIR
+on local[$SPARK_GRAFT_CPUS]: a cold noop-sink write timed from the query's
+construction, release_all(), then a warm one. Prints one JSON line,
+"value" being the sum of cold seconds, and exits; an unknown name exits 2
+before Spark starts. Scaling and plan metrics are perfbench/run.py's."""
 
 from __future__ import annotations
 
@@ -38,120 +14,7 @@ import os
 import sys
 import time
 
-_REPO = os.path.dirname(os.path.abspath(__file__))
-if _REPO not in sys.path:
-    sys.path.insert(0, _REPO)
-
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-SCALING_LEVELS = (8, 32)  # the contract's N vs 4N
-CONTROL_LEVELS = (4, 16)  # second pair for the host-ceiling control
-TILE = int(os.environ.get("SPARK_GRAFT_BENCH_TILE", "60"))
-TEXT_REPEAT = int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "24"))
-MIN_SEC = float(os.environ.get("SPARK_GRAFT_BENCH_MIN_SEC", "60"))
-ROUNDS = int(os.environ.get("SPARK_GRAFT_BENCH_ROUNDS", "3"))
-# Arrow batch sizing: 512 heavy docs ~ 30 MB of spans per batch. Measured
-# on this engine: 2048-doc batches at 32 concurrent tasks blow the JVM heap
-# into GC collapse (27k docs/s), 512 keeps per-task transients small enough
-# to scale (70k docs/s). In production use a bytes-bounded batch policy.
-ARROW_BATCH = int(os.environ.get("SPARK_GRAFT_BENCH_ARROW_BATCH", "512"))
-# Load gate (VERDICT r3 next-round #1): a paired round started while
-# external neighbor load exceeds this 1-min loadavg measures the
-# neighbors, not the engine (noise only ever ADDS time, and it hits the
-# 32-core level ~4x harder than the 8-core one, so a contended pair
-# understates efficiency). Rounds starting above the gate are kept for
-# transparency but excluded from the headline median; the harness waits
-# (bounded) for quiet before each round and re-runs until two clean
-# pairs exist.
-LOAD_GATE = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_GATE", "4"))
-LOAD_WAIT_SEC = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_WAIT_SEC", "900"))
-# Steal gate (r5 finding): this virtualized host's hypervisor steals CPU
-# in bursts (measured: 25-30% steal while 1-min loadavg reads 0.0 —
-# loadavg only sees OUR runqueue, not the neighbor tenants'), which is
-# what produced the phantom 4-9x per-query regressions across rounds
-# (semdedup_k64 4.7 s -> 92 s on identical code). /proc/stat's steal
-# counter is the direct observable: headline queries measured under
-# steal above the gate are re-measured (bounded retries, the
-# cleanest-window attempt is recorded with its steal%), and a scaling
-# round whose measurement windows saw steal above STEAL_CLEAN loses
-# headline eligibility exactly like a loadavg-gated round.
-STEAL_GATE = float(os.environ.get("SPARK_GRAFT_BENCH_STEAL_GATE", "3"))
-STEAL_CLEAN = float(os.environ.get("SPARK_GRAFT_BENCH_STEAL_CLEAN", "8"))
-HEADLINE_RETRIES = int(os.environ.get("SPARK_GRAFT_BENCH_RETRIES", "2"))
-# Canary gate (r5): steal only counts ticks the hypervisor takes from a
-# RUNNABLE vCPU — neighbor-tenant MEMORY-BANDWIDTH pressure slows numpy
-# matmul queries 3-5x while steal reads ~1% (observed: simhash64 4.6 s
-# and 26.8 s in back-to-back windows, both "clean" by load and steal).
-# The canary is a fixed-work numpy matmul (DRAM-resident operands):
-# its elapsed time is a direct sample of deliverable host throughput.
-# A query measured in a window whose canary ran > CANARY_TOL x the
-# best-ever canary time is re-measured (same bounded retries); the
-# fastest attempt is recorded — established harness doctrine: external
-# interference only ever ADDS time, so best-of measures the engine.
-CANARY_TOL = float(os.environ.get("SPARK_GRAFT_BENCH_CANARY_TOL", "1.25"))
-CANARY_WAIT_SEC = float(os.environ.get("SPARK_GRAFT_BENCH_CANARY_WAIT", "240"))
-
-_CANARY_A = None
-_CANARY_BASE = [None]  # best-ever canary sec (self-improving floor)
-
-
-def _canary_sec() -> float | None:
-    """Fixed-work host-throughput sample: a 256x4096 float64 matmul
-    (CPU-bound — sees steal/preemption) plus a 64 MB array reduction
-    (DRAM-streaming — sees neighbor memory-bandwidth pressure, which
-    steal cannot). Best of 3; ~15 ms on a quiet host."""
-    global _CANARY_A
-    try:
-        import numpy as np
-    except ImportError:
-        return None
-    if _CANARY_A is None:
-        rs = np.random.RandomState(0)
-        _CANARY_A = (rs.rand(256, 4096), rs.rand(8 * 1024 * 1024))
-    m, stream = _CANARY_A
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        (m @ m.T).sum()
-        stream.sum()
-        best = min(best, time.perf_counter() - t0)
-    if _CANARY_BASE[0] is None or best < _CANARY_BASE[0]:
-        _CANARY_BASE[0] = best
-    return best
-
-
-def _canary_ratio() -> float | None:
-    """This window's canary time over the best-ever observed (>= 1.0);
-    None when numpy is unavailable."""
-    s = _canary_sec()
-    if s is None or not _CANARY_BASE[0]:
-        return None
-    return s / _CANARY_BASE[0]
-
-
-def _cpu_stat() -> list | None:
-    try:
-        with open("/proc/stat") as f:
-            return list(map(int, f.readline().split()[1:]))
-    except (OSError, ValueError):
-        return None
-
-
-def _steal_pct(a: list | None, b: list | None) -> float | None:
-    """% of CPU time the hypervisor stole between two /proc/stat snaps."""
-    if not a or not b or len(a) < 8 or len(b) < 8:
-        return None
-    d = [y - x for x, y in zip(a, b)]
-    tot = sum(d) or 1
-    return 100.0 * d[7] / tot
-
-
-def _sample_steal(sec: float = 2.0) -> float | None:
-    a = _cpu_stat()
-    if a is None:
-        return None
-    time.sleep(sec)
-    return _steal_pct(a, _cpu_stat())
 
 HEADLINE = (
     "extract_spans",
@@ -221,1130 +84,67 @@ HEADLINE = (
 )
 
 
-def _noop_write(df):
-    df.write.mode("overwrite").format("noop").save()
+def _timed(build) -> float:
+    """Seconds to construct build()'s frame and write it to the noop sink."""
+    t0 = time.perf_counter()
+    build().write.mode("overwrite").format("noop").save()
+    return round(time.perf_counter() - t0, 3)
 
 
-def _tiled_documents(spark, sf_dir: str, tile: int, repeat: int = 1):
-    """Tile the documents table `tile`x with remapped doc_ids and `repeat`x
-    longer texts — same generator data, bigger/heavier, identical across
-    parallelism levels (~1000-word docs at repeat=24, a realistic page
-    count per document)."""
-    from pyspark.sql import functions as F
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    text = (
-        F.concat_ws(" ", F.array_repeat(F.col("text"), repeat))
-        if repeat > 1
-        else F.col("text")
-    )
-    return (
-        d.select(
-            F.explode(F.sequence(F.lit(0), F.lit(tile - 1))).alias("t"),
-            "doc_id",
-            "text",
-        )
-        .select(
-            (F.col("doc_id") + F.col("t") * 1_000_000).alias("doc_id"),
-            text.alias("text"),
-        )
-    )
-
-
-def run_headline(
-    results: dict,
-    steals: dict | None = None,
-    warm: dict | None = None,
-) -> float:
-    from gpt4ocontentextraction_spark.driver_contract import (
-        EXTRA_QUERIES,
-        QUERIES,
-    )
-    from gpt4ocontentextraction_spark.session import get_spark
-
+def run(spark, names, lookup) -> tuple[dict, dict]:
+    """Cold and warm seconds per name, plus hybrid_topk's shared-index pair."""
     from gpt4ocontentextraction_spark.cached import release_all
+    from gpt4ocontentextraction_spark.driver_contract import _pyscan_spans_dir
+    from gpt4ocontentextraction_spark.operators import retrieval
 
-    spark = get_spark("bench-headline", cores=CPUS)
-    # Warm the INPUTS untimed: run 2 of r4 showed the first queries
-    # paying cold page-cache reads and the one-time pyscan gate-cache
-    # build (extract_spans 2.9 -> 6.2 s run-to-run with identical code).
-    # The headline should measure the engine, not OS cache state.
-    for t in ("documents", "embeddings"):
-        try:
-            _noop_write(spark.read.parquet(f"{SF_DIR}/{t}.parquet"))
-        except Exception:
-            pass
-    try:
-        from gpt4ocontentextraction_spark.driver_contract import (
-            _pyscan_spans_dir,
-        )
-
-        _pyscan_spans_dir(spark, SF_DIR)  # build/refresh the gate cache
-    except Exception:
-        pass
-    total = 0.0
-    lookup = {**EXTRA_QUERIES, **QUERIES}
-    if steals is None:
-        steals = {}
-    if warm is None:
-        warm = {}
-    for _ in range(3):  # calibrate the canary's best-ever floor
-        _canary_sec()
-
-    canary_budget = [CANARY_WAIT_SEC]
-
-    def _wait_canary() -> None:
-        """Hold the measurement until the host canary says throughput is
-        near its best-ever (bounded shared budget — proceeds regardless
-        when the budget is spent; the post-measurement canary + steal
-        then decide whether the attempt was contaminated)."""
-        while canary_budget[0] > 0:
-            r = _canary_ratio()
-            if r is None or r <= CANARY_TOL:
-                return
-            step = min(5.0, canary_budget[0])
-            time.sleep(step)
-            canary_budget[0] -= step
-
-    def _measure(fn) -> tuple[float, float | None]:
-        """Time fn() in the cleanest achievable host window. Two
-        contamination signals bound each attempt: hypervisor steal
-        (/proc/stat) and the fixed-work canary run right after the
-        attempt (catches memory-bandwidth contention steal can't see).
-        A contaminated attempt is re-run (bounded); the FASTEST attempt
-        is recorded — interference only ever adds time — along with the
-        steal% observed during that attempt."""
-        best_dt, best_st = None, None
-        for _attempt in range(HEADLINE_RETRIES + 1):
-            _wait_canary()
-            a = _cpu_stat()
-            t0 = time.perf_counter()
-            fn()
-            dt = time.perf_counter() - t0
-            st = _steal_pct(a, _cpu_stat())
-            release_all()  # drop this query's operator-internal persists
-            post = _canary_ratio()
-            if best_dt is None or dt < best_dt:
-                best_dt, best_st = dt, st
-            clean_steal = st is None or st <= STEAL_GATE
-            clean_band = post is None or post <= CANARY_TOL
-            if clean_steal and clean_band:
-                break
-        return best_dt, best_st
-
-    for name in HEADLINE:
-        if name not in lookup:
-            continue
-        # time construction AND materialization: several operators
-        # (hybrid, k-means IVF) do bounded driver-coordinated work in
-        # the builder itself — timing only the final plan would
-        # undercount them.
-        dt, st = _measure(lambda: _noop_write(lookup[name](spark, SF_DIR)))
-        results[name] = round(dt, 3)
-        if st is not None:
-            steals[name] = round(st, 1)
-        total += dt
-        # WARM steady-state: one more timed run of the same query in the
-        # same session. The cold number above includes this query's
-        # one-time plan compilation / whole-stage-codegen JIT / Python
-        # worker spin-up; the warm number is what a sweep serving many
-        # requests pays per call. Recording both ends the recurring
-        # cold-vs-warm attribution hunts (hybrid_topk r4,
-        # embedding_neardup_lsh r5) — the spread IS the JIT cost.
-        try:
-            t0 = time.perf_counter()
-            _noop_write(lookup[name](spark, SF_DIR))
-            warm[name] = round(time.perf_counter() - t0, 3)
-        except Exception:
-            pass
+    # untimed: the first query must not pay one-time reads the others skip
+    for table in ("documents", "embeddings"):
+        _timed(lambda: spark.read.parquet(f"{SF_DIR}/{table}.parquet"))
+    _pyscan_spans_dir(spark, SF_DIR)
+    cold, warm = {}, {}
+    for name in names:
+        cold[name] = _timed(lambda: lookup[name](spark, SF_DIR))
+        release_all()
+        warm[name] = _timed(lambda: lookup[name](spark, SF_DIR))
         release_all()
         if name == "hybrid_topk":
-            # ADVICE r4 shared-index form, measured alongside the honest
-            # cold number (which alone counts toward the headline total):
-            # a sweep serving many queries builds the BM25 score index
-            # once (bm25_index_build) and each hybrid call then skips the
-            # scoring pass (hybrid_topk_warm). Parity of the warm form is
-            # gate-pinned (EXTRA gate hybrid_topk_warm, same oracle).
-            try:
-                from gpt4ocontentextraction_spark.operators import (
-                    retrieval,
-                )
-
-                docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-                t0 = time.perf_counter()
-                ix = retrieval.bm25_index(docs)
-                results["bm25_index_build"] = round(
-                    time.perf_counter() - t0, 3
-                )
-                # _measure's release_all() does not drop ix: the caller
-                # owns a bm25_index persist by contract (untracked).
-                dt, st = _measure(
-                    lambda: _noop_write(
-                        retrieval.hybrid_rrf_topk(
-                            spark, SF_DIR, bm25_scores=ix
-                        )
-                    )
-                )
-                results["hybrid_topk_warm"] = round(dt, 3)
-                if st is not None:
-                    steals["hybrid_topk_warm"] = round(st, 1)
-                ix.unpersist(blocking=False)
-            except Exception:
-                pass
+            # the BM25 score index built once, then a hybrid call that reuses it
+            t0 = time.perf_counter()
+            ix = retrieval.bm25_index(spark.read.parquet(f"{SF_DIR}/documents.parquet"))
+            cold["bm25_index_build"] = round(time.perf_counter() - t0, 3)
+            cold["hybrid_topk_warm"] = _timed(
+                lambda: retrieval.hybrid_rrf_topk(spark, SF_DIR, bm25_scores=ix)
+            )
+            ix.unpersist(blocking=False)  # the caller owns this persist
             release_all()
-    spark.stop()
-    return total
+    return cold, warm
 
 
-def _level_conf(cores: int) -> dict:
-    """Faithful N-core emulation: pre-touched fixed heap (lazy heap pages
-    are host-level faults on this virtualized box — measured 6x slowdown
-    without AlwaysPreTouch at 32 cores) and JVM pools sized for N CPUs."""
-    return {
-        "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH),
-        "spark.ui.showConsoleProgress": "false",
-        # file-packing otherwise picks task counts that aren't multiples
-        # of the core count (observed: 9 tasks at local[8] = a full second
-        # wave for one straggler task; 32 at local[32]) — pin scan
-        # parallelism to 4 clean waves at every level so the two levels
-        # run the same layout relative to their size.
-        "spark.sql.files.minPartitionNum": str(4 * cores),
-        "spark.driver.extraJavaOptions": (
-            f"-Xms14g -XX:+AlwaysPreTouch -XX:ActiveProcessorCount={cores}"
-        ),
-    }
-
-
-def _steady_window(pipeline, n_docs: int, min_sec: float):
-    """Back-to-back identical jobs for >= min_sec; returns
-    (docs_per_sec, jobs, elapsed_sec)."""
-    done = 0
-    t0 = time.perf_counter()
-    while True:
-        _noop_write(pipeline)
-        done += n_docs
-        elapsed = time.perf_counter() - t0
-        if elapsed >= min_sec:
-            return done / elapsed, done // n_docs, elapsed
-
-
-def _measure_level(cores: int, spans_dir: str, min_sec: float) -> None:
-    """Subprocess entry: ONE level's steady-state measurement in a FRESH
-    JVM (in-process session restarts reuse the first JVM, silently
-    dropping per-level -Xms/AlwaysPreTouch/ActiveProcessorCount — measured
-    as a large scaling artifact). Prints one JSON line.
-
-    Besides the full pipeline, two stripped probes run in the SAME
-    process/window so the per-job cost decomposes within one interference
-    regime: scan-only (parquet decode -> noop, pure JVM) and an identity
-    mapInArrow (scan + the full Arrow IPC round trip through the Python
-    workers, zero kernel work). full = scan + IPC + kernel."""
-    from gpt4ocontentextraction_spark.operators.extract import extract
+def main(names: list[str]) -> int:
+    from gpt4ocontentextraction_spark.driver_contract import EXTRA_QUERIES, QUERIES
     from gpt4ocontentextraction_spark.session import get_spark
 
-    t_start = time.perf_counter()
-    spark = get_spark(
-        f"bench-scale-{cores}", cores=cores, extra_conf=_level_conf(cores)
-    )
-    spans = spark.read.parquet(spans_dir)
-    n_docs = spans.count()
-    pipeline = extract(spans)
-    startup = time.perf_counter() - t_start
-    t_warm = time.perf_counter()
-    _noop_write(pipeline)  # warmup job: spawn workers, JIT, page cache
-    warmup = time.perf_counter() - t_warm
-    rate, jobs, elapsed = _steady_window(pipeline, n_docs, min_sec)
-
-    # fused Python-native scan+extract (sources/pyscan.py): same kernel,
-    # same input files, but parquet decode runs IN the Python worker and
-    # input bytes never cross JVM->Python — the engine's answer to the
-    # non-scaling IPC term the decomposition below exposes.
-    from gpt4ocontentextraction_spark.sources.pyscan import extract_scan
-
-    fused = extract_scan(spark, spans_dir, partitions=4 * cores)
-    _noop_write(fused)  # warm the fused path's workers
-    fused_rate, _, _ = _steady_window(fused, n_docs, min_sec)
-
-    # TERMINAL file->file job (operators/extract_files.py): the pure
-    # 100-TB extraction-job shape — python workers read the parquet
-    # split, run the kernel, and WRITE the output parquet; no document
-    # bytes ever cross a JVM boundary in either direction (the fused
-    # source above still ships the OUTPUT spans JVM-ward once, which the
-    # decomposition shows is the dominant non-scaling term left). Output
-    # goes to tmpfs: on a real cluster the sink is object storage whose
-    # aggregate bandwidth scales with executors, while this sandbox's
-    # single local disk does not — writing it there would charge the
-    # engine for a non-scaling resource the production target doesn't
-    # have. Each steady-window job overwrites the same output files
-    # (rename-into-place), like back-to-back runs of one partition.
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    from gpt4ocontentextraction_spark.operators.extract_files import (
-        extract_parquet_files,
-    )
-
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    files_out = _tempfile.mkdtemp(prefix="bench_files_", dir=shm)
+    lookup = {**EXTRA_QUERIES, **QUERIES}
+    names = names or list(HEADLINE)
+    unknown = [n for n in names if n not in lookup]
+    if unknown:
+        print(f"unknown query: {' '.join(unknown)}", file=sys.stderr)
+        return 2
+    spark = get_spark("bench-headline")
     try:
-        term = extract_parquet_files(spark, spans_dir, files_out)
-        _noop_write(term)  # warm (and first full write pass)
-        files_rate, _, _ = _steady_window(term, n_docs, min_sec)
+        cold, warm = run(spark, names, lookup)
+        print(json.dumps({
+            "metric": "headline_queries_total",
+            "value": round(sum(cold[n] for n in names), 3),
+            "unit": "sec",
+            "queries": cold,
+            "queries_warm": warm,
+            "sf": SF_DIR.rstrip("/").rsplit("sf", 1)[-1],
+        }), flush=True)
     finally:
-        _shutil.rmtree(files_out, ignore_errors=True)
-
-    def _identity(it):
-        yield from it
-
-    ident = spans.mapInArrow(_identity, spans.schema)
-    probe_sec = max(8.0, min_sec / 4)
-    _noop_write(spans)
-    scan_rate, _, _ = _steady_window(spans, n_docs, probe_sec)
-    _noop_write(ident)
-    ident_rate, _, _ = _steady_window(ident, n_docs, probe_sec)
-    spark.stop()
-    print(
-        json.dumps(
-            {
-                "cores": cores,
-                "n_docs": n_docs,
-                "docs_per_sec": rate,
-                "fused_docs_per_sec": round(fused_rate),
-                "files_docs_per_sec": round(files_rate),
-                "scan_docs_per_sec": round(scan_rate),
-                "ident_docs_per_sec": round(ident_rate),
-                "startup_sec": round(startup, 1),
-                "warmup_sec": round(warmup, 1),
-                "window_sec": round(elapsed, 1),
-                "jobs": jobs,
-            }
-        )
-    )
-
-
-def _measure_level_subprocess(cores: int, spans_dir: str) -> dict | None:
-    """None on timeout/crash: under extreme external host contention a
-    local task can wedge permanently (observed: idle JVM, zero progress).
-    The caller just loses that round's sample for the level."""
-    import subprocess
-
-    try:
-        out = subprocess.run(
-            [
-                sys.executable,
-                os.path.abspath(__file__),
-                "--measure-level",
-                str(cores),
-                spans_dir,
-                str(MIN_SEC),
-            ],
-            capture_output=True,
-            text=True,
-            check=True,
-            timeout=MIN_SEC * 8 + 180,
-        )
-        return json.loads(out.stdout.strip().splitlines()[-1])
-    except (subprocess.TimeoutExpired, subprocess.CalledProcessError):
-        return None
-
-
-def run_scaling() -> dict:
-    """Same extraction job, same materialized spans input, the contract's
-    two parallelism levels (local[8] vs local[32]). Per level: a fresh
-    subprocess/JVM, one full warmup job (workers, JIT, page cache —
-    excluded, reported as warmup_sec along with session startup), then a
-    >= MIN_SEC steady-state window of back-to-back jobs; throughput =
-    docs processed / window. Levels interleave across ROUNDS and the best
-    window per level is used (external interference on this shared host
-    only ever adds time)."""
-    import tempfile
-
-    from gpt4ocontentextraction_spark.session import get_spark
-    from gpt4ocontentextraction_spark.spanify import spanify
-
-    for _ in range(3):  # calibrate the canary's best-ever floor
-        _canary_sec()
-
-    tmp = tempfile.mkdtemp(prefix="bench_spans_")
-    spans_dir = os.path.join(tmp, "spans")
-
-    # materialize the spans table once (the engine's real input shape —
-    # spanify is test-harness input synthesis, not engine work).
-    spark = get_spark(
-        "bench-prep", cores=CPUS, extra_conf=_level_conf(CPUS)
-    )
-    docs = _tiled_documents(spark, SF_DIR, TILE, TEXT_REPEAT)
-    spanify(docs).repartition(256).write.mode("overwrite").parquet(spans_dir)
-    spark.stop()
-
-    best: dict[int, float] = {c: 0.0 for c in SCALING_LEVELS}
-    best_fused: dict[int, float] = {c: 0.0 for c in SCALING_LEVELS}
-    best_files: dict[int, float] = {c: 0.0 for c in SCALING_LEVELS}
-    best_m: dict[int, dict] = {}
-    overhead: dict[int, dict] = {}
-    rounds: list[dict[int, float]] = []
-    rounds_fused: list[dict[int, float]] = []
-    rounds_files: list[dict[int, float]] = []
-    n_docs = None
-    round_ceilings: list[float] = []
-    round_loads: list[float] = []
-    # max hypervisor-steal% observed across this round's measurement
-    # windows (both levels) — None when /proc/stat is unreadable
-    round_steals: list[float | None] = []
-    # Shared wait budget across the whole run: before each paired round
-    # the harness polls 1-min loadavg until it drops below LOAD_GATE or
-    # the budget is spent (it then proceeds anyway and the round is just
-    # marked dirty — the run always terminates with SOME measurement).
-    wait_budget = [LOAD_WAIT_SEC]
-
-    def _busy_cores(sample_sec: float = 2.0) -> float:
-        """Instantaneous host busy-ness in CORES from two /proc/stat
-        reads. The 1-min loadavg needs ~2-3 idle minutes to decay below
-        the gate after each measurement round (the bench ITSELF pushes
-        it past 30), so gating on loadavg alone would mark genuinely
-        idle windows dirty and burn the wait budget on our own residue;
-        a 2 s busy sample sees only CURRENT external activity."""
-        def _snap():
-            with open("/proc/stat") as f:
-                parts = f.readline().split()[1:]
-            vals = [int(x) for x in parts]
-            idle = vals[3] + (vals[4] if len(vals) > 4 else 0)
-            return sum(vals), idle
-
-        t0, i0 = _snap()
-        time.sleep(sample_sec)
-        t1, i1 = _snap()
-        dt = max(t1 - t0, 1)
-        ncpu = os.cpu_count() or 1
-        return ncpu * (1.0 - (i1 - i0) / dt)
-
-    def _wait_for_quiet() -> float:
-        """Returns the effective start load: min(1-min loadavg, busy
-        cores) — quiet means EITHER is below the gate (a decayed-but-
-        idle box passes on busy; a briefly-idle-but-contended box is
-        caught by loadavg next round). Also waits out hypervisor-steal
-        bursts (invisible to loadavg — see STEAL_GATE): a round started
-        mid-burst would measure the neighbor tenants, not the engine."""
-        def _dirty() -> bool:
-            nonlocal load
-            load = min(os.getloadavg()[0], _busy_cores())
-            if load > LOAD_GATE:
-                return True
-            st = _sample_steal()
-            if st is not None and st > STEAL_GATE:
-                return True
-            r = _canary_ratio()  # bandwidth contention (see CANARY_TOL)
-            return r is not None and r > CANARY_TOL
-
-        load = 0.0
-        while _dirty() and wait_budget[0] > 0:
-            step = min(30.0, wait_budget[0])
-            time.sleep(step)
-            wait_budget[0] -= step
-        return load
-
-    def _one_round() -> None:
-        nonlocal n_docs
-        # 1-min load BEFORE this round starts: external neighbor activity
-        # on this shared host (the engine contributes ~0 at round start
-        # because the previous JVM has exited). Rounds starting above
-        # LOAD_GATE are excluded from the headline median below.
-        round_loads.append(round(_wait_for_quiet(), 1))
-        this_round: dict[int, float] = {}
-        this_round_fused: dict[int, float] = {}
-        this_round_files: dict[int, float] = {}
-        steal_seen: float | None = None
-        for cores in SCALING_LEVELS:
-            snap0 = _cpu_stat()
-            m = _measure_level_subprocess(cores, spans_dir)
-            st = _steal_pct(snap0, _cpu_stat())
-            if st is not None:
-                steal_seen = st if steal_seen is None else max(steal_seen, st)
-            if m is None:
-                continue
-            n_docs = m["n_docs"]
-            this_round[cores] = m["docs_per_sec"]
-            this_round_fused[cores] = m.get("fused_docs_per_sec", 0)
-            this_round_files[cores] = m.get("files_docs_per_sec", 0)
-            best_fused[cores] = max(best_fused[cores], this_round_fused[cores])
-            best_files[cores] = max(best_files[cores], this_round_files[cores])
-            if m["docs_per_sec"] > best[cores]:
-                best[cores] = m["docs_per_sec"]
-                best_m[cores] = m
-            prev = overhead.get(cores)
-            cur = {k: m[k] for k in ("startup_sec", "warmup_sec", "window_sec", "jobs")}
-            if prev is None or cur["startup_sec"] < prev["startup_sec"]:
-                overhead[cores] = cur
-        rounds.append(this_round)
-        rounds_fused.append(this_round_fused)
-        rounds_files.append(this_round_files)
-        round_steals.append(
-            None if steal_seen is None else round(steal_seen, 1)
-        )
-        # host pure-compute ceiling measured INSIDE the same interference
-        # window as this round's two levels: external neighbor load hits
-        # the hi level ~4x harder than the lo level, so an engine/ceiling
-        # ratio is only meaningful when both come from the same window.
-        round_ceilings.append(
-            _kernel_scaling(spans_dir, SCALING_LEVELS)["efficiency"]
-        )
-
-    def _round_clean(ld: float, st: float | None) -> bool:
-        """Headline eligibility: quiet start AND no hypervisor-steal
-        burst above STEAL_CLEAN during either level's window (steal is
-        invisible to loadavg; a pre-steal-gate round recorded None and
-        keeps its load-only eligibility)."""
-        return ld < LOAD_GATE and (st is None or st <= STEAL_CLEAN)
-
-    def _clean_pairs() -> int:
-        """Complete pairs whose start load was below the gate."""
-        lo_, hi_ = SCALING_LEVELS
-        return sum(
-            1
-            for r, ld, st_ in zip(rounds, round_loads, round_steals)
-            if r.get(lo_, 0) > 0
-            and r.get(hi_, 0) > 0
-            and _round_clean(ld, st_)
-        )
-
-    for _round in range(ROUNDS):
-        _one_round()
-
-    # a wedged level costs its round's PAIR, and a contended start costs
-    # the round its headline eligibility; keep adding rounds (bounded)
-    # until two CLEAN pairs exist (each with its own same-window ceiling,
-    # keeping the rounds/ceilings lists aligned).
-    for _extra in range(3):
-        if _clean_pairs() >= 2:
-            break
-        _one_round()
-
-    kernel_primary = _kernel_scaling(spans_dir, SCALING_LEVELS)
-    kernel_control = _kernel_scaling(spans_dir, CONTROL_LEVELS)
-
-    import shutil
-
-    shutil.rmtree(tmp, ignore_errors=True)
-    out = {f"local[{c}]": round(best[c], 1) for c in SCALING_LEVELS}
-    lo, hi = SCALING_LEVELS
-    # efficiency from PAIRED same-round measurements (the two levels run
-    # back-to-back inside one interference window), best complete round —
-    # a cross-round best-of ratio would mix a quiet lo-window with a noisy
-    # hi-window and mis-state the engine
-    # headline = MEDIAN of the paired ratios: best-of a RATIO would select
-    # the round whose lo-window happened to be relatively noisier than its
-    # hi-window, biasing efficiency upward (best-of is only sound for
-    # throughput, where noise strictly adds time to one number). The max
-    # is kept as a supplementary "quietest window" figure. Each paired
-    # ratio is also divided by ITS OWN round's host ceiling — same-window
-    # engine-vs-host attribution.
-    paired: list[float] = []
-    paired_clean: list[float] = []
-    paired_fused: list[float] = []
-    paired_fused_clean: list[float] = []
-    paired_files: list[float] = []
-    paired_files_clean: list[float] = []
-    paired_vs_ceiling: list[float] = []
-    fused_vs_ceiling: list[float] = []
-    files_vs_ceiling: list[float] = []
-    for r, rf, rt, ceil_r, ld, st_ in zip(
-        rounds, rounds_fused, rounds_files, round_ceilings, round_loads,
-        round_steals,
-    ):
-        clean = _round_clean(ld, st_)
-        if r.get(lo, 0) > 0 and r.get(hi, 0) > 0:
-            e = (r[hi] / r[lo]) / (hi / lo)
-            paired.append(e)
-            if clean:
-                paired_clean.append(e)
-            if ceil_r > 0:
-                paired_vs_ceiling.append(e / ceil_r)
-        if rf.get(lo, 0) > 0 and rf.get(hi, 0) > 0:
-            ef = (rf[hi] / rf[lo]) / (hi / lo)
-            paired_fused.append(ef)
-            if clean:
-                paired_fused_clean.append(ef)
-            if ceil_r > 0:
-                fused_vs_ceiling.append(ef / ceil_r)
-        if rt.get(lo, 0) > 0 and rt.get(hi, 0) > 0:
-            et = (rt[hi] / rt[lo]) / (hi / lo)
-            paired_files.append(et)
-            if clean:
-                paired_files_clean.append(et)
-            if ceil_r > 0:
-                files_vs_ceiling.append(et / ceil_r)
-    import statistics
-
-    # headline median over CLEAN pairs when any exist (the load gate's
-    # whole point); all pairs stay recorded for transparency.
-    eff_pool = paired_clean or paired
-    eff_fused_pool = paired_fused_clean or paired_fused
-    eff_files_pool = paired_files_clean or paired_files
-    if eff_pool:
-        eff = statistics.median(eff_pool)
-        eff_best = max(eff_pool)
-    elif best[lo] > 0 and best[hi] > 0:
-        eff = eff_best = (best[hi] / best[lo]) / (hi / lo)
-    else:
-        eff = eff_best = 0.0
-    if eff_fused_pool:
-        eff_fused = statistics.median(eff_fused_pool)
-        eff_fused_best = max(eff_fused_pool)
-    elif best_fused[lo] > 0 and best_fused[hi] > 0:
-        eff_fused = eff_fused_best = (
-            best_fused[hi] / best_fused[lo]
-        ) / (hi / lo)
-    else:
-        eff_fused = eff_fused_best = 0.0
-    if eff_files_pool:
-        eff_files = statistics.median(eff_files_pool)
-        eff_files_best = max(eff_files_pool)
-    elif best_files[lo] > 0 and best_files[hi] > 0:
-        eff_files = eff_files_best = (
-            best_files[hi] / best_files[lo]
-        ) / (hi / lo)
-    else:
-        eff_files = eff_files_best = 0.0
-    ceiling = kernel_primary["efficiency"]
-    # per-job cost decomposition from each level's best window (the scan /
-    # ident probes run in the SAME subprocess/window as that level's full
-    # measurement): full = scan(JVM) + Arrow-IPC round trip + kernel.
-    decomp = {}
-    for cores, m in best_m.items():
-        if not m.get("scan_docs_per_sec") or not m.get("ident_docs_per_sec"):
-            continue
-        t_full = n_docs / m["docs_per_sec"]
-        t_scan = n_docs / m["scan_docs_per_sec"]
-        t_ident = n_docs / m["ident_docs_per_sec"]
-        decomp[f"local[{cores}]"] = {
-            "job_sec_full": round(t_full, 2),
-            "job_sec_scan_jvm": round(t_scan, 2),
-            "job_sec_arrow_ipc": round(t_ident - t_scan, 2),
-            "job_sec_python_kernel": round(t_full - t_ident, 2),
-        }
-    component_eff = {}
-    lo_d = decomp.get(f"local[{SCALING_LEVELS[0]}]")
-    hi_d = decomp.get(f"local[{SCALING_LEVELS[1]}]")
-    if lo_d and hi_d:
-        ratio = SCALING_LEVELS[1] / SCALING_LEVELS[0]
-        for k in (
-            "job_sec_scan_jvm",
-            "job_sec_arrow_ipc",
-            "job_sec_python_kernel",
-        ):
-            if hi_d[k] > 0 and lo_d[k] > 0:
-                component_eff[k.replace("job_sec_", "")] = round(
-                    (lo_d[k] / hi_d[k]) / ratio, 3
-                )
-    return {
-        "n_docs_per_job": n_docs,
-        "docs_per_sec": out,
-        "efficiency": round(eff, 3),
-        "efficiency_quietest_window": round(eff_best, 3),
-        "per_round_efficiency": [round(e, 3) for e in paired],
-        "load_gate": LOAD_GATE,
-        "clean_pairs": len(paired_clean),
-        "per_round_efficiency_clean": [round(e, 3) for e in paired_clean],
-        "fused_per_round_efficiency_clean": [
-            round(e, 3) for e in paired_fused_clean
-        ],
-        "fused_docs_per_sec": {
-            f"local[{c}]": round(best_fused[c], 1) for c in SCALING_LEVELS
-        },
-        "fused_efficiency": round(eff_fused, 3),
-        "fused_efficiency_quietest_window": round(eff_fused_best, 3),
-        "fused_per_round_efficiency": [round(e, 3) for e in paired_fused],
-        "files_docs_per_sec": {
-            f"local[{c}]": round(best_files[c], 1) for c in SCALING_LEVELS
-        },
-        "files_efficiency": round(eff_files, 3),
-        "files_efficiency_quietest_window": round(eff_files_best, 3),
-        "files_per_round_efficiency": [round(e, 3) for e in paired_files],
-        "files_per_round_efficiency_clean": [
-            round(e, 3) for e in paired_files_clean
-        ],
-        "levels": list(SCALING_LEVELS),
-        "steady_state_sec_per_level": MIN_SEC,
-        "overhead": {f"local[{c}]": v for c, v in overhead.items()},
-        "decomposition": decomp,
-        "component_scaling_efficiency": component_eff,
-        "host_ceiling_same_levels": kernel_primary,
-        "host_ceiling_4_16": kernel_control,
-        "per_round_host_ceiling": [round(c, 3) for c in round_ceilings],
-        "per_round_start_load": round_loads,
-        # max hypervisor steal% across each round's two level windows —
-        # rounds above STEAL_CLEAN lose headline eligibility like
-        # load-gated rounds (loadavg cannot see neighbor-tenant steal)
-        "per_round_steal_pct": round_steals,
-        "steal_clean_gate": STEAL_CLEAN,
-        # same-window attribution: each round's engine efficiency divided
-        # by that round's own host ceiling, median across rounds. The
-        # cross-window ratio (final ceiling vs median efficiency) is kept
-        # for continuity with earlier rounds.
-        "efficiency_vs_host_ceiling": (
-            round(statistics.median(paired_vs_ceiling), 3)
-            if paired_vs_ceiling
-            else (round(eff / ceiling, 3) if ceiling else None)
-        ),
-        "fused_efficiency_vs_host_ceiling": (
-            round(statistics.median(fused_vs_ceiling), 3)
-            if fused_vs_ceiling
-            else None
-        ),
-        "files_efficiency_vs_host_ceiling": (
-            round(statistics.median(files_vs_ceiling), 3)
-            if files_vs_ceiling
-            else None
-        ),
-        "per_round_efficiency_vs_host_ceiling": [
-            round(x, 3) for x in paired_vs_ceiling
-        ],
-    }
-
-
-def _kernel_scaling(spans_dir: str, levels: tuple[int, int]) -> dict:
-    """The host's parallel-scaling ceiling: the extraction kernel alone in
-    a multiprocessing pool on a CACHE-RESIDENT batch — no Spark, no IPC,
-    no DRAM streaming. No end-to-end job can scale better than this pure
-    compute does on the same box; the gap between this and 1.0 is the
-    host's virtualization/oversubscription tax, not engine overhead."""
-    import glob
-    import multiprocessing as mp
-
-    f = sorted(glob.glob(os.path.join(spans_dir, "*.parquet")))[0]
-    lo, hi = levels
-    out = {}
-    ctx = mp.get_context("spawn")
-    for procs in (lo, hi):
-        with ctx.Pool(procs, initializer=_kern_init, initargs=(f,)) as pool:
-            pool.map(_kern_task, range(procs))  # warm
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.perf_counter()
-                pool.map(_kern_task, range(8 * hi))
-                best = min(best, time.perf_counter() - t0)
-        out[procs] = (8 * hi) / best
-    return {
-        "levels": list(levels),
-        "batches_per_sec": {f"{p}proc": round(v, 2) for p, v in out.items()},
-        "efficiency": round((out[hi] / out[lo]) / (hi / lo), 3),
-    }
-
-
-_KERN_BATCH = None
-
-
-def _kern_init(path: str) -> None:
-    global _KERN_BATCH
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(path).slice(0, 300)  # cache-resident slice:
-    # measures compute scaling, not DRAM bandwidth
-    _KERN_BATCH = t.combine_chunks().to_batches()[0]
-
-
-def _kern_task(_i: int) -> int:
-    import sys
-
-    if _REPO not in sys.path:
-        sys.path.insert(0, _REPO)
-    from gpt4ocontentextraction_spark.operators.extract import _extract_batch
-
-    return _extract_batch(_KERN_BATCH).num_rows
-
-
-def _pooled_history() -> tuple[list, list, list, list]:
-    """Clean-pair efficiencies pooled across every recorded run
-    (RUNS.jsonl is append-only; headline-only reruns carry MERGED
-    scaling data copied from the previous run and are skipped so no
-    round is double-counted)."""
-    files_clean: list = []
-    fused_clean: list = []
-    files_vs_ceil: list = []
-    ceils: list = []
-    try:
-        with open(os.path.join(_REPO, "BENCH", "RUNS.jsonl")) as f:
-            for line in f:
-                try:
-                    e = json.loads(line)
-                except ValueError:
-                    continue
-                if e.get("bench_only") == "headline":
-                    continue
-                sc = e.get("scaling", {})
-                files_clean += sc.get("files_per_round_efficiency_clean", [])
-                fused_clean += sc.get("fused_per_round_efficiency_clean", [])
-                v = sc.get("files_efficiency_vs_host_ceiling")
-                if v is not None:
-                    files_vs_ceil.append(v)
-                ceils += sc.get("per_round_host_ceiling", [])
-    except OSError:
-        pass
-    return files_clean, fused_clean, files_vs_ceil, ceils
-
-
-def write_baseline_md(payload: dict) -> None:
-    import statistics as _st
-
-    os.makedirs(os.path.join(_REPO, "BENCH"), exist_ok=True)
-    s = payload["scaling"]
-    lo, hi = s["levels"]
-    ceil_main = s["host_ceiling_same_levels"]
-    ceil_ctrl = s["host_ceiling_4_16"]
-    # write_baseline_md runs after this run is appended to RUNS.jsonl,
-    # so the pooled numbers quoted in the contract line include it
-    p_files, p_fused, p_vs_ceil, p_ceils = _pooled_history()
-    lines = [
-        "# BENCH/BASELINE.md — measured numbers",
-        "",
-        f"- input: `{SF_DIR}` documents tiled x{TILE}, text x{TEXT_REPEAT}"
-        f" = {s['n_docs_per_job']} heavy (~1000-word) docs per job",
-        f"- steady-state window per level: >= {s['steady_state_sec_per_level']} s"
-        f" of back-to-back jobs (startup/warmup excluded, reported below)",
-        f"- CONTRACT HEADLINE — TERMINAL file->file extraction job"
-        f" (operators/extract_files.py, the north rule's pipeline shape:"
-        f" python reads AND writes the parquet, no document bytes cross"
-        f" the JVM in either direction; tmpfs sink stands in for"
-        f" executor-scaling object storage): throughput"
-        f" {s.get('files_docs_per_sec')}; scaling efficiency ({lo}->{hi},"
-        f" the contract's N vs 4N, target >= 0.8):"
-        f" **{s.get('files_efficiency')}** (median of clean pairs;"
-        f" per-round {s.get('files_per_round_efficiency')},"
-        f" clean {s.get('files_per_round_efficiency_clean')});"
-        f" vs same-window host ceiling:"
-        f" **{s.get('files_efficiency_vs_host_ceiling')}**."
-        f" POOLED ACROSS ALL RECORDED RUNS (the robust contract number,"
-        f" {len(p_files)} clean pairs): raw"
-        f" **{round(_st.median(p_files), 3) if p_files else None}**,"
-        f" vs-ceiling per-run median"
-        f" **{round(_st.median(p_vs_ceil), 3) if p_vs_ceil else None}**"
-        f" — best clean-pair window"
-        f" {max(p_files) if p_files else None} raw; see the"
-        f" cross-run section below",
-        f"- FUSED python-scan path (sources/pyscan.py — the composable"
-        f" production plan per SCALE.md, output spans feed downstream"
-        f" operators; gate query extract_spans_pyscan): throughput"
-        f" {s['fused_docs_per_sec']}; scaling efficiency:"
-        f" **{s['fused_efficiency']}** (median of clean paired rounds;"
-        f" quietest window: {s['fused_efficiency_quietest_window']},"
-        f" per-round {s['fused_per_round_efficiency']},"
-        f" clean {s.get('fused_per_round_efficiency_clean')})",
-        f"- load gate: rounds starting above 1-min load"
-        f" {s.get('load_gate')} are excluded from the headline median;"
-        f" clean pairs this run: {s.get('clean_pairs')}",
-        f"- steal gate (r5): rounds whose measurement windows saw"
-        f" hypervisor steal above {s.get('steal_clean_gate')}% are"
-        f" likewise excluded (this host's hypervisor steals CPU in"
-        f" bursts of 25-30% while 1-min loadavg reads 0.0 — measured"
-        f" via /proc/stat; the burst pattern is what produced the"
-        f" phantom 4-9x per-query regressions across earlier rounds);"
-        f" per-round max steal%: {s.get('per_round_steal_pct')}",
-        f"- classic (mapInArrow) extraction throughput local[{lo}]: "
-        f"**{s['docs_per_sec'][f'local[{lo}]']} docs/sec**;"
-        f" local[{hi}]: "
-        f"**{s['docs_per_sec'][f'local[{hi}]']} docs/sec**",
-        f"- classic scaling efficiency ({lo}->{hi}):"
-        f" **{s['efficiency']}**"
-        f" (median of clean paired rounds; quietest window:"
-        f" {s['efficiency_quietest_window']},"
-        f" clean {s.get('per_round_efficiency_clean')})",
-        f"- host pure-compute ceiling at {lo}->{hi}"
-        f" (kernel-only, cache-resident, no Spark):"
-        f" **{ceil_main['efficiency']}** ({ceil_main['batches_per_sec']});"
-        f" per-round same-window ceilings {s['per_round_host_ceiling']}"
-        f" (effective start load per round — min(1-min loadavg,"
-        f" 2s busy-cores): {s['per_round_start_load']})",
-        f"- engine efficiency relative to the host ceiling (same-window"
-        f" pairs, median): **{s['efficiency_vs_host_ceiling']}**"
-        f" (per-round {s['per_round_efficiency_vs_host_ceiling']});"
-        f" fused path vs ceiling:"
-        f" **{s['fused_efficiency_vs_host_ceiling']}**",
-        f"- control pair {ceil_ctrl['levels'][0]}->{ceil_ctrl['levels'][1]}"
-        f" pure-compute ceiling: {ceil_ctrl['efficiency']}"
-        f" ({ceil_ctrl['batches_per_sec']})",
-        f"- per-level overhead (best observed): {s['overhead']}",
-        f"- per-job cost decomposition (scan(JVM) + Arrow IPC + Python"
-        f" kernel, probes share the window of each level's best run):"
-        f" {s['decomposition']}",
-        f"- per-component scaling efficiency {lo}->{hi}:"
-        f" {s['component_scaling_efficiency']}",
-        "",
-        "## Methodology / reading the numbers",
-        "",
-        "CONTRACT READING (north rule: scaling efficiency >= 0.8 from N",
-        "to 4N executors). The number that answers it is the TERMINAL",
-        "file->file job's clean-pair efficiency — that job is the north",
-        "rule's extraction pipeline (a spark-submit job writing results",
-        "to storage), and it is the only path with no JVM data leg in",
-        "either direction. In the best genuinely-idle window measured",
-        "(run 6, start load 0.0) the terminal job reached **0.989 raw**,",
-        "and the 2026-08-18 idle-window run (start loads 0.0/0.1/0.1)",
-        "recorded BOTH clean pairs above the target — [0.846, 0.982],",
-        "run median **0.914 raw** — the >=0.8 contract line is MET",
-        "outright whenever the box lets an 8->32 pair run clean.",
-        "Where a window's raw ratio falls short,",
-        "the same-window host ceiling says how much of the gap is the",
-        "BOX, not the engine: the host's own pure-numpy cache-resident",
-        "kernel pool scales 8->32 at a median of ~0.72 across 33",
-        "windows (idle starts included), so most windows cannot express",
-        "0.8 for ANY workload; the engine-attributable number is",
-        "*_efficiency_vs_host_ceiling (pooled per-run median 0.907, and",
-        ">1.0 in two runs — the engine adds no scaling penalty of its",
-        "own). A real N->4N executor scale-up multiplies real cores,",
-        "memory bandwidth and IPC capacity together — the regime where",
-        "the raw ratio converges to the ceiling-relative one.",
-        "",
-        "Levels interleave across sessions; per-level throughput is the",
-        "best steady-state window, while EFFICIENCY comes from paired",
-        "same-round measurements (both levels back-to-back inside one",
-        "interference window; a cross-window ratio would mix a quiet",
-        "8-core window with a noisy 32-core one). The headline efficiency",
-        "is the MEDIAN across paired rounds — best-of a ratio would select",
-        "the round whose lo-window was relatively noisier, biasing the",
-        "number upward. This shared host shows up-to-4x external",
-        "interference; noise only ever adds time.",
-        f"Per-round paired efficiencies: {s['per_round_efficiency']}.",
-        "Each level runs in a fresh subprocess/JVM with a",
-        "pre-touched fixed JVM heap and ActiveProcessorCount=N — without",
-        "pretouch, lazy heap pages become host-level faults and the 32-core",
-        "run collapses ~6x (measured).",
-        "",
-        "bm25/hybrid attribution (r4 finding #2, measured r5 at sf0.1,",
-        "5000 docs / 2000 embeddings): the r3 hybrid 0.5 s was subsidized",
-        "by bm25's leaked persist; the r4 honest 4.6 s was JOB COUNT, not",
-        "arithmetic — the Python tf counting is ~50 ms for the whole",
-        "corpus (probe below), while the query ran 3-7 driver jobs each",
-        "re-planning the prefix cuts, plus the tf UDF TWICE (the stats",
-        "aggregate and the scoring projection shared an unpersisted",
-        "subtree). r5 restructure: per_doc persisted (UDF once), ONE",
-        "collect action for both side-tagged score prefixes with",
-        "driver-side exact ranking, a closed-form n_cand jump replacing",
-        "log2 re-planning, and the order-statistic resolution collapsed",
-        "to one union action (it fires on EVERY sf0.1 call: embeddings",
-        "are a strict subset of docs, the prefix intersection is thin,",
-        "~26 one-sided docs survive the ub filter). Result: hybrid 4.6 ->",
-        "~3.5 s as the bench measures it (each query once per session —",
-        "the first execution pays plan compilation/whole-stage codegen",
-        "for hybrid's several plans) and ~1.7 s steady-state on repeat",
-        "(phases: candidates action ~1.0 s of which bm25 UDF leg ~0.6",
-        "and cosine UDF ~0.3, resolution ~0.4 s, query-vector fetch",
-        "~0.1 s); bm25_topk 1.1 -> ~0.5-0.65 s; cosine_topk 0.68 ->",
-        "~0.50 s. The residual is per-action scheduling + once-per-plan",
-        "JIT on this box, not a scale-shape problem.",
-        "",
-        "simhash64_pairs_banded attribution (r4 finding #3, measured r5",
-        "in a load-0.2 window): steady-state is ~2.6 s at sf0.1 — r3's",
-        "2.50 s was the true number and r4's 4.82 s was window noise.",
-        "The double-evaluation hypothesis (self-join legs racing the",
-        "lazily-persisted fingerprint subtree) was tested directly:",
-        "pre-materializing fp with count() before the self-join leaves",
-        "the warm total unchanged (2.63 vs 2.68 s), so no extra job was",
-        "added. cosine_topk's r4 0.68 s likewise re-measured ~0.50 s",
-        "after the Arrow pair-UDF switch.",
-        "",
-        "embedding_neardup_lsh cold-start attribution (r5): a quiet-window",
-        "headline run recorded 14.4 s @ 0.3% steal vs the prior clean",
-        "4.19 s. Isolated re-measure in the same window: 39.3 s on the",
-        "FIRST execution of a fresh session, 4.9-5.7 s steady-state on",
-        "repeat (three back-to-back runs, release_all() between) — the",
-        "same once-per-session plan-compile/Python-worker-spinup cost",
-        "attributed for hybrid_topk; no code in the query changed. The",
-        "headline table's warm column (added r5) now records the repeat",
-        "cost next to every cold number.",
-        "",
-        "Tokenizer vectorization probe (r4 item 8, NEGATIVE result kept",
-        "by design): pyarrow.compute.split_pattern + flatten +",
-        "np.bincount-by-parent vs the per-row str.split/ws.count loop on",
-        "the real sf0.1 text column: 27-33 ms vs 48-51 ms (1.5-1.9x) —",
-        "but the whole tf stage is ~50 ms of a ~600 ms UDF leg; the",
-        "overhead is Arrow IPC + worker roundtrip + scheduling, so the",
-        "rewrite would buy <30 ms per query and was not adopted.",
-        "",
-        "Cosine arithmetic note (r5): the `aggregate(zip_with(...))` HOF",
-        "fold over raw FLOAT arrays differs from the DuckDB oracle's",
-        "cast-to-double arithmetic in the last ulp on EVERY row (max",
-        "1.1e-8 at sf0.1) — it survived four rounds of gates only because",
-        "round-6 rarely lands on a boundary. cosine_topk and hybrid now",
-        "score via the Arrow pair-cosine UDF over double-cast vectors:",
-        "bit-identical to the oracle on all 2000 vectors AND ~0.5 s",
-        "faster (Catalyst runs HOF lambdas interpreted).",
-        "",
-        "Comparing paths: a pipeline with HIGHER absolute throughput at",
-        "both levels can still show a LOWER efficiency ratio — by using",
-        "the low level's cores better it leaves less host headroom to",
-        "grow into (the fused path is kernel-bound already at local[8];",
-        "the classic path wastes the low level on IPC and so has more",
-        "room to 'scale'). Compare absolute docs/sec first, ratios second.",
-        "",
-        "Decomposition reading: the three probe windows run back-to-back",
-        "inside one level's subprocess, so their DIFFERENCES approximate",
-        "the per-stage cost; a small negative python_kernel share means",
-        "the full pipeline overlapped kernel compute under the IPC transfer",
-        "(the stages pipeline within a task) and/or inter-probe noise —",
-        "read it as 'kernel fully hidden behind IPC at this level', which",
-        "is itself the signal: the Arrow IPC round trip, not compute, is",
-        "the binding constraint (its component efficiency is the lowest).",
-        "That is the term the fused python-scan source removes.",
-        "",
-        "The kernel-only row is the HOST's parallel-scaling ceiling: pure",
-        "numpy/Arrow compute on a cache-resident batch, no Spark, no IPC,",
-        "no DRAM streaming. On this virtualized single box, even that ideal",
-        "workload stops scaling near ~20 effective cores, so no end-to-end",
-        "8->32 measurement can reach 0.8 here. The engine-attributable",
-        "number is efficiency_vs_host_ceiling: how much of the scaling the",
-        "host CAN express the engine actually delivers. A real N->4N",
-        "EXECUTOR scale-up multiplies real cores, memory bandwidth and IPC",
-        "capacity together — the regime where the raw number converges to",
-        "the ceiling-relative one.",
-        "",
-        "Headline query timings (local[{}] @ {}; steal% = hypervisor".format(
-            CPUS, SF_DIR
-        ),
-        "steal observed during the recorded measurement window — attempts",
-        f"above {STEAL_GATE}% steal were re-measured, see STEAL_GATE in"
-        " bench.py):",
-        "",
-        "| query | cold sec | warm sec | steal% |",
-        "| --- | --- | --- | --- |",
-    ]
-    qsteal = payload.get("queries_steal_pct", {})
-    qwarm = payload.get("queries_warm", {})
-    for k, v in payload["queries"].items():
-        lines.append(
-            f"| {k} | {v} | {qwarm.get(k, '-')} | {qsteal.get(k, '-')} |"
-        )
-    # Cross-run evidence: one run's windows are one host-weather sample;
-    # the pooled clean pairs across every recorded run (RUNS.jsonl is
-    # append-only) are the robust statement of the contract number.
-    if p_files or p_fused:
-        lines += [
-            "",
-            "## Cross-run evidence (pooled from BENCH/RUNS.jsonl)",
-            "",
-            f"- terminal-job clean-pair efficiencies, all recorded"
-            f" runs: {p_files} -> median"
-            f" **{round(_st.median(p_files), 3) if p_files else None}**",
-            f"- terminal-job vs same-window host ceiling, per-run"
-            f" medians: {p_vs_ceil} -> median"
-            f" **{round(_st.median(p_vs_ceil), 3) if p_vs_ceil else None}**",
-            f"- fused clean-pair efficiencies, all runs: {p_fused}"
-            f" -> median"
-            f" {round(_st.median(p_fused), 3) if p_fused else None}",
-            f"- host ceilings observed across all rounds: {p_ceils}"
-            f" -> median {round(_st.median(p_ceils), 3) if p_ceils else None}"
-            f" (the box's own limit; < 0.8 in most windows even at"
-            f" idle starts)",
-        ]
-    with open(os.path.join(_REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write("\n".join(lines) + "\n")
-
-
-def main() -> None:
-    if len(sys.argv) > 1 and sys.argv[1] == "--measure-level":
-        _measure_level(int(sys.argv[2]), sys.argv[3], float(sys.argv[4]))
-        return
-    # SPARK_GRAFT_BENCH_ONLY=headline|scaling reruns one phase in a quiet
-    # window, reusing the other phase's numbers from the last full run in
-    # BENCH/headline.json (a load-contended phase shouldn't force paying
-    # for BOTH phases again). Default: full run.
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "")
-    prev = {}
-    if only in ("headline", "scaling"):
-        try:
-            with open(os.path.join(_REPO, "BENCH", "headline.json")) as f:
-                prev = json.load(f)
-        except (OSError, ValueError):
-            # missing OR truncated/corrupt prior run (the tail-kill
-            # failure mode): fall back to the full run
-            only = ""
-        if only and ("scaling" not in prev or "queries" not in prev):
-            only = ""  # prior payload incomplete: do the full run
-    queries: dict = {}
-    qsteal: dict = {}
-    qwarm: dict = {}
-    if only == "scaling":
-        queries = dict(prev.get("queries", {}))
-        qsteal = dict(prev.get("queries_steal_pct", {}))
-        qwarm = dict(prev.get("queries_warm", {}))
-        total = float(prev.get("value", 0.0))
-    else:
-        total = run_headline(queries, qsteal, qwarm)
-    if only == "headline":
-        scaling = prev["scaling"]
-    else:
-        scaling = run_scaling()
-    payload = {
-        "metric": "headline_queries_total",
-        # partial reruns (SPARK_GRAFT_BENCH_ONLY) merge the other phase
-        # from the previous run — mark them so a RUNS.jsonl reader never
-        # mistakes merged numbers for a fresh measurement
-        **({"bench_only": only} if only else {}),
-        "value": round(total, 3),
-        "unit": "sec",
-        "queries": queries,
-        # hypervisor steal% observed during each query's recorded
-        # (cleanest-attempt) measurement window — see STEAL_GATE
-        "queries_steal_pct": qsteal,
-        # repeat-run steady-state per query (same session, directly after
-        # the recorded cold attempt) — cold minus warm ~= one-time plan
-        # compile/JIT/worker-spinup cost
-        "queries_warm": qwarm,
-        "sf": SF_DIR.rstrip("/").rsplit("sf", 1)[-1],
-        "extraction_docs_per_sec": scaling["docs_per_sec"],
-        "scaling_efficiency": scaling["efficiency"],
-        "fused_extraction_docs_per_sec": scaling["fused_docs_per_sec"],
-        "fused_scaling_efficiency": scaling["fused_efficiency"],
-        "scaling": scaling,
-    }
-    # append-only run history FIRST: BASELINE.md is overwritten per run
-    # (a noisy-window run would otherwise erase quiet-window evidence —
-    # the per_round_start_load field says which is which), and its
-    # pooled cross-run section reads the history, which must already
-    # contain this run.
-    # keep per-query timings AND their paired steal% in the history —
-    # the cross-run per-query reading in BASELINE.md needs both sides
-    # (an entry with steal context but no timings is unreadable)
-    hist = os.path.join(_REPO, "BENCH", "RUNS.jsonl")
-    with open(hist, "a") as f:
-        f.write(json.dumps(payload) + "\n")
-    write_baseline_md(payload)
-    # full payload to a file the driver/judge can always read whole...
-    with open(os.path.join(_REPO, "BENCH", "headline.json"), "w") as f:
-        json.dump(payload, f, indent=1)
-    # ...and a COMPACT stdout line (BENCH_r03.json's `parsed` was null
-    # because the driver's tail capture truncated the full `scaling`
-    # detail mid-object — keep the printed line short enough to survive
-    # any tail window; detail lives in BENCH/headline.json + RUNS.jsonl).
-    s = payload["scaling"]
-    compact = dict(payload)
-    compact["scaling"] = {
-        k: s[k]
-        for k in (
-            "n_docs_per_job",
-            "docs_per_sec",
-            "efficiency",
-            "fused_docs_per_sec",
-            "fused_efficiency",
-            "load_gate",
-            "clean_pairs",
-            "per_round_efficiency",
-            "per_round_efficiency_clean",
-            "fused_per_round_efficiency",
-            "fused_per_round_efficiency_clean",
-            "files_docs_per_sec",
-            "files_efficiency",
-            "files_per_round_efficiency_clean",
-            "files_efficiency_vs_host_ceiling",
-            "per_round_start_load",
-            "per_round_host_ceiling",
-            "efficiency_vs_host_ceiling",
-            "fused_efficiency_vs_host_ceiling",
-        )
-        if k in s
-    }
-    compact["detail"] = "BENCH/headline.json"
-    print(json.dumps(compact))
+        spark.stop()
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main(sys.argv[1:]))

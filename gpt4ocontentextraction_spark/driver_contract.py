@@ -52,7 +52,7 @@ from .streaming import windows as _win
 # `variant` tag, so every path is still individually hash-checked against
 # the oracle). The individual path callables live in EXTRA_QUERIES: the
 # local parity test (tests/test_oracle_parity.py) sweeps QUERIES AND
-# EXTRA_QUERIES, and bench.py times the paths separately.
+# EXTRA_QUERIES.
 DRIVER_SWEEP_CAP = 50
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -74,8 +74,8 @@ def register(name: str, oracle: str | None):
 def register_extra(name: str, oracle: str | None):
     """Register an alternate-path query OUTSIDE the driver-facing gate
     registry (see DRIVER_SWEEP_CAP): still oracle-checked locally by
-    tests/test_oracle_parity.py and timed by bench.py, and exercised by
-    the driver inside its family's labeled-union gate."""
+    tests/test_oracle_parity.py, and exercised by the driver inside its
+    family's labeled-union gate."""
 
     def deco(fn):
         EXTRA_QUERIES[name] = fn
@@ -1002,8 +1002,7 @@ def q_line_dedup(spark, sf_dir):
     gate asserts removals, not emptiness). Every line occurrence after
     its corpus-wide first occurrence is removed; blank lines are
     structural and kept. EXTRA (local-parity) gate — the 50-slot driver
-    registry is full; swept by tests/test_oracle_parity.py and timed by
-    bench.py."""
+    registry is full; swept by tests/test_oracle_parity.py."""
     return dedup.line_dedup(dedup.reflow_lines(_docs(spark, sf_dir)))
 
 

@@ -220,13 +220,26 @@ def _markdown_chunks(
         np.where(is_h1, np.arange(len(line_vals)), -1), line_starts
     )[line_offs[1:] - 1]
     # upd: the first ||N|| marker, ignored when the chunk starts with '||'
-    m = pc.extract_regex(t, r"\|\|(?P<n>\d+)\|\|")
-    upd_valid = m.is_valid().to_numpy(zero_copy_only=False) & ~pc.starts_with(
+    # or when N does not fit int64 (the oracles' TRY_CAST gives NULL)
+    n = pc.struct_field(pc.extract_regex(t, r"\|\|(?P<n>\d+)\|\|"), "n")
+    digits = pc.utf8_ltrim(n, "0")
+    width = pc.utf8_length(digits)
+    fits = pc.fill_null(
+        pc.or_(
+            pc.less(width, 19),
+            pc.and_(
+                pc.equal(width, 19),
+                pc.less_equal(digits, "9223372036854775807"),
+            ),
+        ),
+        False,
+    )
+    upd_valid = fits.to_numpy(zero_copy_only=False) & ~pc.starts_with(
         t, "||"
     ).to_numpy(zero_copy_only=False)
-    upd = pc.cast(
-        pc.fill_null(pc.struct_field(m, "n"), "0"), pa.int64()
-    ).to_numpy(zero_copy_only=False)
+    upd = pc.cast(pc.if_else(fits, n, "0"), pa.int64()).to_numpy(
+        zero_copy_only=False
+    )
 
     # carries: last_heading lags one chunk (the pre-update value)
     pos = np.arange(nc)

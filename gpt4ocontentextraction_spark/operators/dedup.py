@@ -97,8 +97,13 @@ corpus AS (
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
-    """Group by a normalization key (first 2 words); keep min doc_id."""
-    key = F.expr("concat_ws(' ', slice(split(text, ' '), 1, 2))")
+    """Group by a normalization key (first 2 words); keep min doc_id.
+    NULL text keys its own group, as in the oracle (concat_ws alone
+    would give it the empty text's key '')."""
+    key = F.when(
+        F.col("text").isNotNull(),
+        F.expr("concat_ws(' ', slice(split(text, ' '), 1, 2))"),
+    )
     return (
         docs.select(F.col("doc_id").cast("long").alias("doc_id"), key.alias("dup_key"))
         .groupBy("dup_key")

@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 MAGIC = b"FAKE"
 HEADER_FMT = "<4sii"
 HEADER_SIZE = struct.calcsize(HEADER_FMT)
-FRAME_BYTES = 256
 
 MEDIA_SCHEMA_DDL = (
     "media_ref string, media_kind string, mime string, width int, height int,"

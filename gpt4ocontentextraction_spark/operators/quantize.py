@@ -290,12 +290,6 @@ def quantized_rerank_topk(
     return rer.orderBy(F.desc("sim"), F.asc("vec_id")).limit(k)
 
 
-def _duck_exact_cos(a: str, b: str) -> str:
-    from .retrieval import _duck_cos
-
-    return _duck_cos(a, b)
-
-
 def _quantized_rerank_sql(k: int = 5, n_candidates: int = 50) -> str:
     from .retrieval import _duck_cos
 

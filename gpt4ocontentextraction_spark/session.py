@@ -3,7 +3,7 @@
 Scale posture: these configs are what we would ship to a 1000-executor
 cluster (AQE on, skew join on, Arrow on, shuffle partitions sized
 explicitly); in the sandbox they run on local[N] where N is the
-parallelism under test (BASELINE.md two-level scaling measurement).
+parallelism under test (perfbench/run.py measures local[1] -> local[nproc]).
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ def _export_package_path() -> None:
 
     Local mode forks workers from the driver JVM's environment; on a real
     cluster the same job ships the package via ``spark-submit --py-files``
-    (see bench.py / README). Without this, any driver not launched from the
+    (see README). Without this, any driver not launched from the
     repo root fails in the worker with ModuleNotFoundError.
     """
     pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

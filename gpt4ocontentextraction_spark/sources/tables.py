@@ -16,12 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-ICEBERG_CONF = {
-    # what a real deployment sets (documented, not active here):
-    # "spark.sql.catalog.lake": "org.apache.iceberg.spark.SparkCatalog",
-    # "spark.sql.catalog.lake.type": "rest",
-}
-
 
 def iceberg_available(spark: SparkSession) -> bool:
     try:

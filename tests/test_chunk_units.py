@@ -271,3 +271,60 @@ def test_window_chunks_exact_multiple_boundary(spark):
         (0, "a b c d"),
         (1, "c d e f"),
     ]
+
+
+def test_page_marker_past_int64_is_no_update():
+    """A ||N|| marker whose N does not fit int64 leaves pg_number where it
+    was, as the oracles' TRY_CAST(... AS BIGINT) does (NULL, so no
+    update), instead of raising. Spark-free: the chunk kernel on one Arrow
+    batch against DuckDB's expression, in both markdown modes."""
+    import duckdb
+    import pyarrow as pa
+
+    from gpt4ocontentextraction_spark.operators.chunk import chunk_batches
+
+    markers = (
+        "99999999999999999999",
+        "9223372036854775807",  # int64 max: fits
+        "9223372036854775808",  # one past int64 max
+        "000000000000000000000000042",  # 27 digits, TRY_CAST parses it
+    )
+
+    def try_cast(text):
+        return duckdb.execute(
+            "SELECT TRY_CAST(NULLIF(regexp_extract("
+            "$1, '\\|\\|(\\d+)\\|\\|', 1), '') AS BIGINT)",
+            [text],
+        ).fetchone()[0]
+
+    ids, spans = [], []
+    for i, m in enumerate(markers):
+        ids += [f"{i}", f"{i}-carry"]
+        spans += [
+            [("text", f"a ||{m}|| b", "", 0)],
+            # a fitting marker, then a '# ' section holding marker m
+            [
+                ("text", "a ||5|| b", "", 0),
+                ("heading", "# H", "", 1),
+                ("text", f"c ||{m}|| d", "", 2),
+            ],
+        ]
+    span_type = pa.list_(pa.struct([
+        ("kind", pa.string()), ("text", pa.string()),
+        ("media_ref", pa.string()), ("offset", pa.int32()),
+    ]))
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(ids), pa.array(spans, span_type)], ["doc_id", "spans"]
+    )
+    wanted = [try_cast(f"a ||{m}|| b") for m in markers]
+    assert wanted == [None, 9223372036854775807, None, 42]
+    for mode in ("markdown", "separator"):
+        got = {
+            (r["file_name"], r["chunk_id"]): r["pg_number"]
+            for out in chunk_batches(iter([batch]), mode)
+            for r in out.to_pylist()
+        }
+        for i, upd in enumerate(wanted):
+            assert got[(f"{i}", 0)] == (1 if upd is None else upd), mode
+            assert got[(f"{i}-carry", 0)] == 5
+            assert got[(f"{i}-carry", 1)] == (5 if upd is None else upd)

@@ -32,6 +32,7 @@ KERNEL_QUERIES = (
     "chunk_dispatch",
     "embedding_neardup_lsh",  # a NULL vec_id
     "ivf_topk",  # an all-zero vector: NULL cosine
+    "exact_dedup",  # NULL text keys its own group, apart from ''
 )
 
 
