@@ -53,17 +53,13 @@ def _ship_package(spark: SparkSession) -> None:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: the FUSED python-scan extraction pipeline (SCALE.md's
-    production plan — sources/pyscan.py runs parquet decode + the
-    extraction kernel inside the Python worker, no JVM->Python Arrow
-    IPC leg; measured 1.5-1.8x the classic mapInArrow path). The
-    classic path stays gate-checked as `extract_spans`; both share one
-    oracle, so the fusion is result-identical."""
+    """Flagship: the extraction operator (`extract_spans`) on sf0.001, a
+    parquet scan feeding the extraction kernel's one mapInArrow."""
     _ensure_worker_path()
     _ship_package(spark)
-    from gpt4ocontentextraction_spark.driver_contract import EXTRA_QUERIES
+    from gpt4ocontentextraction_spark.driver_contract import QUERIES
 
-    return EXTRA_QUERIES["extract_spans_pyscan"](spark, "/root/testdata/sf0.001")
+    return QUERIES["extract_spans"](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -17,8 +17,9 @@ import time
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 HEADLINE = (
+    "spanify",
     "extract_spans",
-    "extract_spans_pyscan",
+    "extract_spans_skew_defused",
     "extract_spans_html",
     "extract_spans_layout",
     "merge_markdown",
@@ -26,9 +27,8 @@ HEADLINE = (
     "markdown_chunks",
     "page_chunks_fused",
     "markdown_chunks_fused",
-    "page_chunks_pyscan",
-    "markdown_chunks_pyscan",
     "markdown_chunks_separator",
+    "chunk_dispatch",
     "page_markers",
     "resume_pending",
     "minhash_lsh",
@@ -94,13 +94,11 @@ def _timed(build) -> float:
 def run(spark, names, lookup) -> tuple[dict, dict]:
     """Cold and warm seconds per name, plus hybrid_topk's shared-index pair."""
     from gpt4ocontentextraction_spark.cached import release_all
-    from gpt4ocontentextraction_spark.driver_contract import _pyscan_spans_dir
     from gpt4ocontentextraction_spark.operators import retrieval
 
     # untimed: the first query must not pay one-time reads the others skip
     for table in ("documents", "embeddings"):
         _timed(lambda: spark.read.parquet(f"{SF_DIR}/{table}.parquet"))
-    _pyscan_spans_dir(spark, SF_DIR)
     cold, warm = {}, {}
     for name in names:
         cold[name] = _timed(lambda: lookup[name](spark, SF_DIR))

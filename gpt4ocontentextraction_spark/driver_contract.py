@@ -10,7 +10,6 @@ the driver hashes values per column name.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -129,87 +128,6 @@ def q_spanify(spark, sf_dir):
 def q_extract_spans(spark, sf_dir):
     """THE core operator (M5): full extraction kernel, exploded."""
     return _spans_out(extract(spanify(_docs(spark, sf_dir))))
-
-
-def _pyscan_spans_dir(spark, sf_dir) -> str:
-    """Materialize spanify(documents) to parquet once per input state —
-    the fused source's contract is a parquet directory, mirroring how a
-    real deployment scans an ingested spans table.
-
-    The cache key fingerprints the INPUT (documents.parquet mtime+size)
-    and the SPEC (SPANIFY_SQL text), so regenerating testdata or editing
-    spanify invalidates the cache instead of silently serving stale
-    spans. The build is race-safe: a writer builds into a unique temp
-    dir and renames it into place; the loser of the rename just uses the
-    winner's cache.
-
-    The cache root is USER-scoped (ADVICE r3 #3): a fixed world-shared
-    /tmp path could be pre-created or tampered with by another local
-    user (and cross-user os.rename fails under sticky-bit /tmp), so the
-    dir carries the username and, if it already exists, must be owned by
-    this uid or the cache is rebuilt under a fresh name."""
-    import hashlib
-    import tempfile
-    import uuid
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    key = hashlib.sha1(
-        f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}|{SPANIFY_SQL}".encode()
-    ).hexdigest()[:16]
-    try:
-        import getpass
-
-        user = getpass.getuser()
-    except Exception:
-        # minimal containers: the uid may have no passwd entry and no
-        # USER/LOGNAME env, where getuser() raises (KeyError/OSError) —
-        # the uid itself is an equally unique per-user cache-name scope
-        user = str(os.getuid())
-    root = os.path.join(
-        tempfile.gettempdir(), f"pyscan_gate_{user}_{key}"
-    )
-    try:
-        foreign = os.path.isdir(root) and os.stat(root).st_uid != os.getuid()
-    except OSError:
-        foreign = True
-    if foreign:
-        # foreign-owned dir squatting on our name: fall back to a
-        # repo-local cache dir we always own. STABLE (not a per-call
-        # uuid — that would rebuild and leak one spans copy per call)
-        # and squat-proof (inside our own tree).
-        root = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            ".cache",
-            f"pyscan_gate_{key}",
-        )
-    cache = os.path.join(root, "spans")
-    if not os.path.exists(os.path.join(cache, "_SUCCESS")):
-        build = f"{cache}.build-{uuid.uuid4().hex}"
-        spanify(_docs(spark, sf_dir)).repartition(8).write.parquet(build)
-        os.makedirs(os.path.dirname(cache), exist_ok=True)
-        try:
-            os.rename(build, cache)
-        except OSError:  # another process won the rename
-            import shutil
-
-            shutil.rmtree(build, ignore_errors=True)
-    return cache
-
-
-@register_extra(
-    "extract_spans_pyscan",
-    f'WITH {oracles.EXTRACT_SQL} SELECT doc_id, kind, text, media_ref,'
-    f' CAST("offset" AS BIGINT) AS offset FROM extracted',
-)
-def q_extract_spans_pyscan(spark, sf_dir):
-    """M5 via the fused Python-native scan+extract source
-    (sources/pyscan.py): parquet decode AND kernel both run inside the
-    Python worker, input bytes never cross JVM->Python. Same EXTRACT_SQL
-    oracle as extract_spans, so the fusion is gate-proven."""
-    from .sources.pyscan import extract_scan
-
-    return _spans_out(extract_scan(spark, _pyscan_spans_dir(spark, sf_dir)))
 
 
 @register_extra(
@@ -432,38 +350,6 @@ def q_markdown_chunks_fused(spark, sf_dir):
     """C3 over raw spans: extraction and chunking in one Python stage,
     same oracle as markdown_chunks."""
     return _chunk.markdown_chunks_fused(spanify(_docs(spark, sf_dir)))
-
-
-@register_extra(
-    "page_chunks_pyscan",
-    f"WITH {oracles.PAGE_CHUNKS_SQL} SELECT chunk_doc_id, chunk_id,"
-    f" pg_number, file_name, title, content FROM page_chunks",
-)
-def q_page_chunks_pyscan(spark, sf_dir):
-    """C2 with the WHOLE pipeline — parquet decode, extraction, chunk
-    assembly — fused into one Python stage via the span_extract source
-    (mode=page_chunks): only finished chunk rows cross into the JVM.
-    Same oracle as page_chunks / page_chunks_fused."""
-    from .sources.pyscan import extract_scan
-
-    return extract_scan(
-        spark, _pyscan_spans_dir(spark, sf_dir), mode="page_chunks"
-    )
-
-
-@register_extra(
-    "markdown_chunks_pyscan",
-    f"WITH {oracles.MD_CHUNKS_SQL} SELECT chunk_doc_id, chunk_id,"
-    f" pg_number, file_name, title, content FROM md_chunks",
-)
-def q_markdown_chunks_pyscan(spark, sf_dir):
-    """C3 scan-to-chunks in one Python stage (span_extract
-    mode=markdown_chunks); same oracle as markdown_chunks[_fused]."""
-    from .sources.pyscan import extract_scan
-
-    return extract_scan(
-        spark, _pyscan_spans_dir(spark, sf_dir), mode="markdown_chunks"
-    )
 
 
 @register_extra("window_chunks", _chunk.WINDOW_CHUNKS_SQL)
@@ -1677,25 +1563,20 @@ _EXTRACT_BASE_SQL = (
 @register(
     "extract_spans_variants",
     f"WITH {oracles.EXTRACT_SQL}, base AS ({_EXTRACT_BASE_SQL})"
-    " SELECT base.*, 'pyscan' AS variant FROM base"
-    " UNION ALL SELECT base.*, 'skew' AS variant FROM base"
+    " SELECT base.*, 'skew' AS variant FROM base"
     " UNION ALL SELECT base.*, 'html' AS variant FROM base",
 )
 def q_extract_spans_variants(spark, sf_dir):
-    """M5 alternate paths in one gate: the fused Python-native scan
-    (sources/pyscan.py), the skew-defused page-range sharding
-    (operators/skew.py), and the raw-HTML front end (operators/html.py —
-    render the corpus to markup, parse it back, extract), each labeled
-    and checked against the same EXTRACT_SQL oracle as the classic
-    extract_spans."""
-    py = q_extract_spans_pyscan(spark, sf_dir).withColumn(
-        "variant", F.lit("pyscan")
-    )
+    """M5 alternate paths in one gate: the skew-defused page-range
+    sharding (operators/skew.py) and the raw-HTML front end
+    (operators/html.py — render the corpus to markup, parse it back,
+    extract), each labeled and checked against the same EXTRACT_SQL
+    oracle as the classic extract_spans."""
     sk = q_extract_skew(spark, sf_dir).withColumn("variant", F.lit("skew"))
     hm = q_extract_spans_html(spark, sf_dir).withColumn(
         "variant", F.lit("html")
     )
-    return py.unionByName(sk).unionByName(hm)
+    return sk.unionByName(hm)
 
 
 _PAGE_CHUNKS_BASE_SQL = (
@@ -1707,20 +1588,14 @@ _PAGE_CHUNKS_BASE_SQL = (
 @register(
     "page_chunks_variants",
     f"WITH {oracles.PAGE_CHUNKS_SQL}, base AS ({_PAGE_CHUNKS_BASE_SQL})"
-    " SELECT base.*, 'fused' AS variant FROM base"
-    " UNION ALL SELECT base.*, 'pyscan' AS variant FROM base",
+    " SELECT base.*, 'fused' AS variant FROM base",
 )
 def q_page_chunks_variants(spark, sf_dir):
-    """C2 alternate paths in one gate: chunking fused into the extraction
-    mapInArrow pass and the whole-pipeline pyscan source, both against the
-    page_chunks oracle."""
-    fu = q_page_chunks_fused(spark, sf_dir).withColumn(
+    """C2 alternate path: chunking fused into the extraction mapInArrow
+    pass, tagged and checked against the page_chunks oracle."""
+    return q_page_chunks_fused(spark, sf_dir).withColumn(
         "variant", F.lit("fused")
     )
-    py = q_page_chunks_pyscan(spark, sf_dir).withColumn(
-        "variant", F.lit("pyscan")
-    )
-    return fu.unionByName(py)
 
 
 _MD_CHUNKS_BASE_SQL = (
@@ -1732,20 +1607,15 @@ _MD_CHUNKS_BASE_SQL = (
 @register(
     "markdown_chunks_variants",
     f"WITH {oracles.MD_CHUNKS_SQL}, base AS ({_MD_CHUNKS_BASE_SQL})"
-    " SELECT base.*, 'fused' AS variant FROM base"
-    " UNION ALL SELECT base.*, 'pyscan' AS variant FROM base",
+    " SELECT base.*, 'fused' AS variant FROM base",
 )
 def q_markdown_chunks_variants(spark, sf_dir):
-    """C3 alternate paths in one gate: fused and pyscan forms against the
-    markdown_chunks oracle (separator mode keeps its own gate —
-    its recurrence has a different oracle)."""
-    fu = q_markdown_chunks_fused(spark, sf_dir).withColumn(
+    """C3 alternate path: the fused form, tagged and checked against the
+    markdown_chunks oracle (separator mode keeps its own gate — its
+    recurrence has a different oracle)."""
+    return q_markdown_chunks_fused(spark, sf_dir).withColumn(
         "variant", F.lit("fused")
     )
-    py = q_markdown_chunks_pyscan(spark, sf_dir).withColumn(
-        "variant", F.lit("pyscan")
-    )
-    return fu.unionByName(py)
 
 
 @register(

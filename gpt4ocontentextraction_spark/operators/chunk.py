@@ -25,8 +25,8 @@ One kernel runs all of them: :func:`chunk_batches`, over Arrow batches of
 (``extract()`` and the snapshot tables guarantee it), so a document's
 chunks are assembled inside one batch and the operators are a single
 mapInArrow with no shuffle. A document's spans are read in offset order.
-The fused forms (``*_fused`` and the pyscan chunk modes) run the
-extraction kernel and then this one in the same Python stage. The spec is
+The fused forms (``*_fused``) run the extraction kernel and then this
+one in the same Python stage. The spec is
 the DuckDB oracles (oracles.PAGE_CHUNKS_SQL, MD_CHUNKS_SQL,
 MD_SEP_CHUNKS_SQL), including NULL ``chunk_doc_id``/``file_name`` for a
 NULL ``doc_id``.

@@ -831,10 +831,11 @@ WHERE bit_count(xor(a.simhash64, b.simhash64)) <= {SIMHASH_MAX_DIST}
 
 
 def ngram_jaccard_pairs(docs: DataFrame, max_doc_id: int = 150) -> DataFrame:
+    # NULL text shingles as '' (hash 0), as the oracle's does
     base = docs.filter(F.col("doc_id") < max_doc_id).select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.expr(_SHINGLE_HASHES).alias("sh"),
-    )
+        F.coalesce("text", F.lit("")).alias("text"),
+    ).select("doc_id", F.expr(_SHINGLE_HASHES).alias("sh"))
     a, b = base.alias("a"), base.alias("b")
     return (
         a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))

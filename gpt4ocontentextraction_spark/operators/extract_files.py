@@ -12,10 +12,9 @@ file ids and per-file metrics do), and the plan is Range -> MapInArrow
 with no Exchange. This is the pattern native-engine vendors use to push
 whole stages out of the JVM, expressed with plain mapInArrow.
 
-The composable counterpart is ``sources/pyscan.py``: a Spark 4 Python
-Data Source whose fused scan+extract output feeds downstream DataFrame
-operators through Catalyst (this module terminates in files; that one
-returns a DataFrame).
+The composable counterpart is ``operators/extract.py``, whose
+mapInArrow output feeds downstream DataFrame operators through Catalyst
+(this module terminates in files; that one returns a DataFrame).
 
 Fault tolerance — the CORRECTNESS mechanism is the snapshot manifest, not
 rename: callers route visibility through :func:`run_file_extraction`,

@@ -35,16 +35,17 @@ def _count_in(words_expr: str, needles: tuple[str, ...]) -> str:
 
 
 def lang_id(docs: DataFrame) -> DataFrame:
-    """Predicted language = argmax marker count, ties -> lang asc."""
-    score_cols = ", ".join(
+    """Predicted language = argmax marker count, ties -> lang asc. The
+    fold starts from the first language, so NULL text (all scores NULL)
+    predicts it with a NULL score, as the oracle's ranking does."""
+    first, *rest = (
         f"named_struct('lang', '{lang}', 'score',"
         f" {_count_in('ws', LANG_MARKERS[lang])})"
         for lang in sorted(LANG_MARKERS)
     )
     expr = f"""
     element_at(transform(array(split(text, ' ')), ws ->
-      aggregate(array({score_cols}),
-                named_struct('lang', '', 'score', -1),
+      aggregate(array({", ".join(rest)}), {first},
                 (best, s) -> IF(s.score > best.score, s, best))
     ), 1)
     """
@@ -206,14 +207,15 @@ _K = 8  # fingerprint k-gram size
 
 def fingerprints(docs: DataFrame) -> DataFrame:
     """Rolling-hash document fingerprint: min polyhash over all character
-     8-grams (winnowing's global-min degenerate case) + distinct count."""
+     8-grams (winnowing's global-min degenerate case) + distinct count.
+     NULL text hashes as '' (fingerprint 0), as the oracle's does."""
     expr = f"""
     element_at(transform(array(
       CASE WHEN length(text) >= {_K} THEN
         transform(sequence(1, length(text) - {_K} + 1),
                   i -> aggregate(split(substring(text, i, {_K}), ''), 0L,
                                  (acc, c) -> (acc * 31 + ascii(c)) % {MOD}))
-      ELSE array(aggregate(split(text, ''), 0L,
+      ELSE array(aggregate(split(coalesce(text, ''), ''), 0L,
                            (acc, c) -> (acc * 31 + ascii(c)) % {MOD}))
       END), hs -> named_struct(
         'fp', array_min(hs),

@@ -33,6 +33,9 @@ KERNEL_QUERIES = (
     "embedding_neardup_lsh",  # a NULL vec_id
     "ivf_topk",  # an all-zero vector: NULL cosine
     "exact_dedup",  # NULL text keys its own group, apart from ''
+    "fingerprints",  # NULL text hashes as '': fingerprint 0
+    "ngram_jaccard",  # NULL text against '' scores 1.0
+    "lang_id",  # NULL text: the first language, NULL score
 )
 
 

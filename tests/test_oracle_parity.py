@@ -100,10 +100,22 @@ def test_all_queries_match_oracles(spark, con):
 
 
 def test_entry_smoke(spark):
+    """entry() is the extract_spans operator at sf0.001: its rows, and a
+    parquet FileScan feeding the kernel's MapInArrow with no Python
+    data-source scan."""
+    from gpt4ocontentextraction_spark.driver_contract import QUERIES
+
     mod = _entry_module()
     df = mod.entry(spark)
-    assert df.count() > 0
     assert df.columns == ["doc_id", "kind", "text", "media_ref", "offset"]
+    got = sorted(map(tuple, df.collect()))
+    assert got
+    want = QUERIES["extract_spans"](spark, "/root/testdata/sf0.001")
+    assert got == sorted(map(tuple, want.collect()))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "FileScan parquet" in plan, plan
+    assert plan.index("MapInArrow") < plan.index("FileScan parquet"), plan
+    assert "BatchScan" not in plan and "(Python)" not in plan, plan
 
 
 @pytest.mark.parametrize("scale", ["sf0.001", "sf0.01", "sf0.1"])
