@@ -15,13 +15,15 @@ representation — the Arrow wrapper is pure plumbing. This module imports
 no pandas. (pyarrow itself still imports pandas lazily in the worker, on
 the first ``to_numpy`` or ``pa.array`` call of a batch.)
 
-Plan shape (verified in tests/test_plans.py): parquet scan with ReadSchema
-pruned to (doc_id, spans) -> ArrowEvalPython/MapInArrow -> sink. No
-Exchange.
+Plan shape (tests/test_plans.py, test_resume.py): parquet scan with
+ReadSchema pruned to (doc_id, spans) -> MapInArrow -> sink. No Exchange.
+With ``into`` the one MapInArrow also writes (:func:`extract_file`, the
+file job's task body too) and returns metric rows, not spans.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 
 import numpy as np
@@ -51,8 +53,6 @@ _OUT_SCHEMA = pa.schema(
 def _flatten(batch: pa.RecordBatch):
     doc_id = batch.column("doc_id")
     spans = batch.column("spans")
-    if isinstance(spans, pa.ChunkedArray):  # pragma: no cover - defensive
-        spans = spans.combine_chunks()
     n_docs = len(batch)
     counts = pc.list_value_length(spans).to_numpy(zero_copy_only=False)
     counts = np.nan_to_num(counts, nan=0).astype(np.int64)
@@ -137,12 +137,31 @@ def _extract_iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]
         yield _extract_batch(batch)
 
 
-def extract(documents: DataFrame) -> DataFrame:
+def extract_file(batches: Iterator[pa.RecordBatch], path: str) -> dict:
+    """The extraction task body: span-capped kernel -> parquet file at
+    ``path`` (:func:`write_counted`); returns its lineage counts."""
+    from ..sources.snapshots import write_counted
+
+    return write_counted(_extract_iter(batches), path)
+
+
+def extract(documents: DataFrame, into: str | None = None) -> DataFrame:
     """documents(doc_id, spans) -> extracted(doc_id, spans).
+
+    With ``into`` (an uncommitted commit dir) each task writes its
+    output there instead and returns its PART_DDL metric row, for
+    ``SnapshotTable.commit``.
 
     Column-prunes the input before the UDF so parquet ReadSchema stays
     minimal even if callers pass wider rows.
     """
-    return documents.select("doc_id", "spans").mapInArrow(
-        _extract_iter, DOCUMENTS_DDL
+    docs = documents.select("doc_id", "spans")
+    if into is None:
+        return docs.mapInArrow(_extract_iter, DOCUMENTS_DDL)
+    # imported here: workers of the plain path load no writer modules
+    from ..sources.snapshots import PART_DDL, write_partition
+
+    return docs.mapInArrow(
+        functools.partial(write_partition, out_dir=into, write=extract_file),
+        PART_DDL,
     )

@@ -11,7 +11,8 @@ implements the same contract on plain parquet:
   committed); each Spark write task writes its own file with pyarrow
   (:func:`write_counted`: hidden temp + rename) and returns one lineage
   row counted from the batches it wrote, so no Spark job runs after the
-  write
+  write. Every commit path ends in :meth:`SnapshotTable.commit`;
+  :func:`run_resumable_extraction` extracts and writes in one task
 - a commit atomically publishes a new manifest version
   ``{root}/_manifest/v{N}.json`` (write-temp + ``os.link``) listing all
   committed commit dirs — readers resolve the highest version, so a
@@ -31,15 +32,17 @@ commits partial documents (SURVEY.md §7 hard point 3).
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import shutil
 import uuid
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,8 +57,10 @@ METRICS_SCHEMA = pa.schema(
         pa.field("n_media_emitted", pa.int64()),
     ]
 )
-METRICS_DDL = (
-    "run_id string, partition_id int, n_docs bigint, n_spans_out bigint,"
+# A write task's metric row; the driver adds the run id.
+PART_SCHEMA = METRICS_SCHEMA.remove(0)
+PART_DDL = (
+    "partition_id int, n_docs bigint, n_spans_out bigint,"
     " n_tables_built bigint, n_media_emitted bigint"
 )
 
@@ -98,6 +103,19 @@ def write_counted(batches: Iterable[pa.RecordBatch], path: str) -> dict:
             os.unlink(tmp)
         raise
     return counts
+
+
+def write_partition(batches, out_dir: str, write=write_counted):
+    """A commit's mapInArrow task: ``write`` (:func:`write_counted` or
+    operators.extract.extract_file) the batches to
+    ``{out_dir}/part-{partition_id:05d}.parquet``; yield one PART_SCHEMA
+    row, or none for an empty partition (which writes no file)."""
+    pid = TaskContext.get().partitionId()
+    counts = write(batches, os.path.join(out_dir, f"part-{pid:05d}.parquet"))
+    if counts["n_docs"]:
+        yield pa.RecordBatch.from_pylist(
+            [dict(counts, partition_id=pid)], schema=PART_SCHEMA
+        )
 
 
 class SnapshotTable:
@@ -262,50 +280,46 @@ class SnapshotTable:
         pq.write_table(pa.Table.from_pylist(rows, schema=METRICS_SCHEMA), tmp)
         os.rename(tmp, os.path.join(out, "part-00000.parquet"))
 
+    def commit(
+        self,
+        write: Callable[[str], DataFrame],
+        run_id: str | None = None,
+        keep_empty: bool = False,
+    ) -> str | None:
+        """The commit tail every write path shares: collect ``write(out)``,
+        whose tasks write the data files into the uncommitted dir ``out``
+        and return PART_SCHEMA rows (the one Spark job), write the rows
+        with ``write_metrics``, publish the manifest. 0 docs removes
+        ``out`` and returns None, unless ``keep_empty``."""
+        run_id = run_id or uuid.uuid4().hex
+        commit_id = f"c-{run_id}"
+        out = self.prepare_commit_dir(commit_id)
+        rows = [dict(r.asDict(), run_id=run_id) for r in write(out).collect()]
+        n_docs = sum(r["n_docs"] for r in rows)
+        if not n_docs and not keep_empty:
+            shutil.rmtree(out)
+            return None
+        self.write_metrics(commit_id, rows)
+        meta = {"run_id": run_id, "n_docs": n_docs, "n_files": len(rows)}
+        self._publish(commit_id, meta)
+        return commit_id
+
     def append(
         self,
         df: DataFrame,
         spark: SparkSession,
         run_id: str | None = None,
     ) -> str | None:
-        """Write df + per-partition metrics, then atomically commit.
-
-        One Spark job: each write task writes its partition to
-        ``part-{partition_id:05d}.parquet`` in the uncommitted commit dir
-        (:func:`write_counted`) and returns one metric row counted from
-        the batches it wrote, so the metrics describe exactly what was
-        committed; an empty partition writes no file and returns no row.
-        The driver writes the rows (bounded by the partition count) with
-        ``write_metrics`` and publishes the manifest. A commit of 0 docs
-        removes its data dir, publishes nothing and returns None.
-        """
-        run_id = run_id or uuid.uuid4().hex
-        commit_id = f"c-{run_id}"
-        out = self.prepare_commit_dir(commit_id)
-
-        def write_task(batches):
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            counts = write_counted(
-                batches, os.path.join(out, f"part-{pid:05d}.parquet")
-            )
-            if counts["n_docs"]:
-                yield pa.RecordBatch.from_pylist(
-                    [dict(counts, run_id=run_id, partition_id=pid)],
-                    schema=METRICS_SCHEMA,
-                )
-
-        rows = [
-            r.asDict() for r in df.mapInArrow(write_task, METRICS_DDL).collect()
-        ]
-        n_docs = sum(r["n_docs"] for r in rows)
-        if not n_docs:
-            shutil.rmtree(out)
-            return None
-        self.write_metrics(commit_id, rows)
-        self._publish(commit_id, {"run_id": run_id, "n_docs": n_docs})
-        return commit_id
+        """Commit any frame of (doc_id, spans) rows, one file and metric
+        row per partition (:func:`write_partition`). Plain extraction
+        commits use :func:`run_resumable_extraction`, which skips the
+        extra Python stage this costs."""
+        return self.commit(
+            lambda out: df.mapInArrow(
+                functools.partial(write_partition, out_dir=out), PART_DDL
+            ),
+            run_id,
+        )
 
     def metrics(self, spark: SparkSession) -> DataFrame | None:
         dirs = [
@@ -325,9 +339,9 @@ def run_resumable_extraction(
     run_id: str | None = None,
 ) -> str | None:
     """One checkpoint-resumable extraction increment: pending docs ->
-    extract -> atomic append: one Spark job on a fresh table. Returns the
+    extract and write in one Python stage -> atomic commit. Returns the
     commit id (None if up to date)."""
     from ..operators.extract import extract
 
     todo = table.pending(documents, spark)
-    return table.append(extract(todo), spark, run_id=run_id)
+    return table.commit(lambda out: extract(todo, into=out), run_id)

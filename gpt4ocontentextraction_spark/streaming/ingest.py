@@ -3,11 +3,13 @@ reference is batch-per-job, SURVEY.md §2.7; north_rule requires
 checkpoint-resumable BATCH, which sources/snapshots.py provides. This
 module adds the incremental path for continuously-arriving documents).
 
-Design: a file-source stream over the documents table directory; the same
-extraction operator (mapInArrow works unchanged on streaming DataFrames);
-``foreachBatch`` writes each micro-batch through the snapshot table so the
-batch and streaming paths share one sink with exactly-once visibility
-(epoch-id-keyed commit ids make retried micro-batches idempotent).
+Design: a file-source stream over the documents table directory;
+``foreachBatch`` commits each micro-batch of raw documents with the batch
+path's own increment (``run_resumable_extraction``: resume anti-join, then
+extract and write in one Python stage), so the batch and streaming paths
+share one sink with exactly-once visibility (epoch-id-keyed commit ids make
+retried micro-batches idempotent) and a replayed epoch's already-committed
+documents are dropped before they are extracted.
 """
 
 from __future__ import annotations
@@ -16,9 +18,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.extract import extract
 from ..schema import DOCUMENTS_SCHEMA
-from ..sources.snapshots import SnapshotTable
+from ..sources.snapshots import SnapshotTable, run_resumable_extraction
 
 
 def stream_extract(
@@ -34,7 +35,6 @@ def stream_extract(
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(input_dir)
     )
-    extracted = extract(docs)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         # epoch-keyed commit id: an epoch replayed after its commit was
@@ -44,11 +44,10 @@ def stream_extract(
         run_id = f"epoch-{epoch_id}"
         if os.path.join(table.data_dir, f"c-{run_id}") in table.committed_dirs():
             return
-        spark = batch_df.sparkSession
-        table.append(table.pending(batch_df, spark), spark, run_id=run_id)
+        run_resumable_extraction(batch_df.sparkSession, batch_df, table, run_id)
 
     return (
-        extracted.writeStream.foreachBatch(sink)
+        docs.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

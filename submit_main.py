@@ -43,7 +43,10 @@ def main() -> None:
     spark = SparkSession.builder.appName("gpt4o-extract").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    from gpt4ocontentextraction_spark.sources.snapshots import SnapshotTable
+    from gpt4ocontentextraction_spark.sources.snapshots import (
+        SnapshotTable,
+        run_resumable_extraction,
+    )
     from gpt4ocontentextraction_spark.spanify import spanify
 
     docs = spark.read.parquet(args.input)
@@ -51,19 +54,17 @@ def main() -> None:
         docs = spanify(docs)
 
     table = SnapshotTable(args.output)
-    todo = table.pending(docs, spark)
     if args.skew_threshold > 0:
         from gpt4ocontentextraction_spark.operators.skew import (
             extract_with_skew_defusal,
         )
 
-        out = extract_with_skew_defusal(todo, span_threshold=args.skew_threshold)
+        out = extract_with_skew_defusal(
+            table.pending(docs, spark), span_threshold=args.skew_threshold
+        )
+        commit = table.append(out, spark, run_id=args.run_id)
     else:
-        from gpt4ocontentextraction_spark.operators.extract import extract
-
-        out = extract(todo)
-
-    commit = table.append(out, spark, run_id=args.run_id)
+        commit = run_resumable_extraction(spark, docs, table, args.run_id)
     if commit is None:
         print(json.dumps({"status": "up-to-date",
                           "version": table.current_version()}))

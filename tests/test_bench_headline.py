@@ -51,3 +51,5 @@ def test_bench_smoke_prints_json_last():
     assert set(record["queries"]) == {"extract_spans", "page_chunks"}
     assert set(record["queries_warm"]) == {"extract_spans", "page_chunks"}
     assert record["sf"] == "0.001"
+    # the Python worker start is reported apart from the first query
+    assert record["python_warmup_s"] > 0

@@ -212,6 +212,28 @@ def test_composable_commit_runs_one_spark_job(spark, docs_dir, tmp_path):
     assert table.read(spark).count() == docs.count()
 
 
+def test_composable_commit_is_one_python_stage(
+    spark, docs_dir, tmp_path, monkeypatch
+):
+    """The composable commit's executed plan has exactly one MapInArrow:
+    each task extracts and writes in the same Python worker, so no
+    extracted spans go back to the JVM to reach a second write worker."""
+    table = SnapshotTable(str(tmp_path / "out"))
+    docs = spark.read.parquet(docs_dir)
+    collected = []
+    collect = type(docs).collect
+
+    def recording(self):
+        collected.append(self)
+        return collect(self)
+
+    monkeypatch.setattr(type(docs), "collect", recording)
+    assert run_resumable_extraction(spark, docs, table, run_id="p") == "c-p"
+    (df,) = collected
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+
+
 def test_failed_write_attempt_leaves_nothing_visible(spark, docs_dir, tmp_path):
     """A write attempt whose batches raise midway leaves no file behind
     (its temp is hidden, then unlinked); a killed attempt's un-renamed
