@@ -6,7 +6,7 @@ A from-scratch rebuild of the capabilities of liamca/GPT4oContentExtraction
 - input: a table of interleaved text+media documents,
   ``(doc_id: string, spans: array<struct<kind,text,media_ref,offset:int>>)``
 - the core operator is a vectorized, deterministic page->markdown extraction
-  kernel (pure pandas/numpy, wrapped in ``mapInPandas`` over Arrow batches)
+  kernel (pyarrow/numpy, wrapped in ``mapInArrow`` over Arrow batches)
   replacing the reference's GPT-4o vision call
   (reference: docker/main.py:566-611, doc2md_utils.py:180-205)
 - ordered merge, page/markdown chunking, resume anti-join, skew salting,

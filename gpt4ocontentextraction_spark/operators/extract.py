@@ -12,8 +12,9 @@ StructArray (and rebuild it) in C without materializing Python objects;
 pandas would hand us a Series of list-of-dict. The kernel itself
 (operators/extract_arrow.py) is vectorized pyarrow/numpy over the flattened
 representation — the Arrow wrapper is pure plumbing. This module imports
-no pandas. (pyarrow itself still imports pandas lazily in the worker, on
-the first ``to_numpy`` or ``pa.array`` call of a batch.)
+no pandas, but the worker loads it anyway when it imports the kernel:
+``extract_arrow``'s module-level ``_OUT_KIND_POOL = pa.array(...)`` makes
+pyarrow import pandas (ROADMAP direction 2(a)).
 
 Plan shape (tests/test_plans.py, test_resume.py): parquet scan with
 ReadSchema pruned to (doc_id, spans) -> MapInArrow -> sink. No Exchange.

@@ -4,6 +4,13 @@ Scale posture: these configs are what we would ship to a 1000-executor
 cluster (AQE on, skew join on, Arrow on, shuffle partitions sized
 explicitly); in the sandbox they run on local[N] where N is the
 parallelism under test (perfbench/run.py measures local[1] -> local[nproc]).
+
+Python workers fork from ``worker_daemon`` (``spark.python.daemon.module``,
+a plain Spark conf set below), which stops each task from re-reading
+pyspark.zip. On a cluster, set that conf only when the package is on the
+executors' PYTHONPATH when the daemon starts: ``--py-files`` adds the
+package per task, too late for the daemon, and every Python task would
+fail. ``submit_main.py`` therefore does not set it.
 """
 
 from __future__ import annotations
@@ -14,7 +21,8 @@ from pyspark.sql import SparkSession
 
 
 def _export_package_path() -> None:
-    """Make this package importable in Spark's Python workers.
+    """Make this package importable in Spark's Python workers and their
+    daemon (``worker_daemon``).
 
     Local mode forks workers from the driver JVM's environment; on a real
     cluster the same job ships the package via ``spark-submit --py-files``
@@ -60,6 +68,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        .config(
+            "spark.python.daemon.module", "gpt4ocontentextraction_spark.worker_daemon"
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -12,6 +12,14 @@ Reads the documents table (spans shape, or --flat for the flat text shape
 which is spanified first), runs the checkpoint-resumable extraction
 increment (resume anti-join -> kernel -> atomic commit + lineage metrics),
 and prints a one-line JSON summary.
+
+It does not set ``spark.python.daemon.module``, the plain Spark conf with
+which ``get_spark`` routes workers through ``worker_daemon`` (no per-task
+re-read of pyspark.zip). ``--py-files`` adds the package per task, too late
+for the daemon to import it, so with that conf every Python task would
+fail. Pass ``--conf spark.python.daemon.module=
+gpt4ocontentextraction_spark.worker_daemon`` only when the package is on
+the executors' PYTHONPATH when the daemon starts.
 """
 
 from __future__ import annotations

@@ -120,7 +120,9 @@ def test_file_job_on_empty_input_commits_zero_docs(spark, tmp_path):
 
 def test_extraction_modules_import_without_pandas():
     """Extraction workers import these modules, so they import no
-    pandas."""
+    pandas. This does not cover ``extract_arrow`` (imported on first use
+    of the kernel), whose module-level ``pa.array`` does load pandas;
+    ROADMAP direction 2(a) covers that."""
     code = (
         "import sys\n"
         "import gpt4ocontentextraction_spark.operators.extract\n"

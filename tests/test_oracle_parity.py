@@ -31,7 +31,8 @@ def _entry_module():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__",
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "__spark_entry__.py"),
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

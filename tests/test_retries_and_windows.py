@@ -14,11 +14,12 @@ from gpt4ocontentextraction_spark.streaming.windows import (
 )
 
 SF = "/root/testdata/sf0.001"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 _RETRY_SCRIPT = """
 import os, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[2])
 from gpt4ocontentextraction_spark.session import get_spark
 
 marker_dir = sys.argv[1]
@@ -58,7 +59,7 @@ def test_task_retry_recovers_transient_failure(tmp_path):
     marker_dir = tmp_path / "markers"
     marker_dir.mkdir()
     res = subprocess.run(
-        [sys.executable, str(script), str(marker_dir)],
+        [sys.executable, str(script), str(marker_dir), ROOT],
         capture_output=True,
         text=True,
         timeout=300,
