@@ -28,8 +28,8 @@ HEADLINE = (
     "merge_markdown",
     "page_chunks",
     "markdown_chunks",
-    "page_chunks_fused",
-    "markdown_chunks_fused",
+    "page_chunks_variants",
+    "markdown_chunks_variants",
     "markdown_chunks_separator",
     "chunk_dispatch",
     "page_markers",

@@ -330,28 +330,6 @@ def q_page_chunks(spark, sf_dir):
     return page_chunks(extract(spanify(_docs(spark, sf_dir))))
 
 
-@register_extra(
-    "page_chunks_fused",
-    f"WITH {oracles.PAGE_CHUNKS_SQL} SELECT chunk_doc_id, chunk_id,"
-    f" pg_number, file_name, title, content FROM page_chunks",
-)
-def q_page_chunks_fused(spark, sf_dir):
-    """C2 over raw spans: extraction and chunking in one Python stage,
-    same oracle as page_chunks."""
-    return _chunk.page_chunks_fused(spanify(_docs(spark, sf_dir)))
-
-
-@register_extra(
-    "markdown_chunks_fused",
-    f"WITH {oracles.MD_CHUNKS_SQL} SELECT chunk_doc_id, chunk_id,"
-    f" pg_number, file_name, title, content FROM md_chunks",
-)
-def q_markdown_chunks_fused(spark, sf_dir):
-    """C3 over raw spans: extraction and chunking in one Python stage,
-    same oracle as markdown_chunks."""
-    return _chunk.markdown_chunks_fused(spanify(_docs(spark, sf_dir)))
-
-
 @register_extra("window_chunks", _chunk.WINDOW_CHUNKS_SQL)
 def q_window_chunks(spark, sf_dir):
     """Sliding-window chunking (64-word window, 32-word stride) — the
@@ -1593,9 +1571,9 @@ _PAGE_CHUNKS_BASE_SQL = (
 def q_page_chunks_variants(spark, sf_dir):
     """C2 alternate path: chunking fused into the extraction mapInArrow
     pass, tagged and checked against the page_chunks oracle."""
-    return q_page_chunks_fused(spark, sf_dir).withColumn(
-        "variant", F.lit("fused")
-    )
+    return _chunk.page_chunks_fused(
+        spanify(_docs(spark, sf_dir))
+    ).withColumn("variant", F.lit("fused"))
 
 
 _MD_CHUNKS_BASE_SQL = (
@@ -1613,9 +1591,9 @@ def q_markdown_chunks_variants(spark, sf_dir):
     """C3 alternate path: the fused form, tagged and checked against the
     markdown_chunks oracle (separator mode keeps its own gate — its
     recurrence has a different oracle)."""
-    return q_markdown_chunks_fused(spark, sf_dir).withColumn(
-        "variant", F.lit("fused")
-    )
+    return _chunk.markdown_chunks_fused(
+        spanify(_docs(spark, sf_dir))
+    ).withColumn("variant", F.lit("fused"))
 
 
 @register(

@@ -10,7 +10,7 @@ Each mirrors a reference function, rebuilt as JVM-side Spark expressions
 - F5 ``remove_between_pipes``    (docker/main.py:685-692)
 - F6 ``extract_citations``       (docker/main.py:775-779)
 - F7 ``parse_doc_id``            (docker/main.py:960-974 — rsplit('-', 2))
-- F8 ``encode/decode_base64``    (docker/main.py:117-127)
+- F8 ``encode_base64``           (docker/main.py:117-127)
 - F10 token counting             (docker/main.py:32 — here: whitespace and
   BPE-ish regex token counts, see operators/textstats.py)
 """
@@ -81,7 +81,3 @@ def parse_doc_id(c: Column) -> list[Column]:
 
 def encode_base64(c: Column) -> Column:
     return F.base64(c.cast("binary"))
-
-
-def decode_base64(c: Column) -> Column:
-    return F.unbase64(c).cast("string")

@@ -37,9 +37,6 @@ resolved AS (
 )
 """
 
-RESOLVED_SQL = resolved_sql_over(SPANIFY_SQL)
-
-
 # Step 4: boilerplate strip — tagged kinds, blank text, link density > 0.5,
 # then the per-page text-density rule (step 4c): among a page's surviving
 # textual spans, drop those with token count below half the page mean
@@ -91,9 +88,6 @@ kept AS (
 
 def kept_sql_over(input_cte: str) -> str:
     return resolved_sql_over(input_cte) + _KEPT_SUFFIX
-
-
-KEPT_SQL = kept_sql_over(SPANIFY_SQL)
 
 
 # Steps 5-6: table-run islands (gaps-and-islands over the resolved order),

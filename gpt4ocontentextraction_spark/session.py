@@ -10,7 +10,9 @@ a plain Spark conf set below), which stops each task from re-reading
 pyspark.zip. On a cluster, set that conf only when the package is on the
 executors' PYTHONPATH when the daemon starts: ``--py-files`` adds the
 package per task, too late for the daemon, and every Python task would
-fail. ``submit_main.py`` therefore does not set it.
+fail. ``submit_main.py`` therefore does not set it. The daemon runs with
+``PYTHONSAFEPATH=1``, so it imports the package from PYTHONPATH whatever
+the driver's cwd holds.
 """
 
 from __future__ import annotations
@@ -71,6 +73,9 @@ def get_spark(
         .config(
             "spark.python.daemon.module", "gpt4ocontentextraction_spark.worker_daemon"
         )
+        # the daemon starts with `python -m`, which would put the cwd
+        # ahead of PYTHONPATH: a package of the same name there would win
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

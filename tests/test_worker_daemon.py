@@ -1,8 +1,11 @@
 """The worker daemon shim: drops cached zipimporters before each task,
-and get_spark really routes Python workers through it."""
+get_spark really routes Python workers through it, and the daemon
+imports the package from PYTHONPATH whatever the driver's cwd holds."""
 
 from __future__ import annotations
 
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -10,6 +13,8 @@ import zipimport
 import pyarrow as pa
 
 from gpt4ocontentextraction_spark.worker_daemon import without_zipimporters
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _zipimporters():
@@ -69,3 +74,28 @@ def test_get_spark_workers_run_through_the_shim(spark):
     assert [tuple(r) for r in df.collect()] == [
         ("gpt4ocontentextraction_spark.worker_daemon", 0)
     ]
+
+
+def test_daemon_ignores_a_same_named_package_in_the_cwd(tmp_path):
+    """The daemon starts with `python -m`; a decoy package without
+    worker_daemon.py in the driver's cwd must not shadow the real one."""
+    cwd = tmp_path / "cwd"
+    (cwd / "gpt4ocontentextraction_spark").mkdir(parents=True)
+    (cwd / "gpt4ocontentextraction_spark" / "__init__.py").write_text("")
+    script = tmp_path / "identity.py"
+    script.write_text(
+        "from gpt4ocontentextraction_spark.session import get_spark\n"
+        "s = get_spark('decoy_cwd', cores=1)\n"
+        "df = s.range(100).mapInArrow(lambda it: it, 'id long')\n"
+        "print('rows', df.count())\n"
+    )
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, env.get("PYTHONPATH")) if p
+    )
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=cwd, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.splitlines()[-1] == "rows 100"
