@@ -1,7 +1,6 @@
 """Pure-stdlib WAV (RIFF/PCM) audio codec — struct + numpy, no libav.
 
-First REAL audio codec next to the image codecs (png.py, bmp.py,
-gif.py): the reference treats media attachments as opaque blobs keyed by
+The REAL audio codec next to the image codecs (png.py, bmp.py): the reference treats media attachments as opaque blobs keyed by
 media_ref (docker/main.py:209-227 emits page artifacts; test-query.ipynb
 resolves citations back to them) and the multimodal operators here
 promised audio support with an honestly-raised NotImplementedError

@@ -10,11 +10,8 @@ deterministic FAKE codec (documented below) for hermetic tests — but PNG
 (the reference's page-render format) decodes for REAL via the stdlib
 codec in functions/png.py (zlib inflate + scanline unfilter; no PIL):
 ingest/decode_features/resize operate on actual pixels for PNG blobs —
-as do BMP (functions/bmp.py) and GIF (functions/gif.py, stdlib LZW);
-animated GIF is a real multi-frame container, so frame sampling too
-runs on decoded pixels. Only codecs that genuinely need external
-libraries (JPEG/audio/video containers) remain stubbed in
-_decode_real. Everything Spark-side is real and tested: the binary
+as do BMP (functions/bmp.py); WAV (functions/wav.py) decodes as audio.
+Every other container raises NotImplementedError in _decode_real. Everything Spark-side is real and tested: the binary
 column plumbing, schemas, batch shapes, UDF signatures, and the
 media_ref join from extracted `media` spans to this table (Q4 citation
 resolution, docker/main.py:825-847).
@@ -182,8 +179,6 @@ def decode_features(media: DataFrame) -> DataFrame:
                 if not _is_fake_blob(blob):
                     dec = _decode_real(blob)
                     px = dec["pixels"]
-                    if "frames" in dec:  # stats over ALL decoded frames
-                        px = np.stack(dec["frames"])
                     rows.append(
                         (
                             ref,
@@ -237,10 +232,7 @@ def resize(media: DataFrame, new_width: int, new_height: int) -> DataFrame:
         media = media.filter(F.col("media_kind") != "audio")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.avi import encode_avi_mjpeg, is_avi
         from ..functions.bmp import encode_bmp, is_bmp
-        from ..functions.gif import encode_gif, is_gif
-        from ..functions.jpeg import encode_jpeg, is_jpeg
         from ..functions.png import encode_png, nearest_resize
 
         for pdf in batches:
@@ -249,34 +241,10 @@ def resize(media: DataFrame, new_width: int, new_height: int) -> DataFrame:
                 blob = bytes(blob)
                 if not _is_fake_blob(blob):
                     dec = _decode_real(blob)
-                    # keep the source container: BMP stays BMP, JPEG
-                    # stays JPEG, GIF stays GIF, MJPEG-AVI stays AVI
-                    # (every frame resized), else PNG
-                    if is_avi(blob):
-                        out.append(
-                            encode_avi_mjpeg(
-                                [
-                                    nearest_resize(f, new_width, new_height)
-                                    for f in dec["frames"]
-                                ]
-                            )
-                        )
-                        continue
-                    if is_gif(blob):
-                        out.append(
-                            encode_gif(
-                                [
-                                    nearest_resize(f, new_width, new_height)
-                                    for f in dec["frames"]
-                                ]
-                            )
-                        )
-                        continue
+                    # keep the source container: BMP stays BMP, else PNG
                     px = nearest_resize(dec["pixels"], new_width, new_height)
                     if is_bmp(blob):
                         out.append(encode_bmp(px))
-                    elif is_jpeg(blob):
-                        out.append(encode_jpeg(px))
                     else:
                         out.append(encode_png(px))
                     continue
@@ -302,11 +270,11 @@ def resize(media: DataFrame, new_width: int, new_height: int) -> DataFrame:
 
 
 def sample_frames(media: DataFrame, every_k: int = 2) -> DataFrame:
-    """Explode video payloads into every-k-th frame rows. Real
-    multi-frame containers (animated GIF) decode for real and each
-    sampled frame is re-emitted as a standalone PNG (the reference's
-    per-page image shape, docker/main.py:209-227); fake-codec payloads
-    keep the synthetic fixed-size-frame slicing."""
+    """Explode video payloads into every-k-th frame rows. A real-codec
+    blob decodes for real and each sampled frame is re-emitted as a
+    standalone PNG (the reference's per-page image shape,
+    docker/main.py:209-227); fake-codec payloads keep the synthetic
+    fixed-size-frame slicing."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..functions.png import encode_png
@@ -319,7 +287,7 @@ def sample_frames(media: DataFrame, every_k: int = 2) -> DataFrame:
                 blob = bytes(blob)
                 if not _is_fake_blob(blob):
                     dec = _decode_real(blob)
-                    real = dec.get("frames", [dec["pixels"]])
+                    real = [dec["pixels"]]
                     for f in range(0, len(real), every_k):
                         refs.append(ref)
                         fnos.append(f)
@@ -481,40 +449,16 @@ def _decode_real(blob: bytes) -> dict:
     {kind, mime, width, height, n_frames, pixels} where pixels is a
     (H, W, C) uint8 array.
 
-    GIF (functions/gif.py, stdlib LZW) is the real MULTI-FRAME
-    container: animated GIFs decode to a frame list (returned under
-    "frames", pixels = frame 0) and row as kind "video", so frame
-    sampling runs on actual pixels. WAV (functions/wav.py, stdlib
-    RIFF/PCM) is the real AUDIO codec: kind "audio", samples decoded
-    for real, MEDIA_SCHEMA's width/height slots carrying
-    channels/sample-rate. JPEG (functions/jpeg.py, stdlib baseline
-    Huffman-DCT) decodes for real too, incl. 4:2:0/4:2:2 and restart
-    intervals. Only compressed audio/video CONTAINERS (MP3/MP4/AVI...)
-    still raise NotImplementedError — callers must ROUTE the returned
-    dict when decode succeeds, not assume this raises (the r3 ADVICE
-    fall-through)."""
-    from ..functions.avi import decode_avi, is_avi
+    BMP (functions/bmp.py) decodes to pixels the same way. WAV
+    (functions/wav.py, stdlib RIFF/PCM) is the real AUDIO codec: kind
+    "audio", samples decoded for real, MEDIA_SCHEMA's width/height
+    slots carrying channels/sample-rate. Every other container
+    (JPEG/GIF/MP3/MP4/AVI...) raises NotImplementedError — callers must
+    ROUTE the returned dict when decode succeeds, not assume this
+    raises."""
     from ..functions.bmp import decode_bmp, is_bmp
-    from ..functions.gif import decode_gif, is_gif
-    from ..functions.jpeg import decode_jpeg, is_jpeg
     from ..functions.png import decode_png, is_png
     from ..functions.wav import decode_wav, is_wav
-
-    if is_avi(blob):
-        # MJPEG-in-AVI: the REAL video container (functions/avi.py —
-        # RIFF walk + per-frame JPEG decode); non-MJPEG codecs raise
-        # inside decode_avi
-        frames = decode_avi(blob)
-        h, w, _c = frames[0].shape
-        return {
-            "kind": "video",
-            "mime": "video/x-msvideo",
-            "width": int(w),
-            "height": int(h),
-            "n_frames": len(frames),
-            "pixels": frames[0],
-            "frames": frames,
-        }
 
     if is_wav(blob):
         dec = decode_wav(blob)
@@ -535,18 +479,6 @@ def _decode_real(blob: bytes) -> dict:
             "pixels": q.reshape(-1).view(np.uint8),
             "samples": s,
             "rate": dec["rate"],
-        }
-    if is_gif(blob):
-        frames = decode_gif(blob)
-        h, w, _c = frames[0].shape
-        return {
-            "kind": "video" if len(frames) > 1 else "image",
-            "mime": "image/gif",
-            "width": int(w),
-            "height": int(h),
-            "n_frames": len(frames),
-            "pixels": frames[0],
-            "frames": frames,
         }
     if is_png(blob):
         px = decode_png(blob)
@@ -570,23 +502,9 @@ def _decode_real(blob: bytes) -> dict:
             "n_frames": 1,
             "pixels": px,
         }
-    if is_jpeg(blob):
-        px = decode_jpeg(blob)
-        if px.ndim == 2:  # grayscale -> uniform (H, W, C) pixel shape
-            px = px[:, :, None]
-        h, w, _c = px.shape
-        return {
-            "kind": "image",
-            "mime": "image/jpeg",
-            "width": int(w),
-            "height": int(h),
-            "n_frames": 1,
-            "pixels": px,
-        }
     raise NotImplementedError(
-        "only PNG, BMP, GIF, JPEG and WAV real-codec decode is "
-        "implemented (stdlib); compressed audio/video containers need "
-        "libav-class codecs, not present in this environment"
+        "only PNG, BMP and WAV real-codec decode is implemented "
+        "(stdlib); other containers need codecs not present here"
     )
 
 

@@ -6,8 +6,10 @@ jar, so every entry point degrades to plain parquet + the local
 SnapshotTable (sources/snapshots.py) while keeping the same call shape —
 swap `ICEBERG=True` semantics in by adding the jar + catalog conf.
 
-Also covers the reference's index DDL (S8, delete+create,
-doc2md_utils.py:231-262) as CREATE OR REPLACE TABLE.
+Also covers the reference's scan/DDL surface:
+- S2/S3 directory scans -> binaryFile reader with recursiveFileLookup
+- S8 index DDL (delete+create, doc2md_utils.py:231-262) ->
+  CREATE OR REPLACE TABLE
 """
 
 from __future__ import annotations
@@ -30,6 +32,20 @@ def read_documents(spark: SparkSession, location: str) -> DataFrame:
     if "/" not in location and iceberg_available(spark):
         return spark.read.format("iceberg").load(location)
     return spark.read.parquet(location)
+
+
+def scan_binary_dir(
+    spark: SparkSession, path: str, recursive: bool = True, glob: str = "*"
+) -> DataFrame:
+    """S2/S3: directory scan as a DataFrame of (path, length, content)
+    (reference walks the FS with os.walk, docker/main.py:233-247)."""
+    return (
+        spark.read.format("binaryFile")
+        .option("recursiveFileLookup", str(recursive).lower())
+        .option("pathGlobFilter", glob)
+        .load(path)
+        .select("path", "length", "content")
+    )
 
 
 def create_or_replace_table(

@@ -86,8 +86,8 @@ def test_citation_resolution_join(extracted, media):
 
 def test_real_decode_compressed_containers_still_stubbed():
     """Compressed audio/video containers genuinely need libav-class
-    codecs the container lacks — those still raise; PNG/BMP/GIF/JPEG/
-    WAV decode for real (their own test modules)."""
+    codecs the container lacks — those still raise; PNG/BMP/WAV decode
+    for real (PNG/BMP here, WAV in test_wav)."""
     with pytest.raises(NotImplementedError):
         mm._decode_real(b"\x00\x00\x00\x18ftypmp42 not decodable")
 

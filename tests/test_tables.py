@@ -1,7 +1,9 @@
-"""sources/tables.py: DDL (S8), Iceberg-gated reader fallback, JSONL
-round trip."""
+"""sources/tables.py: binaryFile directory scans (S2/S3), DDL (S8),
+Iceberg-gated reader fallback."""
 
 from __future__ import annotations
+
+import os
 
 from gpt4ocontentextraction_spark.sources import tables as tb
 
@@ -13,6 +15,25 @@ def test_iceberg_not_available_here(spark):
 def test_read_documents_parquet_fallback(spark):
     df = tb.read_documents(spark, "/root/testdata/sf0.001/documents.parquet")
     assert df.count() == 500
+
+
+def test_scan_binary_dir_recursive(spark, tmp_path):
+    (tmp_path / "sub").mkdir()
+    (tmp_path / "a.bin").write_bytes(b"hello")
+    (tmp_path / "sub" / "b.bin").write_bytes(b"world!")
+    (tmp_path / "skip.txt").write_text("no")
+
+    rows = tb.scan_binary_dir(
+        spark, str(tmp_path), recursive=True, glob="*.bin"
+    ).collect()
+    got = {os.path.basename(r["path"]): bytes(r["content"]) for r in rows}
+    assert got == {"a.bin": b"hello", "b.bin": b"world!"}
+    assert all(r["length"] == len(bytes(r["content"])) for r in rows)
+
+    flat = tb.scan_binary_dir(
+        spark, str(tmp_path), recursive=False, glob="*.bin"
+    ).collect()
+    assert {os.path.basename(r["path"]) for r in flat} == {"a.bin"}
 
 
 def test_create_or_replace_table_ddl(spark, tmp_path):

@@ -1,7 +1,7 @@
 """Real WAV (RIFF/PCM) audio codec + the audio media operators.
 
 functions/wav.py is the first REAL audio codec (stdlib struct + numpy,
-no libav) next to png/bmp/gif; operators/multimodal.py routes WAV blobs
+no libav) next to png/bmp; operators/multimodal.py routes WAV blobs
 as media_kind 'audio' and adds audio_features / audio_resample /
 audio_clips (the audio analogs of decode_features / resize /
 sample_frames). Reference analog: media attachments as opaque blobs
